@@ -267,7 +267,7 @@ _BENCH_PLAN_EXPECT = {
     ),
     "sequence_packing_stats": lambda p, n: (
         # fully materialized via eager localCheckpoint at build (the
-        # grouped_cumsum large path + tiny per-source aggregate); the
+        # grouped_cumsum + tiny per-source aggregate); the
         # visible plan is exactly one checkpoint scan
         "Scan parquet" not in p and n["Scan"] == 1 and n["Window"] == 0
     ),

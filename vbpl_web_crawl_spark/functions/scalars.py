@@ -127,27 +127,12 @@ def fuzzy_match(a: Column, b: Column, threshold: float = 0.8) -> Column:
     return levenshtein_ratio(a, b) >= F.lit(threshold)
 
 
-# --- F17: >=400-char name overflow rule (app/service/vbpl.py:334-336) ---
-
-
-def name_overflow(name: Column, max_len: int = 400) -> Column:
-    """Names at/over the column limit are demoted to content (ref stores
-    String(400) names; longer text means the 'name' was actually body)."""
-    return F.when(F.length(name) >= max_len, F.lit(None).cast("string")).otherwise(name)
-
-
 # --- F16: literal (non-regex) replace — watermark strip and the
 # '[' -> '\n[' pre-split normalization (app/service/anle.py:223,253) ---
 
 
 def literal_replace(c: Column, find: str, replace: str) -> Column:
     return F.replace(c, F.lit(find), F.lit(replace))
-
-
-def strip_watermark(text: Column, watermark: str) -> Column:
-    """Remove every literal occurrence of the portal watermark string
-    from extracted text (anle.py:223)."""
-    return literal_replace(text, watermark, "")
 
 
 # --- J7: doc-map link resolution with title-search fallback
@@ -173,25 +158,11 @@ def resolve_docmap_link(url: Column) -> Column:
     return F.when(~is_docmap, url).otherwise(F.coalesce(direct, search, url))
 
 
-# --- F19: datetime -> unix ts (app/model/base.py:27-35) ---
-
-
-def to_unix_ts(ts: Column) -> Column:
-    return F.unix_timestamp(ts)
-
-
 # --- P5: soft-delete predicate (app/model/base.py:76,89,135) ---
 
 
 def not_deleted(deleted_at: Column) -> Column:
     return deleted_at.isNull()
-
-
-# --- P7: null/empty guard (app/service/vbpl.py:476,895) ---
-
-
-def null_or_blank(c: Column) -> Column:
-    return c.isNull() | (F.trim(c) == F.lit(""))
 
 
 # --- A3/A4: deterministic string-concat aggregation helpers

@@ -32,10 +32,6 @@ def token_count_bpe_ish(text: Column) -> Column:
     return F.size(F.regexp_extract_all(text, F.lit(f"({_BPE_ISH})"), 1)).cast("int")
 
 
-def char_count(text: Column) -> Column:
-    return F.length(text).cast("long")
-
-
 def punct_ratio(text: Column) -> Column:
     """Fraction of non-alnum, non-space chars."""
     n = F.length(text)

@@ -147,12 +147,12 @@ def q_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # "boundary doc" when its tokens straddle a sequence boundary (the
 # attention-masking / doc-bleed case packing-aware trainers care
 # about). The running token offset uses operators/sequence.py's
-# grouped_cumsum LARGE path — range-partitioned distributed sort +
+# grouped_cumsum — range-partitioned distributed sort +
 # per-(partition, group) partial sums + driver prefix + Arrow-batch
-# local cumsum — NOT Window.partitionBy(source), whose one-task-per-
+# segmented cumsum — NOT Window.partitionBy(source), whose one-task-per-
 # group shape serializes a dominant source at 100 TB. The driver gate
 # therefore certifies the scalable machinery itself, and a pytest pins
-# the large path to the window formulation exactly.
+# it to the window formulation exactly.
 # ---------------------------------------------------------------------------
 
 _CTX = 512  # tokens per packed training sequence
@@ -346,7 +346,7 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # same hash-order trick as stratified_sample_by_lang) and taken until
 # the stream's one-epoch token budget min(draws, T_s) is filled; the
 # straddling document is included. The running token total comes from
-# operators/sequence.py::grouped_cumsum's range-partitioned LARGE path
+# operators/sequence.py::grouped_cumsum's range-partitioned path
 # — not Window.partitionBy(stream), whose one-task-per-group shape
 # serializes a dominant stream at 100 TB. Only (ids, token counts,
 # 32-char keys) move through the cumsum shuffle; document bodies are

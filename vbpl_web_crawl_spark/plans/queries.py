@@ -15,6 +15,7 @@ join), verified at small SF.
 
 from __future__ import annotations
 
+import importlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -634,59 +635,32 @@ def q_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def get_queries() -> dict[str, QueryFn]:
-    # import side-effect registrations from the sibling modules
-    from vbpl_web_crawl_spark.plans import (  # noqa: F401
-        analytics_queries,
-        extra_queries,
-        modern_queries,
-        pipeline_queries,
-        pipeline_queries2,
-        pipeline_queries3,
-        pipeline_queries4,
-        pipeline_queries5,
-        pipeline_queries6,
-        pipeline_queries7,
-        pipeline_queries8,
-        pipeline_queries9,
-        pipeline_queries10,
-        pipeline_queries11,
-        pipeline_queries12,
-        pipeline_queries13,
-        pipeline_queries14,
-        pipeline_queries15,
-        profiling_queries,
-        tpch_queries,
-        tpch_queries2,
-    )
+# sibling modules whose import registers their queries; the import
+# order is the registration order (and so the order of QUERIES/ORACLES)
+_MODULES = (
+    "analytics_queries",
+    "extra_queries",
+    "modern_queries",
+    "pipeline_queries",
+    *(f"pipeline_queries{i}" for i in range(2, 16)),
+    "profiling_queries",
+    "tpch_queries",
+    "tpch_queries2",
+)
 
+
+def _load_modules() -> None:
+    for m in _MODULES:
+        importlib.import_module(f"vbpl_web_crawl_spark.plans.{m}")
+
+
+def get_queries() -> dict[str, QueryFn]:
+    _load_modules()
     return dict(QUERIES)
 
 
 def get_oracles() -> dict[str, str]:
-    from vbpl_web_crawl_spark.plans import (  # noqa: F401
-        analytics_queries,
-        extra_queries,
-        modern_queries,
-        pipeline_queries,
-        pipeline_queries2,
-        pipeline_queries3,
-        pipeline_queries4,
-        pipeline_queries5,
-        pipeline_queries6,
-        pipeline_queries7,
-        pipeline_queries8,
-        pipeline_queries9,
-        pipeline_queries10,
-        pipeline_queries11,
-        pipeline_queries12,
-        pipeline_queries13,
-        pipeline_queries14,
-        pipeline_queries15,
-        profiling_queries,
-        tpch_queries,
-        tpch_queries2,
-    )
+    _load_modules()
 
     out: dict[str, str] = {}
     for name, sql in ORACLES.items():

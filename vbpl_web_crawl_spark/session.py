@@ -78,10 +78,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def stop_spark() -> None:
-    """Stop the active session (used between scaling-bench runs)."""
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

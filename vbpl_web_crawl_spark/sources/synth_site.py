@@ -142,10 +142,6 @@ def docmap_url(doc_class: str, doc_id: int, with_id: bool) -> str:
     return f"https://{HOST_MAIN}/docmap/{doc_class}?t=v{doc_id}"
 
 
-def search_url(doc_class: str, title: str) -> str:
-    return f"https://{HOST_MAIN}/search/{doc_class}?q={title}"
-
-
 def doc_id_for(cfg: SiteConfig, doc_class: str, page: int, pos: int) -> int:
     """Doc ids overlap across pages ~10% of the time (cross-page dedup):
     every 10th slot re-links a doc from the previous page."""
