@@ -22,7 +22,10 @@ Each round = one deterministic BSP superstep:
                  anti-join vs seen -> assign discovery_seq in canonical
                  order -> union into next round's frontier.
   6. CHECKPOINT— write all state tables under round=K dir, then flip the
-                 manifest pointer (atomic resume point).
+                 manifest pointer (atomic resume point). The logs derived
+                 from the fetch alone (visit_log, documents, doc_lines)
+                 are submitted right after step 3 and written while
+                 steps 4-5 run; the commit waits for them.
 
 Determinism: no wall clock anywhere in the dataflow (metrics record
 real elapsed time but never feed back into scheduling), so a killed and
@@ -44,9 +47,11 @@ import os
 import re
 import time
 from collections.abc import Iterator
+from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -106,6 +111,22 @@ FETCH_SCHEMA = T.StructType(
     ]
 )
 
+# declared schemas of the log tables, in the column order the engine
+# writes them; reads add the r=K partition column. Reading with a declared
+# schema skips the job Spark otherwise runs to infer it from file footers.
+LOG_SCHEMAS = {
+    "visit_log": "visit_seq long, round int, url string, url_hash long, host string, "
+    "depth int, doc_type string, retry_count int, status int",
+    "documents": "image_id string, bytes binary, w int, h int, fmt string, "
+    "caption string, phash long, src_url string, visit_seq long",
+    "metrics": "round int, host string, partition int, pages_fetched long, failures long, "
+    "first_visit_seq long, last_visit_seq long, first_fetch_ts double, "
+    "last_fetch_ts double, new_urls long, wall_ms long",
+    "enqueue_log": "url string, url_hash long, round int",
+    "doc_lines": "doc_id string, line_no int, line string",
+    "seen_adds": "url_hash long, partition_id int",
+}
+
 DOC_TYPE_RANK = SITE.DOC_TYPE_RANK
 
 
@@ -163,6 +184,7 @@ class CrawlEngine:
         self.cfg = cfg
         self.ckpt_dir = ckpt_dir
         self.robots = P.robots_df(spark, cfg.robots)
+        self.budgets = P.budgets_df(self.robots, cfg.round_window_s)
         self._budget_by_host = {
             host: P.host_budget(r.get("crawl_delay", P.DEFAULT_CRAWL_DELAY), cfg.round_window_s)
             for host, r in cfg.robots.items()
@@ -172,6 +194,10 @@ class CrawlEngine:
         # (politeness cost) vs engine work — artifact-vs-artifact bench
         # comparisons stop being confounded by the pacing config/window
         self._sleep_acc = spark.sparkContext.accumulator(0.0)
+        # the round's fetch-log writes, submitted before the expand phase
+        # and drained before the manifest commit (_drain_early_writes)
+        self._early_pool: ThreadPoolExecutor | None = None
+        self._early_writes: list[Future] = []
 
     # ---------------- state I/O ----------------
     #
@@ -215,6 +241,33 @@ class CrawlEngine:
     def read_manifest(self) -> dict | None:
         return fsio.read_manifest(self.spark, self.ckpt_dir)
 
+    def _write(self, df: DataFrame, path: str) -> None:
+        df.coalesce(max(self.cfg.checkpoint_files, 1)).write.mode("overwrite").parquet(path)
+
+    def _submit(self, pool: ThreadPoolExecutor, fn, *args) -> Future:
+        # the task runs with a copy of the caller's local properties, job
+        # group included; each task gets its own copy, so one write's SQL
+        # execution id never leaks into another
+        return pool.submit(inheritable_thread_target(self.spark)(fn), *args)
+
+    def _submit_early_writes(self, rnd: int, deltas: dict[str, DataFrame]) -> None:
+        self._early_pool = ThreadPoolExecutor(
+            max_workers=len(deltas), thread_name_prefix="crawl-early-write"
+        )
+        self._early_writes = [
+            self._submit(self._early_pool, self._write, df, self._log_dir(name, rnd))
+            for name, df in deltas.items()
+        ]
+
+    def _drain_early_writes(self) -> list[Future]:
+        """Wait for the early writes and join their threads; returns the
+        futures so the caller can re-raise a failed write."""
+        if self._early_pool is not None:
+            self._early_pool.shutdown(wait=True)
+        self._early_pool = None
+        futs, self._early_writes = self._early_writes, []
+        return futs
+
     def _write_state(
         self,
         rnd: int,
@@ -225,35 +278,32 @@ class CrawlEngine:
         rdir = self._live_dir(rnd)
         tmp = rdir + ".tmp"
         fsio.delete(self.spark, tmp)
-        nfiles = max(self.cfg.checkpoint_files, 1)
         # the tables are independent outputs — submit their write jobs
         # concurrently (Spark schedules jobs from multiple threads); the
         # wall cost per round is max(write) instead of sum(write)
-        from concurrent.futures import ThreadPoolExecutor
-
-        def write_live(item):
-            name, df = item
-            df.coalesce(nfiles).write.mode("overwrite").parquet(os.path.join(tmp, name))
-
-        def write_delta(item):
-            name, df = item
-            df.coalesce(nfiles).write.mode("overwrite").parquet(self._log_dir(name, rnd))
-
         t_ckpt = time.time()
         # ONE pool, one barrier: delta writes overlap the live writes
         # (they land in independent per-round dirs; the manifest commit
         # below is the only visibility point, so a crash mid-write still
         # leaves readers on the previous round either way). The live
-        # rename waits only on the live futures.
+        # rename waits only on the live futures; the commit also waits on
+        # the fetch-log writes _run_round submitted before its expand
+        # phase. Every write job keeps the caller's job group (_submit).
         n_jobs = len(live) + len(deltas)
         with ThreadPoolExecutor(max_workers=max(n_jobs, 1)) as pool:
-            live_futs = [pool.submit(write_live, it) for it in live.items()]
-            delta_futs = [pool.submit(write_delta, it) for it in deltas.items()]
+            live_futs = [
+                self._submit(pool, self._write, df, os.path.join(tmp, name))
+                for name, df in live.items()
+            ]
+            delta_futs = [
+                self._submit(pool, self._write, df, self._log_dir(name, rnd))
+                for name, df in deltas.items()
+            ]
             for fut in live_futs:
                 fut.result()
             fsio.delete(self.spark, rdir)  # stale dir from a crashed attempt
             fsio.rename(self.spark, tmp, rdir)
-            for fut in delta_futs:
+            for fut in delta_futs + self._drain_early_writes():
                 fut.result()
         decomp = counters.get("decomp")
         if decomp is not None:
@@ -297,8 +347,9 @@ class CrawlEngine:
 
     def _read_live(self, rnd: int) -> dict[str, DataFrame]:
         rdir = self._live_dir(rnd)
+        schemas = {"frontier": FRONTIER_SCHEMA, "sketches": SEEN.SKETCH_SCHEMA}
         return {
-            name: self.spark.read.parquet(os.path.join(rdir, name))
+            name: self.spark.read.schema(schemas[name]).parquet(os.path.join(rdir, name))
             for name in self.LIVE_TABLES
         }
 
@@ -308,7 +359,8 @@ class CrawlEngine:
         filter)."""
         base = os.path.join(self.ckpt_dir, "log", name)
         return (
-            self.spark.read.option("basePath", base)
+            self.spark.read.schema(LOG_SCHEMAS[name] + ", r int")
+            .option("basePath", base)
             .parquet(base)
             .filter((F.col("r") <= upto_round) & (F.col("r") > after_round))
             .drop("r")
@@ -322,14 +374,14 @@ class CrawlEngine:
         parts = []
         if base_round >= 0:
             parts.append(
-                self.spark.read.parquet(
+                self.spark.read.schema(SEEN.SEEN_SCHEMA).parquet(
                     os.path.join(self._live_dir(base_round), "seen_base")
                 )
             )
         if upto_round > base_round:
             parts.append(self.read_log("seen_adds", upto_round, after_round=base_round))
         if not parts:
-            return self.spark.createDataFrame([], "url_hash long, partition_id int")
+            return SEEN.empty_seen(self.spark)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -344,7 +396,11 @@ class CrawlEngine:
             else SITE.seed_urls(self.cfg.site)
         )
         rows = [(u, dt, i) for i, (u, dt) in enumerate(seeds)]
-        df = self.spark.createDataFrame(rows, "url string, doc_type string, seed_pos long")
+        # from pandas, so the seed table plans as a LocalTableScan
+        df = self.spark.createDataFrame(
+            pd.DataFrame(rows, columns=["url", "doc_type", "seed_pos"]),
+            "url string, doc_type string, seed_pos long",
+        )
         return (
             df.withColumn("url", canonicalize_url(F.col("url")))
             .withColumn("url_hash", F.xxhash64(F.col("url")))
@@ -501,10 +557,9 @@ class CrawlEngine:
             # measured 26s -> ~12s on the bench-shape replay's pre-round
             # wall (the dominant outside-round term in the decomposition)
             frontier = self.seed_frontier().persist()
-            empty_seen = self.spark.createDataFrame([], "url_hash long, partition_id int")
             _, sketches = SEEN.add_to_seen(
                 frontier,
-                empty_seen,
+                SEEN.empty_seen(self.spark),
                 SEEN.empty_sketches(
                     self.spark,
                     self.cfg.n_seen_partitions,
@@ -535,10 +590,16 @@ class CrawlEngine:
             manifest = {"round": 0, **counters}
 
         rnd = manifest["round"]
-        while rnd < self.cfg.max_rounds and manifest.get("pending", 1) > 0:
-            state = self._read_live(rnd)
-            rnd += 1
-            manifest = self._run_round(rnd, state, manifest)
+        try:
+            while rnd < self.cfg.max_rounds and manifest.get("pending", 1) > 0:
+                state = self._read_live(rnd)
+                rnd += 1
+                manifest = self._run_round(rnd, state, manifest)
+        finally:
+            # a round that raised may still have fetch-log writes in
+            # flight; no writer may outlive run() and race a resumed run
+            # writing the same r=K dirs (their errors yield to the raise)
+            self._drain_early_writes()
         return manifest
 
     def _run_round(self, rnd: int, state: dict[str, DataFrame], manifest: dict) -> dict:
@@ -561,13 +622,12 @@ class CrawlEngine:
         # robots is per-host metadata — broadcast-scale at any corpus
         # size). max_budget is config-derived: one scalar for the
         # WindowGroupLimit literal, never a data-dependent aggregate.
-        budgets = P.budgets_df(self.robots, cfg.round_window_s)
         max_budget = max(self._budget_by_host.values(), default=1)
         prio = Window.partitionBy("host").orderBy("depth", "doc_type_rank", "discovery_seq")
         ranked = (
             frontier.withColumn("host_rank", F.row_number().over(prio))
             .filter(F.col("host_rank") <= F.lit(max_budget))  # WindowGroupLimit
-            .join(F.broadcast(budgets), "host", "left")
+            .join(F.broadcast(self.budgets), "host", "left")
         )
         scheduled = ranked.filter(
             F.col("host_rank") <= F.coalesce(F.col("budget"), F.lit(1))
@@ -644,6 +704,11 @@ class CrawlEngine:
                 F.posexplode("fulltext").alias("line_no", "line"),
             )
         )
+        # these three logs depend on the fetch alone: write them while the
+        # latency-bound expand phase runs (the commit drains them)
+        self._submit_early_writes(
+            rnd, {"visit_log": visit_rows, "documents": new_docs, "doc_lines": doc_lines}
+        )
 
         # 4. RETRY — delete failed hashes from the exact table so the
         # re-admission gate passes; the cuckoo delete is folded into the
@@ -675,32 +740,29 @@ class CrawlEngine:
         # 5. EXPAND — links in canonical discovery order. Doc-map hrefs
         # resolve inline (J7): ItemID -> direct doc URL, title-only ->
         # portal-search URL (the secondary index), one Catalyst coalesce
+        # depth is the parent row's depth + 1, carried next to visit_seq
+        # (visit_seq is unique per fetched row, so this equals joining the
+        # parent back by visit_seq, without the self-join)
         links = (
             fetched.filter(F.col("status") == 200)
-            .select("visit_seq", F.posexplode_outer("links").alias("pos", "link"))
+            .select("visit_seq", "depth", F.posexplode_outer("links").alias("pos", "link"))
             .filter(F.col("link").isNotNull())
             .select(
                 canonicalize_url(resolve_docmap_link(F.col("link.l_url"))).alias("url"),
                 F.col("link.l_doc_type").alias("doc_type"),
                 F.col("visit_seq").alias("parent_visit_seq"),
                 F.col("link.in_page_pos").alias("in_page_pos"),
+                (F.col("depth") + 1).cast("int").alias("depth"),
             )
             .withColumn("url_hash", F.xxhash64(F.col("url")))
             .withColumn("host", url_host(F.col("url")))
-        )
-        # parent depth +1; join depth from scheduled
-        parent_depth = fetched.select(
-            F.col("visit_seq").alias("parent_visit_seq"), F.col("depth").alias("p_depth")
-        )
-        links = links.join(parent_depth, "parent_visit_seq").withColumn(
-            "depth", (F.col("p_depth") + 1).cast("int")
         )
 
         # robots disallow filter (never enqueued, never seen)
         links = (
             links.join(F.broadcast(self.robots), "host", "left")
             .filter(~F.coalesce(P.is_disallowed(F.col("url"), F.col("disallow")), F.lit(False)))
-            .drop("crawl_delay", "disallow", "p_depth")
+            .drop("crawl_delay", "disallow")
             .withColumn("doc_type_rank", self._rank_col(F.col("doc_type")))
             .withColumn("retry_count", F.lit(0))
             .withColumn("is_new", F.lit(1))
@@ -816,13 +878,10 @@ class CrawlEngine:
             "sketches": sketches,
         }
         deltas = {
-            "visit_log": visit_rows,
-            "documents": new_docs,
             "metrics": round_metrics,
             "enqueue_log": admitted_final.filter(F.col("retry_count") == 0).select(
                 "url", "url_hash", F.lit(rnd).alias("round")
             ),
-            "doc_lines": doc_lines,
         }
         if compact:
             # fold base ∪ deltas ∪ this round's adds into a fresh base:

@@ -19,6 +19,7 @@ concurrency (hot hosts get a salt column so one host's rows spread over
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -83,11 +84,14 @@ def parse_robots_txt(text: str, agent: str = "*") -> dict:
 
 
 def robots_df(spark: SparkSession, robots: dict[str, dict]) -> DataFrame:
+    """The robots table as a local relation: built from pandas (Arrow),
+    it plans as ``LocalTableScan``; a Python list would scan as a pickled
+    RDD and re-run Python tasks in every query that broadcasts it."""
     rows = [
         (host, float(r.get("crawl_delay", DEFAULT_CRAWL_DELAY)), list(r.get("disallow", ())))
         for host, r in robots.items()
     ]
-    return spark.createDataFrame(rows, ROBOTS_SCHEMA)
+    return spark.createDataFrame(pd.DataFrame(rows, columns=ROBOTS_SCHEMA.names), ROBOTS_SCHEMA)
 
 
 def host_budget(crawl_delay: float, round_window_s: float) -> int:

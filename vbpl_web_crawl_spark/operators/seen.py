@@ -32,8 +32,16 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from vbpl_web_crawl_spark.operators.sketches import BloomFilter, CuckooFilter
+
+SEEN_SCHEMA = T.StructType(
+    [
+        T.StructField("url_hash", T.LongType(), True),
+        T.StructField("partition_id", T.IntegerType(), True),
+    ]
+)
 
 SKETCH_SCHEMA = T.StructType(
     [
@@ -48,6 +56,14 @@ def partition_of(url_hash_col, n_partitions: int):
     return F.pmod(url_hash_col, F.lit(n_partitions)).cast("int")
 
 
+def empty_seen(spark: SparkSession) -> DataFrame:
+    """The seen table with no rows, as a local relation. Driver-built
+    tables go through Arrow so they plan as ``LocalTableScan``: a Python
+    list (or an empty pandas frame, which skips Arrow) scans as a pickled
+    RDD and re-runs Python tasks in every query that reads it."""
+    return spark.createDataFrame(to_arrow_schema(SEEN_SCHEMA).empty_table())
+
+
 def empty_sketches(
     spark: SparkSession, n_partitions: int, bloom_bits: int = 1 << 20, cuckoo_buckets: int = 1 << 14
 ) -> DataFrame:
@@ -59,7 +75,8 @@ def empty_sketches(
         )
         for p in range(n_partitions)
     ]
-    return spark.createDataFrame(rows, SKETCH_SCHEMA)
+    # a local relation, like empty_seen
+    return spark.createDataFrame(pd.DataFrame(rows, columns=SKETCH_SCHEMA.names), SKETCH_SCHEMA)
 
 
 def _load(sk_pdf: pd.DataFrame) -> tuple[BloomFilter, CuckooFilter]:
