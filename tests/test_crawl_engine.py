@@ -153,8 +153,8 @@ def test_crawled_fulltext_sectionizes(crawl, spark):
 def test_seen_checkpoint_is_delta_not_full_rewrite(crawl):
     """north_rule scale fix: per-round seen-set checkpoint I/O must be
     O(new URLs), not O(total seen) — no full seen table in any live dir
-    between compactions, and each round's seen_adds delta has exactly
-    the rows admitted that round."""
+    between compactions, and the seen set grows each round by exactly
+    that round's enqueue_log delta, which holds the round's new admits."""
     import os
 
     eng, manifest, oracle = crawl
@@ -165,35 +165,28 @@ def test_seen_checkpoint_is_delta_not_full_rewrite(crawl):
         assert not os.path.exists(os.path.join(state_root, name, "seen_urls"))
         if r % eng.cfg.seen_compact_every != 0 or r == 0:
             assert not os.path.exists(os.path.join(state_root, name, "seen_base")), r
-    # delta rows per round == new enqueues + retry re-admissions
+    assert not os.path.exists(os.path.join(eng.ckpt_dir, "log", "seen_adds"))
     spark = eng.spark
-    adds_dir = os.path.join(eng.ckpt_dir, "log", "seen_adds")
-    vl = eng.final_state()["visit_log"]
-    # a fetch that fails in round r (below the retry cap) is re-admitted
-    # in round r's own expand step, so it lands in round r's delta
-    refails_by_round = {
-        r["round"]: r["n"]
-        for r in vl.filter(
-            (F.col("status") >= 500) & (F.col("retry_count") < eng.cfg.max_retries)
-        )
-        .groupBy("round")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
+    enq_dir = os.path.join(eng.ckpt_dir, "log", "enqueue_log")
+    delta_rows = {
+        int(name.split("=")[1]): spark.read.parquet(os.path.join(enq_dir, name)).count()
+        for name in os.listdir(enq_dir)
     }
-    enq_by_round = {
+    assert sorted(delta_rows) == list(range(rnd + 1))
+    new_by_round = {
         r["round"]: r["n"]
-        for r in eng.final_state()["enqueue_log"]
-        .groupBy("round")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
+        for r in eng.final_state()["metrics"].groupBy("round").agg(F.max("new_urls").alias("n")).collect()
     }
-    for name in os.listdir(adds_dir):
-        r = int(name.split("=")[1])
-        n_delta = spark.read.parquet(os.path.join(adds_dir, name)).count()
-        if r == 0:
-            continue  # seeds
-        expected = enq_by_round.get(r, 0) + refails_by_round.get(r, 0)
-        assert n_delta == expected, (r, n_delta, expected)
+
+    def n_seen(upto):
+        return eng.read_seen(upto, -1).dropDuplicates(["url_hash"]).count()
+
+    prev = n_seen(0)
+    assert prev == delta_rows[0]  # seeds
+    for r in range(1, rnd + 1):
+        cur = n_seen(r)
+        assert cur - prev == delta_rows[r] == new_by_round.get(r, 0), r
+        prev = cur
 
 
 def test_docmap_title_search_fallback(spark, tmp_path_factory):
@@ -240,8 +233,8 @@ def test_docmap_title_search_fallback(spark, tmp_path_factory):
 
 def test_compaction_and_gc_preserve_state(spark, tmp_path_factory):
     """Aggressive compaction (every 2 rounds) + GC: the final seen set,
-    visit order and resume behavior are unchanged; folded seen_adds
-    deltas are removed; only one seen_base survives."""
+    visit order and resume behavior are unchanged; only one seen_base
+    survives."""
     import os
 
     cfg = CrawlConfig(**{**CFG.__dict__, "seen_compact_every": 2, "keep_live_rounds": 1})
@@ -255,12 +248,8 @@ def test_compaction_and_gc_preserve_state(spark, tmp_path_factory):
     order = [r.url for r in state["visit_log"].orderBy("visit_seq").select("url").collect()]
     assert order == oracle.visit_order
     assert state["sketches"].count() == cfg.n_seen_partitions
-    # GC: deltas at or before the base round are folded away
     base_round = manifest["seen_base_round"]
     assert base_round >= 0, "compaction must have happened"
-    adds_dir = os.path.join(ckpt, "log", "seen_adds")
-    for name in os.listdir(adds_dir):
-        assert int(name.split("=")[1]) > base_round, name
     # exactly one live seen_base remains
     state_root = os.path.join(ckpt, "state")
     bases = [
@@ -420,3 +409,18 @@ def test_metrics_recorded(crawl):
     assert m.count() > 0
     total_fetched = m.agg(F.sum("pages_fetched")).collect()[0][0]
     assert total_fetched == len(oracle.visit_order)
+
+
+@pytest.mark.parametrize("n_resume", [8, 2])
+def test_resume_refuses_changed_seen_partition_count(spark, tmp_path_factory, n_resume):
+    """The checkpointed sketches have one row per seen partition of the
+    count they were built with. Resuming under another count must raise
+    before any round runs, not crawl on with a wrong seen set."""
+    import dataclasses
+
+    ckpt = str(tmp_path_factory.mktemp("ckpt_nparts"))
+    CrawlEngine(spark, dataclasses.replace(CFG, max_rounds=1), ckpt).run(resume=False)
+    eng = CrawlEngine(spark, dataclasses.replace(CFG, n_seen_partitions=n_resume), ckpt)
+    with pytest.raises(ValueError, match="n_seen_partitions=4"):
+        eng.run(resume=True)
+    assert eng.read_manifest()["round"] == 1

@@ -1,5 +1,9 @@
-"""robots.txt text parsing -> engine rule dicts (T8 ingestion path)."""
+"""robots.txt text parsing -> engine rule dicts (T8 ingestion path),
+and the one politeness-budget formula every budget reader shares."""
 
+import pytest
+
+from vbpl_web_crawl_spark.crawl.engine import CrawlConfig, CrawlEngine
 from vbpl_web_crawl_spark.crawl.politeness import (
     DEFAULT_CRAWL_DELAY,
     host_budget,
@@ -50,3 +54,26 @@ def test_empty_disallow_means_allow_all():
 def test_parsed_rules_feed_budget():
     r = parse_robots_txt(ROBOTS)
     assert host_budget(r["crawl_delay"], 60.0) == 20
+
+
+# W // d and floor(W / d) disagree on (60, 0.1), (30, 0.2), (120, 0.4)
+# and (3600, 0.9); the rest of the grid are integral or plain cases
+WINDOWS = (1.0, 10.0, 30.0, 60.0, 120.0, 3600.0)
+DELAYS = (0.1, 0.2, 0.25, 0.3, 0.4, 0.9, 1.0, 3.0, 5.0)
+
+
+@pytest.mark.parametrize("window", WINDOWS)
+def test_engine_budget_table_equals_host_budget(spark, tmp_path, window):
+    """The schedule cut (the engine's budget table), the group-limit
+    literal (_budget_by_host) and the oracle (host_budget) must agree."""
+    robots = {f"h{i}.example": {"crawl_delay": d} for i, d in enumerate(DELAYS)}
+    eng = CrawlEngine(spark, CrawlConfig(robots=robots, round_window_s=window), str(tmp_path))
+    want = {h: host_budget(r["crawl_delay"], window) for h, r in robots.items()}
+    assert {r.host: r.budget for r in eng.budgets.collect()} == want
+    assert eng._budget_by_host == want
+
+
+def test_fractional_delay_budget_is_the_rounded_quotient():
+    assert host_budget(0.1, 60.0) == 600
+    assert host_budget(0.9, 3600.0) == 4000
+    assert host_budget(7.0, 3.0) == 1

@@ -34,12 +34,13 @@ def test_orphan_delta_excluded_and_resume_clean(spark, tmp_path):
     assert eng.read_log("visit_log", committed).count() == n_visits
     assert eng.final_state()["visit_log"].count() == n_visits
 
-    # same isolation for the seen set's delta stream: an uncommitted
-    # seen_adds delta must not leak into the seen set
+    # same isolation for the seen set, which is read from the
+    # enqueue_log deltas: an uncommitted one must not leak into it
     n_seen = eng.final_state()["seen_urls"].count()
     spark.createDataFrame(
-        [(999_999_999, 3)], "url_hash long, partition_id int"
-    ).write.parquet(eng._log_dir("seen_adds", committed + 7))
+        [("https://orphan.example/doc/1", 999_999_999, committed + 7)],
+        "url string, url_hash long, round int",
+    ).write.parquet(eng._log_dir("enqueue_log", committed + 7))
     assert eng.final_state()["seen_urls"].count() == n_seen
 
     # resume from the same checkpoint: frontier is drained, nothing runs,

@@ -124,7 +124,6 @@ LOG_SCHEMAS = {
     "last_fetch_ts double, new_urls long, wall_ms long",
     "enqueue_log": "url string, url_hash long, round int",
     "doc_lines": "doc_id string, line_no int, line string",
-    "seen_adds": "url_hash long, partition_id int",
 }
 
 DOC_TYPE_RANK = SITE.DOC_TYPE_RANK
@@ -153,8 +152,9 @@ class CrawlConfig:
     # files per checkpointed table: 1 at test scale; set to the cluster's
     # task parallelism at 10^10 scale so snapshot writes stay parallel
     checkpoint_files: int = 1
-    # fold seen_adds deltas into a full seen_base every K rounds; between
-    # compactions each round writes only its O(new URLs) delta
+    # fold the seen set into a full seen_base every K rounds; between
+    # compactions it is seen_base plus the rounds' O(new URLs)
+    # enqueue_log deltas
     seen_compact_every: int = 8
     # live dirs (frontier/sketches) older than this many rounds are GC'd
     # after each commit (the seen_base round is always retained)
@@ -183,12 +183,14 @@ class CrawlEngine:
         self.spark = spark
         self.cfg = cfg
         self.ckpt_dir = ckpt_dir
-        self.robots = P.robots_df(spark, cfg.robots)
-        self.budgets = P.budgets_df(self.robots, cfg.round_window_s)
-        self._budget_by_host = {
-            host: P.host_budget(r.get("crawl_delay", P.DEFAULT_CRAWL_DELAY), cfg.round_window_s)
-            for host, r in cfg.robots.items()
-        }
+        rules = P.robots_frame(cfg.robots, cfg.round_window_s)
+        # from pandas (Arrow), so the robots table plans as a
+        # LocalTableScan: a Python list would scan as a pickled RDD and
+        # re-run Python tasks in every query that broadcasts it
+        self.robots = spark.createDataFrame(rules, P.ROBOTS_SCHEMA)
+        self.budgets = self.robots.select("host", "budget")
+        self._budget_by_host = dict(zip(rules["host"], rules["budget"].tolist()))
+        self._delay_by_host = dict(zip(rules["host"], rules["crawl_delay"].tolist()))
         # pacing-sleep meter: the fetch UDF adds every token wait here, so
         # each round's manifest records how much of its wall was sleep
         # (politeness cost) vs engine work — artifact-vs-artifact bench
@@ -206,22 +208,18 @@ class CrawlEngine:
     #   ckpt/state/round=K/seen_base          full seen set, ONLY on
     #                                         compaction rounds (every
     #                                         cfg.seen_compact_every)
-    #   ckpt/log/{visit_log,documents,metrics,enqueue_log,doc_lines,
-    #             seen_adds}/r=K/                           deltas
+    #   ckpt/log/{visit_log,documents,metrics,enqueue_log,
+    #             doc_lines}/r=K/                           deltas
     #   ckpt/manifest-<round>.json            commit pointers (max wins)
     #
     # Append-only tables are written ONCE per round (their delta) and
     # never rewritten — at 10^10 URLs rewriting a cumulative table every
     # round would be O(rounds^2) I/O. That includes the biggest table in
-    # the system, the seen set: each round checkpoints only its O(new
-    # URLs) seen_adds delta; readers take seen_base ∪ deltas>base_round
-    # (bucketed on partition_id = pmod(url_hash), so at cluster scale the
-    # exact anti-join prunes buckets), and every K rounds the union is
-    # folded into a fresh seen_base (Iceberg MERGE compaction shape).
-    # Retry deletes need no delta: a failed fetch's hash is deleted and
-    # re-admitted within the SAME round (the retry always survives the
-    # in-round dedup and the unseen gate), so at every round boundary the
-    # adds stream alone determines the seen set.
+    # the system, the seen set, which has no delta table of its own: a
+    # round's new seen hashes are its enqueue_log delta, so readers take
+    # seen_base ∪ enqueue_log deltas after base_round (read_seen says why
+    # that is exact), and every K rounds the union is folded into a
+    # fresh seen_base (Iceberg MERGE compaction shape).
     #
     # The manifest commit is a tmp-write + rename to a FRESH name
     # (fsio.commit_manifest — atomic on HDFS/local, object-store
@@ -324,10 +322,10 @@ class CrawlEngine:
         self._gc(rnd, counters.get("seen_base_round", -1))
 
     def _gc(self, rnd: int, base_round: int) -> None:
-        """Drop state no reader needs: live dirs older than
-        keep_live_rounds (except the seen_base round) and seen_adds
-        deltas already folded into the base. Log tables other than
-        seen_adds are the permanent record and are never touched."""
+        """Drop live dirs older than keep_live_rounds, except the
+        seen_base round. Log tables are the permanent record and are
+        never touched: the enqueue_log deltas folded into seen_base stay
+        as the crawl's admission log."""
         keep_from = rnd - max(self.cfg.keep_live_rounds, 1)
         state_dir = os.path.join(self.ckpt_dir, "state")
         # full-match the round suffix: a leftover "round=K.tmp" from a
@@ -339,11 +337,6 @@ class CrawlEngine:
                 r = int(m.group(1))
                 if r < keep_from and r != base_round:
                     fsio.delete(self.spark, os.path.join(state_dir, name))
-        adds_dir = os.path.join(self.ckpt_dir, "log", "seen_adds")
-        for name in fsio.listdir(self.spark, adds_dir):
-            m = re.fullmatch(r"r=(\d+)", name)
-            if m and int(m.group(1)) <= base_round:
-                fsio.delete(self.spark, os.path.join(adds_dir, name))
 
     def _read_live(self, rnd: int) -> dict[str, DataFrame]:
         rdir = self._live_dir(rnd)
@@ -368,9 +361,22 @@ class CrawlEngine:
 
     def read_seen(self, upto_round: int, base_round: int) -> DataFrame:
         """The seen set as of ``upto_round``: seen_base (if compacted) ∪
-        seen_adds deltas after it. NOT deduplicated — retry re-adds can
-        duplicate a hash, which is harmless for the anti-join/bloom
-        consumers; callers needing unique rows dropDuplicates."""
+        the ``url_hash`` of the enqueue_log deltas after it. NOT
+        deduplicated; callers needing unique rows dropDuplicates.
+
+        Why the enqueue_log alone is the seen set at every commit:
+        - A round's enqueue_log delta is ``admitted_final`` with
+          ``retry_count == 0``, i.e. exactly its new admits (round 0: the
+          seeds). The other admitted rows are retries.
+        - A retry is a row fetched this round, so its hash was admitted,
+          and logged, in an earlier round.
+        - The in-round delete of a failed hash only touches the in-memory
+          seen set handed to ``filter_unseen``. Every failed row below the
+          retry cap is re-admitted in the same round: retries win the
+          in-round dedup and pass the exact gate, since their hash was
+          just deleted. So no hash leaves the seen set across a commit.
+        Hence persisted seen = ∪ enqueue_log hashes up to the commit,
+        and compaction folds this same union into seen_base."""
         parts = []
         if base_round >= 0:
             parts.append(
@@ -379,7 +385,9 @@ class CrawlEngine:
                 )
             )
         if upto_round > base_round:
-            parts.append(self.read_log("seen_adds", upto_round, after_round=base_round))
+            parts.append(
+                self.read_log("enqueue_log", upto_round, after_round=base_round).select("url_hash")
+            )
         if not parts:
             return SEEN.empty_seen(self.spark)
         out = parts[0]
@@ -426,10 +434,7 @@ class CrawlEngine:
         in_cols = [f.name for f in FRONTIER_SCHEMA.fields] + ["visit_seq"]
         pace = self.cfg.pace_fetches
         sleep_acc = self._sleep_acc  # closure must not capture self
-        delay_by_host = {
-            host: float(r.get("crawl_delay", P.DEFAULT_CRAWL_DELAY))
-            for host, r in self.cfg.robots.items()
-        }
+        delay_by_host = self._delay_by_host
 
         def fetch_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             from collections import deque
@@ -540,6 +545,14 @@ class CrawlEngine:
     def run(self, resume: bool = True) -> dict:
         """Run rounds until the frontier drains; returns final manifest."""
         manifest = self.read_manifest() if resume else None
+        if manifest is not None and manifest.get("n_seen_partitions") != self.cfg.n_seen_partitions:
+            # the checkpointed sketches hold one row per partition of the
+            # recorded count; probing them under another count reads
+            # missing partitions as empty and re-admits seen URLs
+            raise ValueError(
+                f"checkpoint at {self.ckpt_dir} has n_seen_partitions="
+                f"{manifest.get('n_seen_partitions')}, config has {self.cfg.n_seen_partitions}"
+            )
         if manifest is None:
             # Fresh run: wipe any prior checkpoint under this dir. With
             # resume=False over an existing checkpoint, stale
@@ -551,9 +564,9 @@ class CrawlEngine:
             # first commit, so wiping is safe there too.
             if fsio.exists(self.spark, self.ckpt_dir):
                 fsio.delete(self.spark, self.ckpt_dir)
-            # persisted: the seed frontier has FOUR consumers below (the
-            # sketch cogroup, the live write, two delta writes) and its
-            # lineage re-derives the synthetic seed list each time —
+            # persisted: the seed frontier has four consumers below (the
+            # sketch cogroup, the live write, the delta write, the count)
+            # and its lineage re-derives the synthetic seed list each time —
             # measured 26s -> ~12s on the bench-shape replay's pre-round
             # wall (the dominant outside-round term in the decomposition)
             frontier = self.seed_frontier().persist()
@@ -571,12 +584,6 @@ class CrawlEngine:
             live = {"frontier": frontier, "sketches": sketches}
             deltas = {
                 "enqueue_log": frontier.select("url", "url_hash", F.lit(0).alias("round")),
-                "seen_adds": frontier.select(
-                    "url_hash",
-                    SEEN.partition_of(
-                        F.col("url_hash"), self.cfg.n_seen_partitions
-                    ).alias("partition_id"),
-                ),
             }
             n_seeds = frontier.count()
             counters = {
@@ -584,6 +591,7 @@ class CrawlEngine:
                 "total_visits": 0,
                 "pending": n_seeds,
                 "seen_base_round": -1,
+                "n_seen_partitions": self.cfg.n_seen_partitions,
             }
             self._write_state(0, live, deltas, counters)
             frontier.unpersist()
@@ -618,10 +626,10 @@ class CrawlEngine:
         # shuffle, so the dominant host (vbpl.vn) never funnels its whole
         # frontier through one task — only <= k rows per upstream
         # partition reach the final rank.
-        # budgets derive from the robots TABLE (distributed expression;
-        # robots is per-host metadata — broadcast-scale at any corpus
-        # size). max_budget is config-derived: one scalar for the
-        # WindowGroupLimit literal, never a data-dependent aggregate.
+        # budgets are the robots table's budget column (robots is
+        # per-host metadata — broadcast-scale at any corpus size).
+        # max_budget is the largest of the same budgets: one scalar for
+        # the WindowGroupLimit literal, never a data-dependent aggregate.
         max_budget = max(self._budget_by_host.values(), default=1)
         prio = Window.partitionBy("host").orderBy("depth", "doc_type_rank", "discovery_seq")
         ranked = (
@@ -762,7 +770,6 @@ class CrawlEngine:
         links = (
             links.join(F.broadcast(self.robots), "host", "left")
             .filter(~F.coalesce(P.is_disallowed(F.col("url"), F.col("disallow")), F.lit(False)))
-            .drop("crawl_delay", "disallow")
             .withColumn("doc_type_rank", self._rank_col(F.col("doc_type")))
             .withColumn("retry_count", F.lit(0))
             .withColumn("is_new", F.lit(1))
@@ -825,12 +832,6 @@ class CrawlEngine:
                 sketches,
                 cfg.n_seen_partitions,
             )
-        new_hashes = admitted_final.select(
-            "url_hash",
-            SEEN.partition_of(F.col("url_hash"), cfg.n_seen_partitions).alias(
-                "partition_id"
-            ),
-        )
 
         new_frontier = deferred.select([f.name for f in FRONTIER_SCHEMA.fields]).unionByName(
             admitted_final
@@ -871,6 +872,7 @@ class CrawlEngine:
             "total_visits": total_visits + n_scheduled,
             "pending": manifest.get("pending", n_scheduled) - n_scheduled + n_admitted,
             "seen_base_round": rnd if compact else base_round,
+            "n_seen_partitions": cfg.n_seen_partitions,
             "decomp": decomp,
         }
         live = {
@@ -884,14 +886,11 @@ class CrawlEngine:
             ),
         }
         if compact:
-            # fold base ∪ deltas ∪ this round's adds into a fresh base:
+            # fold base ∪ deltas ∪ this round's admits into a fresh base:
             # the only O(total seen) write, amortized over K rounds
-            live["seen_base"] = seen_urls.unionByName(new_hashes).dropDuplicates(
-                ["url_hash"]
-            )
-        else:
-            # steady state: the seen set's checkpoint cost is O(new URLs)
-            deltas["seen_adds"] = new_hashes
+            live["seen_base"] = seen_urls.unionByName(
+                admitted_final.select("url_hash")
+            ).dropDuplicates(["url_hash"])
         self._write_state(rnd, live, deltas, counters)
         fetched.unpersist()
         admitted_final.unpersist()

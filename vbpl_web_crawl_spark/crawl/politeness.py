@@ -19,8 +19,9 @@ concurrency (hot hosts get a salt column so one host's rows spread over
 
 from __future__ import annotations
 
+import math
+
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -29,6 +30,7 @@ ROBOTS_SCHEMA = T.StructType(
         T.StructField("host", T.StringType(), False),
         T.StructField("crawl_delay", T.DoubleType(), False),
         T.StructField("disallow", T.ArrayType(T.StringType()), False),
+        T.StructField("budget", T.IntegerType(), False),
     ]
 )
 
@@ -83,34 +85,24 @@ def parse_robots_txt(text: str, agent: str = "*") -> dict:
     }
 
 
-def robots_df(spark: SparkSession, robots: dict[str, dict]) -> DataFrame:
-    """The robots table as a local relation: built from pandas (Arrow),
-    it plans as ``LocalTableScan``; a Python list would scan as a pickled
-    RDD and re-run Python tasks in every query that broadcasts it."""
-    rows = [
-        (host, float(r.get("crawl_delay", DEFAULT_CRAWL_DELAY)), list(r.get("disallow", ())))
-        for host, r in robots.items()
-    ]
-    return spark.createDataFrame(pd.DataFrame(rows, columns=ROBOTS_SCHEMA.names), ROBOTS_SCHEMA)
-
-
 def host_budget(crawl_delay: float, round_window_s: float) -> int:
-    return max(1, int(round_window_s // max(crawl_delay, 1e-9)))
+    # floor of the rounded quotient W / d, as Spark's floor(W / d) has
+    # it: W // d floors the exact quotient of the binary floats, so
+    # 60 // 0.1 is 599 while 60 / 0.1 rounds to 600.0
+    return max(1, math.floor(round_window_s / max(crawl_delay, 1e-9)))
 
 
-def budgets_df(robots: DataFrame, round_window_s: float) -> DataFrame:
-    """(host, budget) from the robots table — the distributed form of
-    host_budget (hosts NOT in the table get budget 1 via the engine's
-    coalesce, the conservative-politeness default the oracle shares)."""
-    return robots.select(
-        "host",
-        F.greatest(
-            F.floor(F.lit(round_window_s) / F.greatest(F.col("crawl_delay"), F.lit(1e-9))),
-            F.lit(1),
-        )
-        .cast("int")
-        .alias("budget"),
-    )
+def robots_frame(robots: dict[str, dict], round_window_s: float) -> pd.DataFrame:
+    """The robots rules normalized once: one row per host with its crawl
+    delay, disallow prefixes and round budget (``ROBOTS_SCHEMA``). Every
+    reader of the rules (the robots table, the schedule cut, fetch
+    pacing) takes them from this frame. Hosts not in it get budget 1,
+    the conservative-politeness default the oracle shares."""
+    rows = []
+    for host, r in robots.items():
+        delay = float(r.get("crawl_delay", DEFAULT_CRAWL_DELAY))
+        rows.append((host, delay, list(r.get("disallow", ())), host_budget(delay, round_window_s)))
+    return pd.DataFrame(rows, columns=ROBOTS_SCHEMA.names)
 
 
 def is_disallowed(url_col, disallow_col):

@@ -2,9 +2,9 @@
 key table, exposed as DataFrame operators (SURVEY.md §2.1 J3, §7 step 4).
 
 Data model (FIXTURES.md §3):
-- ``seen_urls(url_hash: long, partition_id: int)`` — exact ground truth.
+- ``seen_urls(url_hash: long)`` — exact ground truth.
 - ``sketches(partition_id: int, bloom_bytes: binary, cuckoo_bytes:
-  binary)`` — one row per hash-bucket partition.
+  binary)`` — exactly one row per hash-bucket partition.
 
 The reference probes MySQL per row before every insert
 (/root/reference/app/service/vbpl.py:147-148 and 7 sibling sites); at
@@ -17,12 +17,15 @@ The reference probes MySQL per row before every insert
    join. At a steady-state crawl most candidate URLs are already seen,
    so the exact join shrinks to the FP rate of the filter — and the
    final seen set stays exactly equal to the reference's.
-2. ``add`` / ``delete``: the same cogroup shape updates sketch bytes;
-   delete (cuckoo) is the retry-requeue primitive.
+2. ``add_to_seen`` / ``apply_sketch_delta``: one update kernel on the
+   same cogroup shape rewrites the sketch bytes; its cuckoo delete is
+   the retry-requeue primitive.
 
-Partitioning: partition_id = pmod(url_hash, n_partitions) — the same
-bucketing used by the exact table, so both joins are co-partitioned and
-AQE can split skewed buckets.
+Partitioning: partition_id = pmod(url_hash, n_partitions). Only this
+module derives it; callers pass ``url_hash`` and the partition count.
+A partition with keys but no sketch row makes ``_load`` raise instead
+of probing as empty. Sketches built for a larger count than the caller
+passes are not caught here; the crawl engine refuses that on resume.
 """
 
 from __future__ import annotations
@@ -39,7 +42,6 @@ from vbpl_web_crawl_spark.operators.sketches import BloomFilter, CuckooFilter
 SEEN_SCHEMA = T.StructType(
     [
         T.StructField("url_hash", T.LongType(), True),
-        T.StructField("partition_id", T.IntegerType(), True),
     ]
 )
 
@@ -79,11 +81,14 @@ def empty_sketches(
     return spark.createDataFrame(pd.DataFrame(rows, columns=SKETCH_SCHEMA.names), SKETCH_SCHEMA)
 
 
-def _load(sk_pdf: pd.DataFrame) -> tuple[BloomFilter, CuckooFilter]:
+def _load(key, sk_pdf: pd.DataFrame) -> tuple[BloomFilter, CuckooFilter]:
     # exactly one sketch row per partition is an invariant (enforced by
-    # the cogroup update shape); reading iloc[0] of >1 rows would be
-    # nondeterministic, so fail loudly instead
-    assert len(sk_pdf) == 1, f"sketch partition has {len(sk_pdf)} rows, expected 1"
+    # the cogroup update shape). No row means the sketches were built for
+    # another partition count: probing that partition as empty admits
+    # seen URLs again. Reading iloc[0] of >1 rows would be
+    # nondeterministic. Both fail loudly.
+    if len(sk_pdf) != 1:
+        raise ValueError(f"sketch partition {key[0]} has {len(sk_pdf)} rows, expected 1")
     row = sk_pdf.iloc[0]
     return BloomFilter.from_bytes(bytes(row.bloom_bytes)), CuckooFilter.from_bytes(
         bytes(row.cuckoo_bytes)
@@ -113,13 +118,10 @@ def filter_unseen(
     def probe(key, cand_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
         if cand_pdf.empty:
             return pd.DataFrame(columns=col_order)
-        if sk_pdf.empty:
-            cand_pdf = cand_pdf.assign(maybe_seen=False)
-        else:
-            bloom, _ = _load(sk_pdf)
-            cand_pdf = cand_pdf.assign(
-                maybe_seen=bloom.contains(cand_pdf["url_hash"].to_numpy(dtype=np.int64))
-            )
+        bloom, _ = _load(key, sk_pdf)
+        cand_pdf = cand_pdf.assign(
+            maybe_seen=bloom.contains(cand_pdf["url_hash"].to_numpy(dtype=np.int64))
+        )
         return cand_pdf[col_order]
 
     flagged = (
@@ -139,76 +141,28 @@ def filter_unseen(
     return definitely_new.unionByName(confirmed_new).drop("maybe_seen", "partition_id")
 
 
-def add_to_seen(
-    new_hashes: DataFrame,
-    seen_urls: DataFrame,
-    sketches: DataFrame,
-    n_partitions: int,
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (new seen_urls, new sketches) with ``new_hashes``
-    (column ``url_hash``) inserted. Both updates are co-partitioned
-    cogroups — no driver-side collect."""
-    hashes = (
-        new_hashes.select("url_hash")
-        .distinct()
-        .withColumn("partition_id", partition_of(F.col("url_hash"), n_partitions))
-    )
+def _update_sketches(tagged: DataFrame, sketches: DataFrame, n_partitions: int) -> DataFrame:
+    """The one sketch-update kernel: per partition, cuckoo-delete the
+    ``is_del`` rows of ``tagged`` (``url_hash``, ``is_del``), then
+    Bloom+cuckoo-add the rest.
 
-    def update(key, h_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
-        if sk_pdf.empty:
-            bloom, cuckoo = BloomFilter(), CuckooFilter()
-        else:
-            bloom, cuckoo = _load(sk_pdf)
-        keys = h_pdf["url_hash"].to_numpy(dtype=np.int64)
-        bloom.add(keys)
-        cuckoo.add(keys)
-        return pd.DataFrame(
-            {
-                "partition_id": [int(key[0])],
-                "bloom_bytes": [bloom.to_bytes()],
-                "cuckoo_bytes": [cuckoo.to_bytes()],
-            }
-        )
+    The Bloom filter cannot delete: a deleted key may still probe as
+    maybe-seen, and the exact anti-join then overrides it, so
+    re-admission stays correct.
 
-    # the cogroup emits exactly one row per partition present on EITHER
-    # side — a partition with no new keys re-emits its sketch unchanged
-    # (update() with an empty hash frame is a no-op), so no anti-join
-    # union of "untouched" rows: that union double-emitted cold
-    # partitions, growing the checkpointed sketch table every round
-    new_sketches = (
-        hashes.groupBy("partition_id")
-        .cogroup(sketches.groupBy("partition_id"))
-        .applyInPandas(update, SKETCH_SCHEMA)
-    )
-    new_seen = seen_urls.unionByName(
-        hashes.select("url_hash", "partition_id")
-    ).dropDuplicates(["url_hash"])
-    return new_seen, new_sketches
-
-
-def apply_sketch_delta(
-    add_hashes: DataFrame,
-    del_hashes: DataFrame,
-    sketches: DataFrame,
-    n_partitions: int,
-) -> DataFrame:
-    """One cogroup applying a round's deletes (cuckoo) then adds
-    (bloom+cuckoo) to every touched sketch partition. Combining the two
-    passes halves the per-round shuffle count vs separate delete/add."""
-    tagged = del_hashes.select("url_hash", F.lit(1).alias("is_del")).unionByName(
-        add_hashes.select("url_hash", F.lit(0).alias("is_del"))
-    )
+    The cogroup emits exactly one row per partition present on EITHER
+    side: a partition with no keys re-emits its sketch unchanged, so no
+    anti-join union of "untouched" rows (that union double-emitted cold
+    partitions, growing the checkpointed sketch table every round)."""
     tagged = tagged.withColumn("partition_id", partition_of(F.col("url_hash"), n_partitions))
 
     def update(key, h_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
-        if sk_pdf.empty:
-            bloom, cuckoo = BloomFilter(), CuckooFilter()
-        else:
-            bloom, cuckoo = _load(sk_pdf)
-        dels = h_pdf.loc[h_pdf["is_del"] == 1, "url_hash"].to_numpy(dtype=np.int64)
-        adds = h_pdf.loc[h_pdf["is_del"] == 0, "url_hash"].to_numpy(dtype=np.int64)
-        if len(dels):
-            cuckoo.delete(dels)
+        bloom, cuckoo = _load(key, sk_pdf)
+        keys = h_pdf["url_hash"].to_numpy(dtype=np.int64)
+        is_del = h_pdf["is_del"].to_numpy(dtype=bool)
+        if is_del.any():
+            cuckoo.delete(keys[is_del])
+        adds = keys[~is_del]
         if len(adds):
             bloom.add(adds)
             cuckoo.add(adds)
@@ -220,7 +174,6 @@ def apply_sketch_delta(
             }
         )
 
-    # one row per sketch partition, touched or not (see add_to_seen note)
     return (
         tagged.groupBy("partition_id")
         .cogroup(sketches.groupBy("partition_id"))
@@ -228,44 +181,32 @@ def apply_sketch_delta(
     )
 
 
-def delete_from_seen(
-    del_hashes: DataFrame,
+def add_to_seen(
+    new_hashes: DataFrame,
     seen_urls: DataFrame,
     sketches: DataFrame,
     n_partitions: int,
 ) -> tuple[DataFrame, DataFrame]:
-    """Un-mark hashes (retry requeue): cuckoo delete + exact anti-join.
-
-    The Bloom filter cannot delete — after a delete it may report a
-    false positive for the removed key, which the exact anti-join then
-    overrides, so re-admission is still correct (and the cuckoo filter,
-    which *can* delete, is the membership source for retry accounting).
-    """
-    hashes = (
-        del_hashes.select("url_hash")
-        .distinct()
-        .withColumn("partition_id", partition_of(F.col("url_hash"), n_partitions))
+    """Returns (new seen_urls, new sketches) with ``new_hashes``
+    (column ``url_hash``) inserted. No driver-side collect."""
+    hashes = new_hashes.select("url_hash").distinct()
+    new_sketches = _update_sketches(
+        hashes.withColumn("is_del", F.lit(False)), sketches, n_partitions
     )
-
-    def update(key, h_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
-        if sk_pdf.empty:
-            # delete aimed at a partition with no sketch: nothing to emit
-            return pd.DataFrame(columns=[f.name for f in SKETCH_SCHEMA.fields])
-        bloom, cuckoo = _load(sk_pdf)
-        cuckoo.delete(h_pdf["url_hash"].to_numpy(dtype=np.int64))
-        return pd.DataFrame(
-            {
-                "partition_id": [int(key[0])],
-                "bloom_bytes": [bloom.to_bytes()],
-                "cuckoo_bytes": [cuckoo.to_bytes()],
-            }
-        )
-
-    # one row per sketch partition, touched or not (see add_to_seen note)
-    new_sketches = (
-        hashes.groupBy("partition_id")
-        .cogroup(sketches.groupBy("partition_id"))
-        .applyInPandas(update, SKETCH_SCHEMA)
-    )
-    new_seen = seen_urls.join(hashes.select("url_hash"), "url_hash", "left_anti")
+    new_seen = seen_urls.unionByName(hashes).dropDuplicates(["url_hash"])
     return new_seen, new_sketches
+
+
+def apply_sketch_delta(
+    add_hashes: DataFrame,
+    del_hashes: DataFrame,
+    sketches: DataFrame,
+    n_partitions: int,
+) -> DataFrame:
+    """A round's sketch update: deletes (cuckoo, the retry requeue) then
+    adds (Bloom+cuckoo), in one cogroup. The caller removes deleted
+    hashes from the exact table itself (a left-anti join)."""
+    tagged = del_hashes.select("url_hash", F.lit(True).alias("is_del")).unionByName(
+        add_hashes.select("url_hash", F.lit(False).alias("is_del"))
+    )
+    return _update_sketches(tagged, sketches, n_partitions)
