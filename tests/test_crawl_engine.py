@@ -24,7 +24,6 @@ CFG = CrawlConfig(
     max_retries=3,
     n_seen_partitions=4,
     bloom_bits=1 << 16,
-    cuckoo_buckets=1 << 10,
 )
 
 
@@ -260,6 +259,44 @@ def test_compaction_and_gc_preserve_state(spark, tmp_path_factory):
     assert bases == [f"round={base_round}"]
 
 
+def test_sketches_are_bloom_of_enqueue_log(spark, tmp_path_factory):
+    """The checkpointed sketches are a function of the seen set: at every
+    round, each partition's Bloom bytes equal a filter built in one shot
+    from that partition's enqueue_log hashes up to the round. A round
+    Bloom-adds only its enqueue_log delta and skips the update when it
+    admits nothing new; this pins why that is exact (faults force
+    retries, compaction every 2 rounds moves the seen base)."""
+    import os
+    import re
+
+    from vbpl_web_crawl_spark.operators.sketches import BloomFilter
+
+    cfg = CrawlConfig(**{**CFG.__dict__, "seen_compact_every": 2, "keep_live_rounds": 1000})
+    ckpt = str(tmp_path_factory.mktemp("ckpt_sketch_fn"))
+    eng = CrawlEngine(spark, cfg, ckpt)
+    manifest = eng.run()
+    assert eng.final_state()["visit_log"].filter("retry_count > 0").count() > 0
+    n = cfg.n_seen_partitions
+    rounds = sorted(
+        int(m.group(1))
+        for m in (re.fullmatch(r"round=(\d+)", d) for d in os.listdir(os.path.join(ckpt, "state")))
+        if m
+    )
+    assert rounds == list(range(manifest["round"] + 1))
+    for r in rounds:
+        hashes = np.array(
+            [row.url_hash for row in eng.read_log("enqueue_log", r).select("url_hash").collect()],
+            dtype=np.int64,
+        )
+        sk = eng._read_live(r)["sketches"]
+        got = {row.partition_id: bytes(row.bloom_bytes) for row in sk.collect()}
+        assert sorted(got) == list(range(n)), r
+        for p in range(n):
+            want = BloomFilter(cfg.bloom_bits)
+            want.add(hashes[np.mod(hashes, n) == p])  # pmod(url_hash, n)
+            assert got[p] == want.to_bytes(), (r, p)
+
+
 def test_fresh_run_over_stale_checkpoint_wipes_old_state(spark, tmp_path_factory):
     """run(resume=False) over a dir holding a FINISHED crawl's
     checkpoint must not let the old multi-round manifests outrank the
@@ -365,7 +402,6 @@ def test_intra_round_pacing_meters_crawl_delay(spark, tmp_path_factory):
         max_retries=3,
         n_seen_partitions=4,
         bloom_bits=1 << 16,
-        cuckoo_buckets=1 << 10,
         pace_fetches=True,
     )
     ckpt = str(tmp_path_factory.mktemp("ckpt_paced"))

@@ -30,7 +30,6 @@ CFG = CrawlConfig(
     per_host_slots=4,
     fetch_partitions=16,  # > slots: salt still bounds per-host tasks
     bloom_bits=1 << 16,
-    cuckoo_buckets=1 << 10,
 )
 
 

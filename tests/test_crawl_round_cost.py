@@ -28,7 +28,6 @@ CFG = CrawlConfig(
     round_window_s=120.0,
     n_seen_partitions=4,
     bloom_bits=1 << 16,
-    cuckoo_buckets=1 << 10,
     # the crawl takes 4 rounds and round 3 writes a seen_base, so every
     # table the engine reads back is on disk
     seen_compact_every=3,
@@ -72,7 +71,7 @@ def test_driver_tables_plan_as_local_relations(spark, tmp_path):
         "robots": eng.robots,
         "budgets": eng.budgets,
         "seeds": eng.seed_frontier(),
-        "empty_sketches": SEEN.empty_sketches(spark, 4, 1 << 12, 1 << 8),
+        "empty_sketches": SEEN.empty_sketches(spark, 4, 1 << 12),
         "empty_seen": SEEN.empty_seen(spark),
     }
     for name, df in frames.items():

@@ -29,7 +29,7 @@ from vbpl_web_crawl_spark.sources import synth_site as SITE
 spark = get_spark("p3", cpus=3)
 cfg = CrawlConfig(site=SITE.SiteConfig(n_pages=1, docs_per_page=8, related_per_doc=1,
     max_attachments=1, fault_every=5), round_window_s=120.0, n_seen_partitions=4,
-    bloom_bits=1<<16, cuckoo_buckets=1<<10)
+    bloom_bits=1<<16)
 CrawlEngine(spark, cfg, {ckpt!r}).run(resume=False)
 """
     out = subprocess.run(

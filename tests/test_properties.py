@@ -4,7 +4,7 @@ import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from vbpl_web_crawl_spark.operators.sketches import BloomFilter, CuckooFilter
+from vbpl_web_crawl_spark.operators.sketches import BloomFilter
 from vbpl_web_crawl_spark.sources import images as IMG
 
 int64s = st.lists(
@@ -21,19 +21,6 @@ def test_bloom_never_false_negative(keys):
     assert bf.contains(arr).all()
     # serialization preserves membership
     assert BloomFilter.from_bytes(bf.to_bytes()).contains(arr).all()
-
-
-@settings(max_examples=25, deadline=None)
-@given(int64s)
-def test_cuckoo_add_delete_roundtrip(keys):
-    cf = CuckooFilter(1 << 11)
-    arr = np.array(keys, dtype=np.int64)
-    cf.add(arr)
-    assert cf.contains(arr).all()
-    assert cf.delete(arr).all()
-    assert not cf.contains(arr).any()
-    cf.add(arr)  # re-admission after delete (retry semantics)
-    assert cf.contains(arr).all()
 
 
 def test_hot_shingle_df_cap_bounds_candidates(spark):

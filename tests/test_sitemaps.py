@@ -185,7 +185,6 @@ def test_sitemap_seeded_crawl_matches_oracle(spark, tmp_path):
         round_window_s=30.0,
         n_seen_partitions=4,
         bloom_bits=1 << 16,
-        cuckoo_buckets=1 << 10,
         seed_list=seeds,
     )
     eng = CrawlEngine(spark, cfg, str(tmp_path / "ckpt"))

@@ -13,7 +13,6 @@ CFG = CrawlConfig(
     round_window_s=120.0,
     n_seen_partitions=4,
     bloom_bits=1 << 16,
-    cuckoo_buckets=1 << 10,
 )
 
 

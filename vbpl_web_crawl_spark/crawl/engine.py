@@ -13,7 +13,8 @@ Each round = one deterministic BSP superstep:
   3. FETCH     — mapInPandas over host-salted partitions; the synthetic
                  site function replaces the network (tests/FIXTURES §2);
                  attachments materialize image+caption rows.
-  4. RETRY     — failed rows: cuckoo+exact DELETE of their hash, then
+  4. RETRY     — failed rows: exact DELETE of their hash (their Bloom
+                 bits stay set and send them to the exact check), then
                  re-admission through the normal unseen gate with their
                  original discovery_seq (reference backoff semantics,
                  /root/reference/app/service/anle.py:37-57).
@@ -148,7 +149,6 @@ class CrawlConfig:
     # parallelism comes from at production host counts.
     fetch_partitions: int | None = None
     bloom_bits: int = 1 << 20
-    cuckoo_buckets: int = 1 << 14
     # files per checkpointed table: 1 at test scale; set to the cluster's
     # task parallelism at 10^10 scale so snapshot writes stay parallel
     checkpoint_files: int = 1
@@ -376,7 +376,14 @@ class CrawlEngine:
           in-round dedup and pass the exact gate, since their hash was
           just deleted. So no hash leaves the seen set across a commit.
         Hence persisted seen = ∪ enqueue_log hashes up to the commit,
-        and compaction folds this same union into seen_base."""
+        and compaction folds this same union into seen_base.
+
+        The checkpointed sketches are the Bloom filter of this same set,
+        though a round Bloom-adds only its enqueue_log delta (and skips
+        the update when it has no new admits): Bloom OR commutes and is
+        idempotent, so the filter after round r is the filter of every
+        hash added up to r, and a retry's hash was added in the round
+        that first admitted it. Nothing is ever removed from a sketch."""
         parts = []
         if base_round >= 0:
             parts.append(
@@ -570,15 +577,9 @@ class CrawlEngine:
             # measured 26s -> ~12s on the bench-shape replay's pre-round
             # wall (the dominant outside-round term in the decomposition)
             frontier = self.seed_frontier().persist()
-            _, sketches = SEEN.add_to_seen(
+            sketches = SEEN.add_to_seen(
                 frontier,
-                SEEN.empty_seen(self.spark),
-                SEEN.empty_sketches(
-                    self.spark,
-                    self.cfg.n_seen_partitions,
-                    self.cfg.bloom_bits,
-                    self.cfg.cuckoo_buckets,
-                ),
+                SEEN.empty_sketches(self.spark, self.cfg.n_seen_partitions, self.cfg.bloom_bits),
                 self.cfg.n_seen_partitions,
             )
             live = {"frontier": frontier, "sketches": sketches}
@@ -719,8 +720,8 @@ class CrawlEngine:
         )
 
         # 4. RETRY — delete failed hashes from the exact table so the
-        # re-admission gate passes; the cuckoo delete is folded into the
-        # single end-of-round sketch-delta cogroup (apply_sketch_delta)
+        # re-admission gate passes (their Bloom bits stay set, so the
+        # probe sends them to the exact check, which now admits them)
         failed = fetched.filter(
             (F.col("status") >= 500) & (F.col("retry_count") < cfg.max_retries)
         )
@@ -825,13 +826,11 @@ class CrawlEngine:
             [f.name for f in FRONTIER_SCHEMA.fields]
         ).persist()
 
-        if n_admitted > 0 or n_failed > 0:
-            sketches = SEEN.apply_sketch_delta(
-                admitted_final.select("url_hash"),
-                failed.select("url_hash"),
-                sketches,
-                cfg.n_seen_partitions,
-            )
+        # the round's seen delta is its new admits (read_seen says why
+        # the sketches need nothing else)
+        enqueued = admitted_final.filter(F.col("retry_count") == 0)
+        if n_new > 0:
+            sketches = SEEN.apply_sketch_delta(enqueued, sketches, cfg.n_seen_partitions)
 
         new_frontier = deferred.select([f.name for f in FRONTIER_SCHEMA.fields]).unionByName(
             admitted_final
@@ -881,9 +880,7 @@ class CrawlEngine:
         }
         deltas = {
             "metrics": round_metrics,
-            "enqueue_log": admitted_final.filter(F.col("retry_count") == 0).select(
-                "url", "url_hash", F.lit(rnd).alias("round")
-            ),
+            "enqueue_log": enqueued.select("url", "url_hash", F.lit(rnd).alias("round")),
         }
         if compact:
             # fold base ∪ deltas ∪ this round's admits into a fresh base:

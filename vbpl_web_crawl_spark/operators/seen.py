@@ -1,10 +1,10 @@
-"""Distributed URL-seen set: partitioned Bloom/cuckoo sketches + exact
-key table, exposed as DataFrame operators (SURVEY.md §2.1 J3, §7 step 4).
+"""Distributed URL-seen set: partitioned Bloom sketches + exact key
+table, exposed as DataFrame operators (SURVEY.md §2.1 J3, §7 step 4).
 
 Data model (FIXTURES.md §3):
 - ``seen_urls(url_hash: long)`` — exact ground truth.
-- ``sketches(partition_id: int, bloom_bytes: binary, cuckoo_bytes:
-  binary)`` — exactly one row per hash-bucket partition.
+- ``sketches(partition_id: int, bloom_bytes: binary)`` — exactly one
+  row per hash-bucket partition.
 
 The reference probes MySQL per row before every insert
 (/root/reference/app/service/vbpl.py:147-148 and 7 sibling sites); at
@@ -17,9 +17,11 @@ The reference probes MySQL per row before every insert
    join. At a steady-state crawl most candidate URLs are already seen,
    so the exact join shrinks to the FP rate of the filter — and the
    final seen set stays exactly equal to the reference's.
-2. ``add_to_seen`` / ``apply_sketch_delta``: one update kernel on the
-   same cogroup shape rewrites the sketch bytes; its cuckoo delete is
-   the retry-requeue primitive.
+2. ``add_to_seen`` (alias ``apply_sketch_delta``): one Bloom-add
+   kernel on the same cogroup shape rewrites the sketch bytes. Nothing
+   is ever removed from a sketch: a retry is re-admitted by deleting its
+   hash from the exact table, and its Bloom positive then passes the
+   exact check.
 
 Partitioning: partition_id = pmod(url_hash, n_partitions). Only this
 module derives it; callers pass ``url_hash`` and the partition count.
@@ -37,7 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from vbpl_web_crawl_spark.operators.sketches import BloomFilter, CuckooFilter
+from vbpl_web_crawl_spark.operators.sketches import BloomFilter
 
 SEEN_SCHEMA = T.StructType(
     [
@@ -49,7 +51,6 @@ SKETCH_SCHEMA = T.StructType(
     [
         T.StructField("partition_id", T.IntegerType(), False),
         T.StructField("bloom_bytes", T.BinaryType(), True),
-        T.StructField("cuckoo_bytes", T.BinaryType(), True),
     ]
 )
 
@@ -66,22 +67,14 @@ def empty_seen(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(to_arrow_schema(SEEN_SCHEMA).empty_table())
 
 
-def empty_sketches(
-    spark: SparkSession, n_partitions: int, bloom_bits: int = 1 << 20, cuckoo_buckets: int = 1 << 14
-) -> DataFrame:
-    rows = [
-        (
-            p,
-            BloomFilter(bloom_bits).to_bytes(),
-            CuckooFilter(cuckoo_buckets).to_bytes(),
-        )
-        for p in range(n_partitions)
-    ]
+def empty_sketches(spark: SparkSession, n_partitions: int, bloom_bits: int) -> DataFrame:
+    empty = BloomFilter(bloom_bits).to_bytes()
+    rows = [(p, empty) for p in range(n_partitions)]
     # a local relation, like empty_seen
     return spark.createDataFrame(pd.DataFrame(rows, columns=SKETCH_SCHEMA.names), SKETCH_SCHEMA)
 
 
-def _load(key, sk_pdf: pd.DataFrame) -> tuple[BloomFilter, CuckooFilter]:
+def _load(key, sk_pdf: pd.DataFrame) -> BloomFilter:
     # exactly one sketch row per partition is an invariant (enforced by
     # the cogroup update shape). No row means the sketches were built for
     # another partition count: probing that partition as empty admits
@@ -89,10 +82,7 @@ def _load(key, sk_pdf: pd.DataFrame) -> tuple[BloomFilter, CuckooFilter]:
     # nondeterministic. Both fail loudly.
     if len(sk_pdf) != 1:
         raise ValueError(f"sketch partition {key[0]} has {len(sk_pdf)} rows, expected 1")
-    row = sk_pdf.iloc[0]
-    return BloomFilter.from_bytes(bytes(row.bloom_bytes)), CuckooFilter.from_bytes(
-        bytes(row.cuckoo_bytes)
-    )
+    return BloomFilter.from_bytes(bytes(sk_pdf.iloc[0].bloom_bytes))
 
 
 def filter_unseen(
@@ -118,7 +108,7 @@ def filter_unseen(
     def probe(key, cand_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
         if cand_pdf.empty:
             return pd.DataFrame(columns=col_order)
-        bloom, _ = _load(key, sk_pdf)
+        bloom = _load(key, sk_pdf)
         cand_pdf = cand_pdf.assign(
             maybe_seen=bloom.contains(cand_pdf["url_hash"].to_numpy(dtype=np.int64))
         )
@@ -141,72 +131,35 @@ def filter_unseen(
     return definitely_new.unionByName(confirmed_new).drop("maybe_seen", "partition_id")
 
 
-def _update_sketches(tagged: DataFrame, sketches: DataFrame, n_partitions: int) -> DataFrame:
-    """The one sketch-update kernel: per partition, cuckoo-delete the
-    ``is_del`` rows of ``tagged`` (``url_hash``, ``is_del``), then
-    Bloom+cuckoo-add the rest.
+def add_to_seen(new_hashes: DataFrame, sketches: DataFrame, n_partitions: int) -> DataFrame:
+    """The one sketch-update kernel: ``sketches`` with the ``url_hash``
+    column of ``new_hashes`` Bloom-added, per partition, in one cogroup.
+    No driver-side collect; the caller keeps the exact seen table.
 
-    The Bloom filter cannot delete: a deleted key may still probe as
-    maybe-seen, and the exact anti-join then overrides it, so
-    re-admission stays correct.
+    Bloom OR commutes and is idempotent, so the result depends only on
+    the set of hashes ever added, not on batching, order or repeats:
+    the input needs no dedup.
 
     The cogroup emits exactly one row per partition present on EITHER
     side: a partition with no keys re-emits its sketch unchanged, so no
     anti-join union of "untouched" rows (that union double-emitted cold
     partitions, growing the checkpointed sketch table every round)."""
-    tagged = tagged.withColumn("partition_id", partition_of(F.col("url_hash"), n_partitions))
+    hashes = new_hashes.select(
+        "url_hash", partition_of(F.col("url_hash"), n_partitions).alias("partition_id")
+    )
 
     def update(key, h_pdf: pd.DataFrame, sk_pdf: pd.DataFrame) -> pd.DataFrame:
-        bloom, cuckoo = _load(key, sk_pdf)
-        keys = h_pdf["url_hash"].to_numpy(dtype=np.int64)
-        is_del = h_pdf["is_del"].to_numpy(dtype=bool)
-        if is_del.any():
-            cuckoo.delete(keys[is_del])
-        adds = keys[~is_del]
-        if len(adds):
-            bloom.add(adds)
-            cuckoo.add(adds)
-        return pd.DataFrame(
-            {
-                "partition_id": [int(key[0])],
-                "bloom_bytes": [bloom.to_bytes()],
-                "cuckoo_bytes": [cuckoo.to_bytes()],
-            }
-        )
+        bloom = _load(key, sk_pdf)
+        bloom.add(h_pdf["url_hash"].to_numpy(dtype=np.int64))
+        return pd.DataFrame({"partition_id": [int(key[0])], "bloom_bytes": [bloom.to_bytes()]})
 
     return (
-        tagged.groupBy("partition_id")
+        hashes.groupBy("partition_id")
         .cogroup(sketches.groupBy("partition_id"))
         .applyInPandas(update, SKETCH_SCHEMA)
     )
 
 
-def add_to_seen(
-    new_hashes: DataFrame,
-    seen_urls: DataFrame,
-    sketches: DataFrame,
-    n_partitions: int,
-) -> tuple[DataFrame, DataFrame]:
-    """Returns (new seen_urls, new sketches) with ``new_hashes``
-    (column ``url_hash``) inserted. No driver-side collect."""
-    hashes = new_hashes.select("url_hash").distinct()
-    new_sketches = _update_sketches(
-        hashes.withColumn("is_del", F.lit(False)), sketches, n_partitions
-    )
-    new_seen = seen_urls.unionByName(hashes).dropDuplicates(["url_hash"])
-    return new_seen, new_sketches
-
-
-def apply_sketch_delta(
-    add_hashes: DataFrame,
-    del_hashes: DataFrame,
-    sketches: DataFrame,
-    n_partitions: int,
-) -> DataFrame:
-    """A round's sketch update: deletes (cuckoo, the retry requeue) then
-    adds (Bloom+cuckoo), in one cogroup. The caller removes deleted
-    hashes from the exact table itself (a left-anti join)."""
-    tagged = del_hashes.select("url_hash", F.lit(True).alias("is_del")).unionByName(
-        add_hashes.select("url_hash", F.lit(False).alias("is_del"))
-    )
-    return _update_sketches(tagged, sketches, n_partitions)
+# the crawl round's name for the same kernel (the seed calls
+# add_to_seen): perfbench's tracer wraps both module attributes by name
+apply_sketch_delta = add_to_seen

@@ -1,17 +1,22 @@
-"""Bloom and cuckoo filters over int64 keys, numpy-vectorized, with a
+"""A Bloom filter over int64 keys, numpy-vectorized, with a
 byte-serializable state so each sketch lives as one row of a partitioned
-Iceberg/parquet table (FIXTURES.md §3 ``seen_sketch``).
+Iceberg/parquet table (FIXTURES.md §3 ``sketches``).
 
 Role in the engine (north_rule): the URL-seen set at 10^10 scale cannot
 be an exact join alone — the Bloom filter is a per-partition *prefilter*
 (batch membership inside an Arrow batch; only Bloom-positive rows
-proceed to the exact anti-join), and the cuckoo filter supports
-*deletion* so a failed fetch can be un-marked and re-admitted for retry
-(reference retry semantics: /root/reference/app/service/anle.py:37-57).
+proceed to the exact anti-join).
 
 False positives are harmless for correctness (exact join confirms);
 false negatives cannot happen in a Bloom filter, so the final seen set
 is exactly equal to the reference's (SURVEY.md §7 step 4).
+
+Retry re-admission is the exact seen-table delete, so no deletable
+sketch is needed: a failed URL's hash is removed from the exact seen
+table, and since every Bloom positive is verified by that table's
+anti-join, the key's stale Bloom bits only route it to the exact check,
+which admits it (the reference's retry semantics,
+app/service/anle.py:37-57).
 
 All membership/insert paths take numpy int64 arrays — one call per
 Arrow batch, no per-row Python.
@@ -44,7 +49,11 @@ class BloomFilter:
     MAGIC = b"BLM1"
 
     def __init__(self, n_bits: int = 1 << 20, k: int = 5, bits: np.ndarray | None = None):
-        assert n_bits % 8 == 0
+        # the serialized header holds n_bits in 32 bits
+        if not 0 < n_bits < 1 << 32 or n_bits % 8:
+            raise ValueError(
+                f"Bloom filter size must be a positive multiple of 8 bits below 2**32, got {n_bits}"
+            )
         self.n_bits = n_bits
         self.k = k
         self.bits = bits if bits is not None else np.zeros(n_bits // 8, dtype=np.uint8)
@@ -79,105 +88,12 @@ class BloomFilter:
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "BloomFilter":
-        assert data[:4] == cls.MAGIC
+        # sketch bytes come from a checkpoint: refuse a foreign or
+        # truncated row instead of probing garbage bits
+        if data[:4] != cls.MAGIC or len(data) < 9:
+            raise ValueError(f"not a Bloom filter: header {data[:4]!r}")
         n_bits, k = struct.unpack(">IB", data[4:9])
+        if len(data) - 9 != n_bits // 8:
+            raise ValueError(f"Bloom filter of {n_bits} bits has {len(data) - 9} bytes of bits")
         bits = np.frombuffer(data[9:], dtype=np.uint8).copy()
         return cls(n_bits, k, bits)
-
-
-class CuckooFilter:
-    """Cuckoo filter (4-slot buckets, 16-bit fingerprints) supporting
-    delete — the retry-requeue primitive. Standard partial-key cuckoo
-    hashing: bucket2 = bucket1 XOR hash(fingerprint).
-    """
-
-    MAGIC = b"CKF1"
-    SLOTS = 4
-    MAX_KICKS = 500
-
-    def __init__(self, n_buckets: int = 1 << 16, table: np.ndarray | None = None):
-        assert n_buckets & (n_buckets - 1) == 0, "power of two"
-        self.n_buckets = n_buckets
-        # 0 = empty slot; fingerprints are 1..65535
-        self.table = (
-            table if table is not None else np.zeros((n_buckets, self.SLOTS), dtype=np.uint16)
-        )
-
-    def _fp_and_buckets(self, keys: np.ndarray):
-        keys = np.asarray(keys, dtype=np.int64).view(np.uint64)
-        fp = (_mix(keys, 101) % _U64(65535) + _U64(1)).astype(np.uint16)
-        b1 = (_mix(keys, 7) % _U64(self.n_buckets)).astype(np.int64)
-        b2 = (b1 ^ (_mix(fp.astype(np.uint64), 13) % _U64(self.n_buckets)).astype(np.int64)) % self.n_buckets
-        return fp, b1, b2
-
-    def _alt(self, bucket: int, fp: int) -> int:
-        h = int(_mix(np.array([fp], dtype=np.uint64), 13)[0] % _U64(self.n_buckets))
-        return (bucket ^ h) % self.n_buckets
-
-    def add(self, keys: np.ndarray) -> int:
-        """Insert each key; returns number successfully inserted (a full
-        filter raises — size it for the partition's key budget)."""
-        fp, b1, b2 = self._fp_and_buckets(keys)
-        rng_state = 0x12345678  # deterministic eviction choice
-        for i in range(len(keys)):
-            f, x, y = int(fp[i]), int(b1[i]), int(b2[i])
-            row = self.table[x]
-            if (row == f).any() or (self.table[y] == f).any():
-                continue  # already present
-            placed = False
-            for b in (x, y):
-                empty = np.where(self.table[b] == 0)[0]
-                if len(empty):
-                    self.table[b][empty[0]] = f
-                    placed = True
-                    break
-            if placed:
-                continue
-            # evict loop
-            b = x
-            for _ in range(self.MAX_KICKS):
-                rng_state = (rng_state * 6364136223846793005 + 1442695040888963407) & 0xFFFFFFFFFFFFFFFF
-                slot = rng_state % self.SLOTS
-                f, self.table[b][slot] = int(self.table[b][slot]), f
-                b = self._alt(b, f)
-                empty = np.where(self.table[b] == 0)[0]
-                if len(empty):
-                    self.table[b][empty[0]] = f
-                    placed = True
-                    break
-            if not placed:
-                raise RuntimeError("cuckoo filter full — increase n_buckets")
-        return len(keys)
-
-    def contains(self, keys: np.ndarray) -> np.ndarray:
-        if len(keys) == 0:
-            return np.zeros(0, dtype=bool)
-        fp, b1, b2 = self._fp_and_buckets(keys)
-        in1 = (self.table[b1] == fp[:, None]).any(axis=1)
-        in2 = (self.table[b2] == fp[:, None]).any(axis=1)
-        return in1 | in2
-
-    def delete(self, keys: np.ndarray) -> np.ndarray:
-        """Remove one fingerprint copy per key; bool array of success.
-        This is the retry-requeue primitive (north_rule)."""
-        fp, b1, b2 = self._fp_and_buckets(keys)
-        ok = np.zeros(len(keys), dtype=bool)
-        for i in range(len(keys)):
-            f = fp[i]
-            for b in (int(b1[i]), int(b2[i])):
-                slots = np.where(self.table[b] == f)[0]
-                if len(slots):
-                    self.table[b][slots[0]] = 0
-                    ok[i] = True
-                    break
-        return ok
-
-    def to_bytes(self) -> bytes:
-        return self.MAGIC + struct.pack(">I", self.n_buckets) + self.table.tobytes()
-
-    @classmethod
-    def from_bytes(cls, data: bytes) -> "CuckooFilter":
-        assert data[:4] == cls.MAGIC
-        (n_buckets,) = struct.unpack(">I", data[4:8])
-        table = np.frombuffer(data[8:], dtype=np.uint16).reshape(n_buckets, cls.SLOTS).copy()
-        return cls(n_buckets, table)

@@ -379,7 +379,6 @@ def _tiny_crawl(spark: SparkSession):
         round_window_s=120.0,
         n_seen_partitions=4,
         bloom_bits=1 << 16,
-        cuckoo_buckets=1 << 10,
     )
     ckpt = tempfile.mkdtemp(prefix="q_crawl_")
     eng = CrawlEngine(spark, cfg, ckpt)
