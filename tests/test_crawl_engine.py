@@ -246,9 +246,12 @@ def test_compaction_and_gc_preserve_state(spark, tmp_path_factory):
     assert state["seen_urls"].count() == len(oracle.seen)
     order = [r.url for r in state["visit_log"].orderBy("visit_seq").select("url").collect()]
     assert order == oracle.visit_order
-    assert state["sketches"].count() == cfg.n_seen_partitions
     base_round = manifest["seen_base_round"]
     assert base_round >= 0, "compaction must have happened"
+    # final_state holds no sketches: they live at the retained base round
+    assert "sketches" not in state
+    base_sketches, _ = eng.read_sketches(manifest["round"], base_round)
+    assert base_sketches.count() == cfg.n_seen_partitions
     # exactly one live seen_base remains
     state_root = os.path.join(ckpt, "state")
     bases = [
@@ -259,42 +262,106 @@ def test_compaction_and_gc_preserve_state(spark, tmp_path_factory):
     assert bases == [f"round={base_round}"]
 
 
-def test_sketches_are_bloom_of_enqueue_log(spark, tmp_path_factory):
-    """The checkpointed sketches are a function of the seen set: at every
-    round, each partition's Bloom bytes equal a filter built in one shot
-    from that partition's enqueue_log hashes up to the round. A round
-    Bloom-adds only its enqueue_log delta and skips the update when it
-    admits nothing new; this pins why that is exact (faults force
-    retries, compaction every 2 rounds moves the seen base)."""
-    import os
-    import re
-
-    from vbpl_web_crawl_spark.operators.sketches import BloomFilter
+@pytest.fixture(scope="module")
+def compact_crawl(spark, tmp_path_factory):
+    """The faulted crawl with compaction every 2 rounds and every live
+    dir kept, with spies recording each round's probe sketch side and
+    the round of every sketch-update call (the seed round is 0)."""
+    from vbpl_web_crawl_spark.operators import seen as SEEN
 
     cfg = CrawlConfig(**{**CFG.__dict__, "seen_compact_every": 2, "keep_live_rounds": 1000})
-    ckpt = str(tmp_path_factory.mktemp("ckpt_sketch_fn"))
-    eng = CrawlEngine(spark, cfg, ckpt)
-    manifest = eng.run()
+    eng = CrawlEngine(spark, cfg, str(tmp_path_factory.mktemp("ckpt_sketch_fn")))
+    probes, updates = [], []
+
+    def running_round():
+        m = eng.read_manifest()
+        return 0 if m is None else m["round"] + 1
+
+    def spy(name):
+        real = getattr(SEEN, name)
+
+        def wrapped(*args, **kwargs):
+            if name == "filter_unseen":
+                probes.append((running_round(), args[2], kwargs.get("pending")))
+            else:
+                updates.append((running_round(), name))
+            return real(*args, **kwargs)
+
+        return wrapped
+
+    with pytest.MonkeyPatch.context() as mp:
+        for name in ("filter_unseen", "add_to_seen", "apply_sketch_delta"):
+            mp.setattr(SEEN, name, spy(name))
+        manifest = eng.run(resume=False)
     assert eng.final_state()["visit_log"].filter("retry_count > 0").count() > 0
-    n = cfg.n_seen_partitions
-    rounds = sorted(
-        int(m.group(1))
-        for m in (re.fullmatch(r"round=(\d+)", d) for d in os.listdir(os.path.join(ckpt, "state")))
-        if m
+    return eng, manifest, probes, updates
+
+
+def _bloom_of_enqueue_log(eng, upto_round):
+    """Per partition, the Bloom filter built in one shot from the
+    partition's enqueue_log hashes up to ``upto_round``."""
+    from vbpl_web_crawl_spark.operators.sketches import BloomFilter
+
+    n = eng.cfg.n_seen_partitions
+    hashes = np.array(
+        [row.url_hash for row in eng.read_log("enqueue_log", upto_round).select("url_hash").collect()],
+        dtype=np.int64,
     )
-    assert rounds == list(range(manifest["round"] + 1))
-    for r in rounds:
-        hashes = np.array(
-            [row.url_hash for row in eng.read_log("enqueue_log", r).select("url_hash").collect()],
-            dtype=np.int64,
-        )
-        sk = eng._read_live(r)["sketches"]
+    out = {}
+    for p in range(n):
+        bloom = BloomFilter(eng.cfg.bloom_bits)
+        bloom.add(hashes[np.mod(hashes, n) == p])  # pmod(url_hash, n)
+        out[p] = bloom.to_bytes()
+    return out
+
+
+def test_sketches_are_bloom_of_enqueue_log(spark, compact_crawl):
+    """The sketches are a function of the seen set. At every compaction
+    round the written bytes equal the one-shot Bloom filter of
+    enqueue_log up to the round, and every round's probe folds its base
+    and pending hashes into the filter of enqueue_log up to the round
+    before (faults force retries, compaction every 2 rounds moves the
+    base)."""
+    import os
+
+    from vbpl_web_crawl_spark.operators import seen as SEEN
+
+    eng, manifest, probes, _ = compact_crawl
+    n = eng.cfg.n_seen_partitions
+    compacted = range(2, manifest["round"] + 1, 2)
+    assert manifest["seen_base_round"] == compacted[-1]
+    for r in compacted:
+        path = os.path.join(eng.ckpt_dir, "state", f"round={r}", "sketches")
+        sk = spark.read.schema(SEEN.SKETCH_SCHEMA).parquet(path)
         got = {row.partition_id: bytes(row.bloom_bytes) for row in sk.collect()}
         assert sorted(got) == list(range(n)), r
-        for p in range(n):
-            want = BloomFilter(cfg.bloom_bits)
-            want.add(hashes[np.mod(hashes, n) == p])  # pmod(url_hash, n)
-            assert got[p] == want.to_bytes(), (r, p)
+        assert got == _bloom_of_enqueue_log(eng, r), r
+    assert [r for r, _, _ in probes] == list(range(1, manifest["round"] + 1))
+    for r, base, pending in probes:
+        folded = SEEN.add_to_seen(pending, base, n)
+        got = {row.partition_id: bytes(row.bloom_bytes) for row in folded.collect()}
+        assert got == _bloom_of_enqueue_log(eng, r - 1), r
+
+
+def test_only_compaction_rounds_write_sketches(compact_crawl):
+    """A round that does not compact keeps only its frontier live, and
+    the sketch-update kernel runs on compaction rounds only, never in
+    the seed round: one seen cogroup (the probe) per round."""
+    import os
+
+    eng, manifest, _, updates = compact_crawl
+    compacted = list(range(2, manifest["round"] + 1, 2))
+    assert updates == [(r, "add_to_seen") for r in compacted]
+    for r in range(manifest["round"] + 1):
+        tables = sorted(os.listdir(os.path.join(eng.ckpt_dir, "state", f"round={r}")))
+        want = ["frontier", "seen_base", "sketches"] if r in compacted else ["frontier"]
+        assert tables == want, r
+
+
+def test_final_state_without_checkpoint_raises(spark, tmp_path):
+    ckpt = str(tmp_path / "never_run")
+    with pytest.raises(FileNotFoundError, match="never_run"):
+        CrawlEngine(spark, CFG, ckpt).final_state()
 
 
 def test_fresh_run_over_stale_checkpoint_wipes_old_state(spark, tmp_path_factory):

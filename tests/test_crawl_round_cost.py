@@ -72,7 +72,6 @@ def test_driver_tables_plan_as_local_relations(spark, tmp_path):
         "budgets": eng.budgets,
         "seeds": eng.seed_frontier(),
         "empty_sketches": SEEN.empty_sketches(spark, 4, 1 << 12),
-        "empty_seen": SEEN.empty_seen(spark),
     }
     for name, df in frames.items():
         plan = _executed_plan(df)
@@ -102,10 +101,11 @@ def test_declared_schemas_match_the_files(spark, grouped_crawl):
     assert manifest["seen_base_round"] >= 0, "the crawl must compact the seen set"
     state = os.path.join(eng.ckpt_dir, "state")
     live = os.path.join(state, f"round={manifest['round']}")
+    base = os.path.join(state, f"round={manifest['seen_base_round']}")
     tables = {
         os.path.join(live, "frontier"): FRONTIER_SCHEMA,
-        os.path.join(live, "sketches"): SEEN.SKETCH_SCHEMA,
-        os.path.join(state, f"round={manifest['seen_base_round']}", "seen_base"): SEEN.SEEN_SCHEMA,
+        os.path.join(base, "sketches"): SEEN.SKETCH_SCHEMA,
+        os.path.join(base, "seen_base"): SEEN.SEEN_SCHEMA,
     }
     # log tables: the engine reads them with the r=K partition column
     tables.update(

@@ -4,11 +4,13 @@ and the one politeness-budget formula every budget reader shares."""
 import pytest
 
 from vbpl_web_crawl_spark.crawl.engine import CrawlConfig, CrawlEngine
+from vbpl_web_crawl_spark.crawl.oracle import run_oracle
 from vbpl_web_crawl_spark.crawl.politeness import (
     DEFAULT_CRAWL_DELAY,
     host_budget,
     parse_robots_txt,
 )
+from vbpl_web_crawl_spark.sources import synth_site as SITE
 
 ROBOTS = """\
 # comments are ignored
@@ -77,3 +79,28 @@ def test_fractional_delay_budget_is_the_rounded_quotient():
     assert host_budget(0.1, 60.0) == 600
     assert host_budget(0.9, 3600.0) == 4000
     assert host_budget(7.0, 3.0) == 1
+
+
+def test_zero_crawl_delay_builds_the_engine_and_crawls_like_the_oracle(spark, tmp_path):
+    """Crawl-delay 0 once gave a budget past the int budget column, and
+    building the engine raised. Engine and oracle share the capped
+    host_budget, so the crawl still matches the oracle."""
+    delay = parse_robots_txt("User-agent: *\nCrawl-delay: 0\n")["crawl_delay"]
+    assert delay == 0.0
+    robots = {**SITE.ROBOTS, SITE.HOST_MAIN: {**SITE.ROBOTS[SITE.HOST_MAIN], "crawl_delay": delay}}
+    cfg = CrawlConfig(
+        site=SITE.SiteConfig(n_pages=1, docs_per_page=4, related_per_doc=1, max_attachments=1),
+        robots=robots,
+        round_window_s=60.0,
+        n_seen_partitions=2,
+        bloom_bits=1 << 12,
+    )
+    eng = CrawlEngine(spark, cfg, str(tmp_path / "ckpt"))
+    budgets = {r.host: r.budget for r in eng.budgets.collect()}
+    assert budgets[SITE.HOST_MAIN] == host_budget(delay, 60.0) == 2**31 - 1
+    eng.run(resume=False)
+    oracle = run_oracle(cfg.site, cfg.robots, cfg.round_window_s, cfg.max_retries)
+    st = eng.final_state()
+    order = [r.url for r in st["visit_log"].orderBy("visit_seq").select("url").collect()]
+    assert order == oracle.visit_order
+    assert {r.url for r in st["enqueue_log"].select("url").collect()} == oracle.seen

@@ -3,7 +3,7 @@ across any sequence of sketch updates (the cogroup emits one row per
 partition present on either side — a regression here grows the
 checkpointed sketch table every round), filter_unseen equality with a
 plain set, no capacity limit on a partition's sketch, and a loud failure
-on a missing sketch partition."""
+on a missing or doubled sketch partition."""
 
 import numpy as np
 import pytest
@@ -67,6 +67,26 @@ def test_filter_unseen_matches_plain_set(spark):
     assert len(caches) == 1  # the cogrouped frame was handed back
 
 
+def test_filter_unseen_probes_base_plus_pending(spark):
+    """The probe's filter is the base sketches with the pending hashes
+    Bloom-added. The hashes here exceed 2**53: a float64 column on the
+    way to pandas would round the pending ones, which would then probe
+    as Bloom-negative and skip the exact check: admitted again."""
+    big = [(1 << 62) + i for i in range(1, 40)]
+    base_keys, pending_keys = big[:10], big[10:20]
+    sketches = SEEN.add_to_seen(
+        _hashes(spark, base_keys), SEEN.empty_sketches(spark, N_PARTS, 1 << 12), N_PARTS
+    )
+    out = SEEN.filter_unseen(
+        _hashes(spark, big),
+        _hashes(spark, base_keys + pending_keys),
+        sketches,
+        N_PARTS,
+        pending=_hashes(spark, pending_keys),
+    )
+    assert sorted(r.url_hash for r in out.collect()) == big[20:]
+
+
 def test_delete_then_filter_readmits(spark):
     """The engine's retry requeue: an exact anti-join delete re-admits
     the key; the Bloom filter still says maybe-seen, and the exact table
@@ -108,11 +128,24 @@ def test_one_partition_holds_seventy_thousand_keys(spark):
 def test_missing_sketch_partition_raises(spark):
     """Sketches without a row for a candidate's partition (built for a
     smaller partition count) must fail the probe, not read the partition
-    as empty and admit every key in it."""
+    as empty and admit every key in it. A pending hash in a partition
+    with no Bloom row, and a partition with two Bloom rows, raise too."""
     seen = _hashes(spark, [3, 7])
     sketches = SEEN.add_to_seen(seen, SEEN.empty_sketches(spark, N_PARTS, 1 << 12), N_PARTS)
     missing = sketches.filter("partition_id != 3")
-    with pytest.raises(Exception, match="sketch partition 3 has 0 rows"):
+    with pytest.raises(Exception, match="sketch partition 3 has 0 Bloom rows"):
         SEEN.filter_unseen(_hashes(spark, [3, 5]), seen, missing, N_PARTS).collect()
-    with pytest.raises(Exception, match="sketch partition 3 has 0 rows"):
+    with pytest.raises(Exception, match="sketch partition 3 has 0 Bloom rows"):
         SEEN.apply_sketch_delta(_hashes(spark, [11]), missing, N_PARTS).collect()
+    # the pending hash 7 is the only sketch-side row of partition 3
+    with pytest.raises(Exception, match="sketch partition 3 has 0 Bloom rows"):
+        SEEN.filter_unseen(
+            _hashes(spark, [3]), seen, missing, N_PARTS, pending=_hashes(spark, [7])
+        ).collect()
+    with pytest.raises(Exception, match="sketch partition 3 has 0 Bloom rows"):
+        SEEN.add_to_seen(_hashes(spark, [7]), missing, N_PARTS).collect()
+    doubled = sketches.unionByName(sketches.filter("partition_id = 1"))
+    with pytest.raises(Exception, match="sketch partition 1 has 2 Bloom rows"):
+        SEEN.filter_unseen(_hashes(spark, [1]), seen, doubled, N_PARTS).collect()
+    with pytest.raises(Exception, match="sketch partition 1 has 2 Bloom rows"):
+        SEEN.add_to_seen(_hashes(spark, []), doubled, N_PARTS).collect()

@@ -152,12 +152,12 @@ class CrawlConfig:
     # files per checkpointed table: 1 at test scale; set to the cluster's
     # task parallelism at 10^10 scale so snapshot writes stay parallel
     checkpoint_files: int = 1
-    # fold the seen set into a full seen_base every K rounds; between
-    # compactions it is seen_base plus the rounds' O(new URLs)
-    # enqueue_log deltas
+    # fold the seen set into a full seen_base, and its Bloom sketches
+    # into fresh sketches, every K rounds; between compactions both are
+    # the base plus the rounds' O(new URLs) enqueue_log deltas
     seen_compact_every: int = 8
-    # live dirs (frontier/sketches) older than this many rounds are GC'd
-    # after each commit (the seen_base round is always retained)
+    # live dirs older than this many rounds are GC'd after each commit
+    # (the seen_base round, which holds the sketches, is always retained)
     keep_live_rounds: int = 2
     # T2 instantaneous-rate fidelity: when True, the fetch UDF token-
     # paces same-host requests inside each salted partition at the
@@ -204,10 +204,10 @@ class CrawlEngine:
     # ---------------- state I/O ----------------
     #
     # Snapshot layout (parquet stand-in for Iceberg snapshots):
-    #   ckpt/state/round=K/{frontier,sketches}             full per round
-    #   ckpt/state/round=K/seen_base          full seen set, ONLY on
-    #                                         compaction rounds (every
-    #                                         cfg.seen_compact_every)
+    #   ckpt/state/round=K/frontier           full per round
+    #   ckpt/state/round=K/seen_base,sketches full seen set + its Bloom
+    #                                         sketches, ONLY on compaction
+    #                                         rounds (cfg.seen_compact_every)
     #   ckpt/log/{visit_log,documents,metrics,enqueue_log,
     #             doc_lines}/r=K/                           deltas
     #   ckpt/manifest-<round>.json            commit pointers (max wins)
@@ -219,7 +219,8 @@ class CrawlEngine:
     # round's new seen hashes are its enqueue_log delta, so readers take
     # seen_base ∪ enqueue_log deltas after base_round (read_seen says why
     # that is exact), and every K rounds the union is folded into a
-    # fresh seen_base (Iceberg MERGE compaction shape).
+    # fresh seen_base (Iceberg MERGE compaction shape). The sketches are
+    # stored the same way (read_sketches).
     #
     # The manifest commit is a tmp-write + rename to a FRESH name
     # (fsio.commit_manifest — atomic on HDFS/local, object-store
@@ -227,7 +228,6 @@ class CrawlEngine:
     # committed round and are filtered out on read (Iceberg's snapshot
     # isolation, minus the catalog).
 
-    LIVE_TABLES = ("frontier", "sketches")
     LOG_TABLES = ("visit_log", "documents", "metrics", "enqueue_log", "doc_lines")
 
     def _live_dir(self, rnd: int) -> str:
@@ -338,13 +338,9 @@ class CrawlEngine:
                 if r < keep_from and r != base_round:
                     fsio.delete(self.spark, os.path.join(state_dir, name))
 
-    def _read_live(self, rnd: int) -> dict[str, DataFrame]:
-        rdir = self._live_dir(rnd)
-        schemas = {"frontier": FRONTIER_SCHEMA, "sketches": SEEN.SKETCH_SCHEMA}
-        return {
-            name: self.spark.read.schema(schemas[name]).parquet(os.path.join(rdir, name))
-            for name in self.LIVE_TABLES
-        }
+    def _read_frontier(self, rnd: int) -> DataFrame:
+        path = os.path.join(self._live_dir(rnd), "frontier")
+        return self.spark.read.schema(FRONTIER_SCHEMA).parquet(path)
 
     def read_log(self, name: str, upto_round: int, after_round: int = -1) -> DataFrame:
         """Union of a log table's per-round deltas in (after_round,
@@ -358,6 +354,19 @@ class CrawlEngine:
             .filter((F.col("r") <= upto_round) & (F.col("r") > after_round))
             .drop("r")
         )
+
+    def _seen_parts(self, upto_round: int, base_round: int, table: str, schema) -> tuple:
+        """The two parts of a seen-set table as of ``upto_round``: its
+        copy at the compacted base round (None before the first
+        compaction) and the ``url_hash`` of the enqueue_log deltas after
+        that round. read_seen and read_sketches both take them from
+        here, so the exact set and its filter always cover the same
+        rounds."""
+        deltas = self.read_log("enqueue_log", upto_round, after_round=base_round)
+        if base_round < 0:
+            return None, deltas.select("url_hash")
+        path = os.path.join(self._live_dir(base_round), table)
+        return self.spark.read.schema(schema).parquet(path), deltas.select("url_hash")
 
     def read_seen(self, upto_round: int, base_round: int) -> DataFrame:
         """The seen set as of ``upto_round``: seen_base (if compacted) ∪
@@ -378,29 +387,26 @@ class CrawlEngine:
         Hence persisted seen = ∪ enqueue_log hashes up to the commit,
         and compaction folds this same union into seen_base.
 
-        The checkpointed sketches are the Bloom filter of this same set,
-        though a round Bloom-adds only its enqueue_log delta (and skips
-        the update when it has no new admits): Bloom OR commutes and is
-        idempotent, so the filter after round r is the filter of every
-        hash added up to r, and a retry's hash was added in the round
-        that first admitted it. Nothing is ever removed from a sketch."""
-        parts = []
-        if base_round >= 0:
-            parts.append(
-                self.spark.read.schema(SEEN.SEEN_SCHEMA).parquet(
-                    os.path.join(self._live_dir(base_round), "seen_base")
-                )
-            )
-        if upto_round > base_round:
-            parts.append(
-                self.read_log("enqueue_log", upto_round, after_round=base_round).select("url_hash")
-            )
-        if not parts:
-            return SEEN.empty_seen(self.spark)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        The sketches (read_sketches) are stored the same way: written at
+        compaction, the deltas since folded in by each probe. Bloom OR
+        commutes and is idempotent, so base (the filter of enqueue_log <=
+        base) plus the deltas in (base, r-1] is, bit for bit, the filter
+        checkpointed after r-1 when every round Bloom-added its own
+        delta. So the ``maybe_seen`` flags,
+        the admitted rows and the compaction-round bytes are unchanged,
+        and those checkpoints resume: every live dir of theirs, the base
+        round's included, holds sketches."""
+        base, deltas = self._seen_parts(upto_round, base_round, "seen_base", SEEN.SEEN_SCHEMA)
+        return deltas if base is None else base.unionByName(deltas)
+
+    def read_sketches(self, upto_round: int, base_round: int) -> tuple[DataFrame, DataFrame]:
+        """The Bloom sketches of the seen set as of ``upto_round``: the
+        base round's (empty before the first compaction) and the pending
+        hashes after it, for SEEN.filter_unseen or SEEN.add_to_seen."""
+        base, pending = self._seen_parts(upto_round, base_round, "sketches", SEEN.SKETCH_SCHEMA)
+        if base is None:
+            base = SEEN.empty_sketches(self.spark, self.cfg.n_seen_partitions, self.cfg.bloom_bits)
+        return base, pending
 
     # ---------------- seed ----------------
 
@@ -553,8 +559,8 @@ class CrawlEngine:
         """Run rounds until the frontier drains; returns final manifest."""
         manifest = self.read_manifest() if resume else None
         if manifest is not None and manifest.get("n_seen_partitions") != self.cfg.n_seen_partitions:
-            # the checkpointed sketches hold one row per partition of the
-            # recorded count; probing them under another count reads
+            # the checkpointed base sketches hold one row per partition of
+            # the recorded count; probing them under another count reads
             # missing partitions as empty and re-admits seen URLs
             raise ValueError(
                 f"checkpoint at {self.ckpt_dir} has n_seen_partitions="
@@ -571,18 +577,13 @@ class CrawlEngine:
             # first commit, so wiping is safe there too.
             if fsio.exists(self.spark, self.ckpt_dir):
                 fsio.delete(self.spark, self.ckpt_dir)
-            # persisted: the seed frontier has four consumers below (the
-            # sketch cogroup, the live write, the delta write, the count)
-            # and its lineage re-derives the synthetic seed list each time —
-            # measured 26s -> ~12s on the bench-shape replay's pre-round
-            # wall (the dominant outside-round term in the decomposition)
+            # persisted: the seed frontier has three consumers below (the
+            # live write, the delta write, the count) and its lineage
+            # re-derives the synthetic seed list each time — measured 26s
+            # -> ~12s on the bench-shape replay's pre-round wall. No sketch
+            # work: the seeds are enqueue_log r=0, like any other admit.
             frontier = self.seed_frontier().persist()
-            sketches = SEEN.add_to_seen(
-                frontier,
-                SEEN.empty_sketches(self.spark, self.cfg.n_seen_partitions, self.cfg.bloom_bits),
-                self.cfg.n_seen_partitions,
-            )
-            live = {"frontier": frontier, "sketches": sketches}
+            live = {"frontier": frontier}
             deltas = {
                 "enqueue_log": frontier.select("url", "url_hash", F.lit(0).alias("round")),
             }
@@ -601,9 +602,9 @@ class CrawlEngine:
         rnd = manifest["round"]
         try:
             while rnd < self.cfg.max_rounds and manifest.get("pending", 1) > 0:
-                state = self._read_live(rnd)
+                frontier = self._read_frontier(rnd)
                 rnd += 1
-                manifest = self._run_round(rnd, state, manifest)
+                manifest = self._run_round(rnd, frontier, manifest)
         finally:
             # a round that raised may still have fetch-log writes in
             # flight; no writer may outlive run() and race a resumed run
@@ -611,15 +612,13 @@ class CrawlEngine:
             self._drain_early_writes()
         return manifest
 
-    def _run_round(self, rnd: int, state: dict[str, DataFrame], manifest: dict) -> dict:
+    def _run_round(self, rnd: int, frontier: DataFrame, manifest: dict) -> dict:
         t0 = time.time()
         sleep0 = self._sleep_acc.value
         decomp: dict = {"_t0": t0}
         cfg = self.cfg
         next_seq = manifest["next_seq"]
         total_visits = manifest["total_visits"]
-
-        frontier = state["frontier"]
 
         # 1. SCHEDULE — politeness budget per host, priority order inside.
         # The literal-k prefilter triggers Spark's WindowGroupLimit: each
@@ -727,7 +726,7 @@ class CrawlEngine:
         )
         base_round = manifest.get("seen_base_round", -1)
         seen_urls = self.read_seen(rnd - 1, base_round)
-        sketches = state["sketches"]
+        sketches, pending = self.read_sketches(rnd - 1, base_round)
         if n_failed > 0:
             seen_urls = seen_urls.join(
                 failed.select("url_hash"), "url_hash", "left_anti"
@@ -792,7 +791,7 @@ class CrawlEngine:
 
         # Bloom-prefiltered anti-join vs seen (retries pass: just deleted)
         admitted = SEEN.filter_unseen(
-            candidates, seen_urls, sketches, cfg.n_seen_partitions, caches=caches
+            candidates, seen_urls, sketches, cfg.n_seen_partitions, pending=pending, caches=caches
         ).persist()
         caches.append(admitted)
 
@@ -826,11 +825,8 @@ class CrawlEngine:
             [f.name for f in FRONTIER_SCHEMA.fields]
         ).persist()
 
-        # the round's seen delta is its new admits (read_seen says why
-        # the sketches need nothing else)
+        # the round's seen delta is its new admits (read_seen says why)
         enqueued = admitted_final.filter(F.col("retry_count") == 0)
-        if n_new > 0:
-            sketches = SEEN.apply_sketch_delta(enqueued, sketches, cfg.n_seen_partitions)
 
         new_frontier = deferred.select([f.name for f in FRONTIER_SCHEMA.fields]).unionByName(
             admitted_final
@@ -874,10 +870,7 @@ class CrawlEngine:
             "n_seen_partitions": cfg.n_seen_partitions,
             "decomp": decomp,
         }
-        live = {
-            "frontier": new_frontier,
-            "sketches": sketches,
-        }
+        live = {"frontier": new_frontier}
         deltas = {
             "metrics": round_metrics,
             "enqueue_log": enqueued.select("url", "url_hash", F.lit(rnd).alias("round")),
@@ -888,6 +881,9 @@ class CrawlEngine:
             live["seen_base"] = seen_urls.unionByName(
                 admitted_final.select("url_hash")
             ).dropDuplicates(["url_hash"])
+            # and its sketches: the old base's + every hash logged since
+            delta = pending.unionByName(enqueued.select("url_hash"))
+            live["sketches"] = SEEN.add_to_seen(delta, sketches, cfg.n_seen_partitions)
         self._write_state(rnd, live, deltas, counters)
         fetched.unpersist()
         admitted_final.unpersist()
@@ -902,12 +898,11 @@ class CrawlEngine:
 
     def final_state(self) -> dict[str, DataFrame]:
         manifest = self.read_manifest()
-        assert manifest is not None, "no checkpoint"
+        if manifest is None:
+            raise FileNotFoundError(f"no committed crawl checkpoint under {self.ckpt_dir}")
         rnd = manifest["round"]
-        out = self._read_live(rnd)
-        out["seen_urls"] = self.read_seen(
-            rnd, manifest.get("seen_base_round", -1)
-        ).dropDuplicates(["url_hash"])
+        seen = self.read_seen(rnd, manifest.get("seen_base_round", -1))
+        out = {"frontier": self._read_frontier(rnd), "seen_urls": seen.dropDuplicates(["url_hash"])}
         for name in self.LOG_TABLES:
             out[name] = self.read_log(name, rnd)
         return out

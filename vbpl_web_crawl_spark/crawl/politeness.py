@@ -87,9 +87,9 @@ def parse_robots_txt(text: str, agent: str = "*") -> dict:
 
 def host_budget(crawl_delay: float, round_window_s: float) -> int:
     # floor of the rounded quotient W / d, as Spark's floor(W / d) has
-    # it: W // d floors the exact quotient of the binary floats, so
-    # 60 // 0.1 is 599 while 60 / 0.1 rounds to 600.0
-    return max(1, math.floor(round_window_s / max(crawl_delay, 1e-9)))
+    # it (60 // 0.1 is 599, 60 / 0.1 rounds to 600.0), capped to the int
+    # budget column, which Crawl-delay 0 would overflow
+    return min(max(1, math.floor(round_window_s / max(crawl_delay, 1e-9))), 2**31 - 1)
 
 
 def robots_frame(robots: dict[str, dict], round_window_s: float) -> pd.DataFrame:
