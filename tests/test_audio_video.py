@@ -146,12 +146,6 @@ def test_feature_sanity_dominant_frequency():
     assert 0 < f["zcr"] < 1
 
 
-def test_resample_halves_length():
-    s = AUD.synth_samples("rs")
-    d = AUD.resample_2x_down(s)
-    assert d.shape[0] == s.shape[0] // 2
-
-
 def test_audio_corpus_spark_pipeline(spark):
     feats = audio_feature_table(synth_audio_corpus(spark, 32, partitions=4))
     rows = feats.collect()

@@ -8,7 +8,6 @@ from pyspark.sql import functions as F
 from vbpl_web_crawl_spark.sources import images as IMG
 from vbpl_web_crawl_spark.sources.corpus import (
     decode_features,
-    resize_to_thumbnail,
     synth_corpus,
 )
 from vbpl_web_crawl_spark.streaming.rounds import windowed_event_agg
@@ -35,15 +34,6 @@ def test_decode_features_all_phash_match(spark):
         F.count(F.lit(1)).alias("n"), F.sum(F.col("phash_match").cast("int")).alias("ok")
     ).collect()[0]
     assert agg["n"] == 48 and agg["ok"] == 48
-
-
-def test_resize_thumbnail_decodable(spark):
-    corpus = synth_corpus(spark, 8, partitions=2)
-    thumbs = resize_to_thumbnail(corpus, size=16).collect()
-    assert len(thumbs) == 8
-    for t in thumbs:
-        px = IMG.png_decode(bytes(t.thumb_png))
-        assert px.shape == (16, 16, 3)
 
 
 def test_streaming_agg_equals_batch(spark):

@@ -1,15 +1,10 @@
-"""Scalar function library (F1-F19, X4) + enrichment lookup-join."""
+"""Scalar and text column functions (functions/scalars.py, functions/text.py)."""
 
 import pytest
 from pyspark.sql import functions as F
 
 from vbpl_web_crawl_spark.functions import scalars as S
 from vbpl_web_crawl_spark.functions import text as TX
-from vbpl_web_crawl_spark.operators.enrich import (
-    DEFAULT_SECTOR,
-    coalesce_fallback_fetch,
-    lookup_join_enrich,
-)
 
 
 def _one(spark, col, value, fn):
@@ -17,65 +12,10 @@ def _one(spark, col, value, fn):
     return df.select(fn(F.col("c")).alias("r")).collect()[0].r
 
 
-def test_extract_item_id(spark):
-    f = lambda v: _one(spark, "string", v, S.extract_item_id)
-    assert f("/page.aspx?ItemID=12345&x=1") == 12345
-    assert f("no id here") is None
-
-
-def test_extract_file_id(spark):
-    f = lambda v: _one(spark, "string", v, S.extract_file_id)
-    assert f("https://x/Attachments/98765/vb.pdf") == "98765"
-    assert f("https://x/UCMServer/abc123") == "abc123"
-    assert f("https://x/other") is None
-
-
-def test_clean_double_extension(spark):
-    f = lambda v: _one(spark, "string", v, S.clean_double_extension)
-    assert f("van_ban..pdf") == "van_ban.pdf"
-    assert f("van_ban..docx") == "van_ban.docx"
-    assert f("van_ban.pdf") == "van_ban.pdf"
-
-
-def test_download_href(spark):
-    v = "javascript:downloadfile('a.pdf','/files/a.pdf')"
-    assert _one(spark, "string", v, S.extract_download_href) == "/files/a.pdf"
-
-
-def test_content_disposition_filename(spark):
-    f = lambda v: _one(spark, "string", v, S.extract_content_disposition_filename)
-    assert f('attachment; filename="van ban.pdf"') == "van ban.pdf"
-    assert f("attachment; filename=vb.pdf; size=3") == "vb.pdf"
-    assert f("inline") is None
-
-
-def test_case_conversions(spark):
-    assert _one(spark, "string", "row_per_page", S.snake_to_pascal) == "RowPerPage"
-    assert _one(spark, "string", "RowPerPage", S.pascal_to_snake) == "row_per_page"
-    assert _one(spark, "string", "itemID", S.pascal_to_snake) == "item_id"
-
-
-def test_url_encode(spark):
-    assert _one(spark, "string", "văn bản", S.url_encode) == "v%C4%83n+b%E1%BA%A3n"
-
-
-def test_parse_vn_date(spark):
-    f = lambda v: _one(spark, "string", v, S.parse_vn_date)
-    assert str(f("15/03/2021")).startswith("2021-03-15")
-    assert f("31/02/2021") is None  # invalid -> NULL (reference F8)
-    assert f("garbage") is None
-
-
-def test_parse_vn_date_loose(spark):
-    assert str(_one(spark, "string", "5/3/2021", S.parse_vn_date_loose)).startswith("2021-03-05")
-
-
 def test_levenshtein_ratio_threshold(spark):
     df = spark.createDataFrame([("abcdefghij", "abcdefghix")], "a string, b string")
     r = df.select(S.levenshtein_ratio(F.col("a"), F.col("b")).alias("r")).collect()[0].r
     assert abs(r - 0.9) < 1e-9
-    m = df.select(S.fuzzy_match(F.col("a"), F.col("b"), 0.8).alias("m")).collect()[0].m
-    assert m is True
 
 
 def test_effectivity_state(spark):
@@ -171,12 +111,8 @@ def test_url_hash_stable_across_variants(spark):
 
 def test_token_counts(spark):
     df = spark.createDataFrame([("hello,  world! 42",), ("",)], "t string")
-    out = df.select(
-        TX.token_count_ws(F.col("t")).alias("ws"),
-        TX.token_count_bpe_ish(F.col("t")).alias("bpe"),
-    ).collect()
+    out = df.select(TX.token_count_ws(F.col("t")).alias("ws")).collect()
     assert out[0].ws == 3
-    assert out[0].bpe == 5  # hello , world ! 42
     assert out[1].ws == 0
 
 
@@ -187,30 +123,3 @@ def test_lang_id_markers(spark):
     )
     out = [r.l for r in df.select(TX.lang_id(F.col("t")).alias("l")).collect()]
     assert out == ["en", "es", "vi", "en"]  # all-zero -> default en
-
-
-def test_word_shingles(spark):
-    df = spark.createDataFrame([("a b c d",), ("a b",)], "t string")
-    out = [r.s for r in df.select(TX.word_shingles(F.col("t"), 3).alias("s")).collect()]
-    assert out[0] == ["a b c", "b c d"]
-    assert out[1] == ["a b"]  # shorter than k -> whole text
-
-
-def test_lookup_join_enrich(spark):
-    docs = spark.createDataFrame(
-        [(i, f"Nghị định số {i} về thuế") for i in range(40)], "doc_id long, title string"
-    )
-    out = lookup_join_enrich(docs).collect()
-    assert len(out) == 40
-    matched = [r for r in out if r.matched_sector != DEFAULT_SECTOR]
-    defaulted = [r for r in out if r.matched_sector == DEFAULT_SECTOR]
-    assert matched and defaulted  # fixture exercises both paths
-    for r in matched:
-        assert r.match_ratio >= 0.8
-
-
-def test_coalesce_fallback(spark):
-    primary = spark.createDataFrame([(1, "full text"), (2, None)], "id long, html string")
-    fallback = spark.createDataFrame([(1, "alt1"), (2, "alt2")], "id long, html string")
-    out = {r.id: r.html for r in coalesce_fallback_fetch(primary, fallback, "id", "html").collect()}
-    assert out == {1: "full text", 2: "alt2"}

@@ -104,3 +104,20 @@ def test_zero_crawl_delay_builds_the_engine_and_crawls_like_the_oracle(spark, tm
     order = [r.url for r in st["visit_log"].orderBy("visit_seq").select("url").collect()]
     assert order == oracle.visit_order
     assert {r.url for r in st["enqueue_log"].select("url").collect()} == oracle.seen
+
+
+@pytest.mark.parametrize("value", ["nan", "inf", "-inf", "-5"])
+def test_unusable_crawl_delay_parses_to_the_default(value):
+    r = parse_robots_txt(f"User-agent: *\nCrawl-delay: {value}\nDisallow: /x/\n")
+    assert r["crawl_delay"] == DEFAULT_CRAWL_DELAY
+    assert r["disallow"] == ("/x/",)
+    assert host_budget(r["crawl_delay"], 60.0) == 60
+
+
+@pytest.mark.parametrize("delay", [-5.0, float("nan"), float("inf")])
+def test_host_budget_rejects_an_unusable_delay(delay):
+    """A robots dict passed in directly skips the parser; host_budget,
+    which engine, oracle and perfbench all go through, names the bad
+    delay instead of granting an unlimited budget or failing in int()."""
+    with pytest.raises(ValueError, match="crawl delay must be finite"):
+        host_budget(delay, 60.0)

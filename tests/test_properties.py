@@ -145,61 +145,6 @@ def test_simhash_hamming_pairs_complete_at_any_plan(spark):
         assert got == truth, f"plan b={plan[0]}"
 
 
-def test_embedding_lsh_recall_floor(spark):
-    """n->(planes, tables) rule (plans/pipeline_queries.py:lsh_params):
-    as the corpus grows and the plane count with it, the multi-table
-    candidate set keeps recall over true near-dup pairs (cosine >= tau)
-    above the configured floor."""
-    from pyspark.sql import functions as F
-
-    from vbpl_web_crawl_spark.plans.pipeline_queries import (
-        embedding_lsh_candidate_pairs,
-        lsh_params,
-    )
-    from vbpl_web_crawl_spark.sources.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    n = emb.count()
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a.cast("double") * b.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    # fixture near-dups live at cosine ~0.4-0.5; size the rule for 0.9
-    # expected recall at tau and assert an 0.8 empirical floor (the rule
-    # is an expectation over 66 truth pairs — leave sampling margin, and
-    # pairs above tau collide MORE often, so the bound is conservative)
-    tau, sized_recall, floor = 0.4, 0.9, 0.8
-    x = emb.select(F.col("vec_id").alias("vec_a"), F.col("embedding").alias("va"))
-    y = emb.select(F.col("vec_id").alias("vec_b"), F.col("embedding").alias("vb"))
-    cos = dot(F.col("va"), F.col("vb")) / (
-        F.sqrt(dot(F.col("va"), F.col("va"))) * F.sqrt(dot(F.col("vb"), F.col("vb")))
-    )
-    truth = {
-        (r.vec_a, r.vec_b)
-        for r in x.crossJoin(y)
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .filter(cos >= tau)
-        .select("vec_a", "vec_b")
-        .collect()
-    }
-    assert truth, "fixture must contain near-dup embedding pairs"
-    # simulate growth: the rule's plane count at n and at 8n (+3 planes)
-    for n_sim in (n, n * 8):
-        planes, tables = lsh_params(n_sim, target_bucket=64, tau=tau, recall=sized_recall)
-        cand = {
-            (r.vec_a, r.vec_b)
-            for r in embedding_lsh_candidate_pairs(emb, planes, tables).collect()
-        }
-        recall = len(truth & cand) / len(truth)
-        assert recall >= floor, (n_sim, planes, tables, recall)
-
-
 @settings(max_examples=15, deadline=None)
 @given(
     st.integers(min_value=0, max_value=2**32 - 1),

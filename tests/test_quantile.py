@@ -6,7 +6,7 @@ import numpy as np
 import pyspark.sql.functions as F
 import pytest
 
-from vbpl_web_crawl_spark.operators.quantile import exact_quantile, exact_quantiles
+from vbpl_web_crawl_spark.operators.quantile import exact_quantiles
 
 
 def _check_all(spark, values, qs=(0.0, 0.01, 0.5, 0.9, 0.999, 1.0)):
@@ -15,7 +15,7 @@ def _check_all(spark, values, qs=(0.0, 0.01, 0.5, 0.9, 0.999, 1.0)):
     n = len(srt)
     for q in qs:
         want = srt[max(int(np.ceil(q * n)) - 1, 0)]
-        got = exact_quantile(df, "x", q, direct_limit=50)
+        got = exact_quantiles(df, "x", [q], direct_limit=50)[q]
         assert got == want, (q, got, want)
 
 
@@ -45,8 +45,6 @@ def test_nulls_excluded_before_ranking(spark):
     df = spark.createDataFrame(rows, "x double")
     got = exact_quantiles(df, "x", [0.5, 0.9], direct_limit=10)
     assert got[0.5] == 49.0 and got[0.9] == 89.0
-    # single-q wrapper sees the same semantics
-    assert exact_quantile(df, "x", 0.5, direct_limit=10) == 49.0
 
 
 def test_multi_rank_matches_and_shares_passes(spark):
@@ -54,7 +52,9 @@ def test_multi_rank_matches_and_shares_passes(spark):
     shared count+histogram means strictly fewer Spark jobs than even
     two independent calls."""
     df = spark.range(5000).select((F.col("id") * 37 % 997).cast("double").alias("x"))
-    singles = {q: exact_quantile(df, "x", q, direct_limit=100) for q in (0.5, 0.9, 0.99)}
+    singles = {
+        q: exact_quantiles(df, "x", [q], direct_limit=100)[q] for q in (0.5, 0.9, 0.99)
+    }
 
     sc = spark.sparkContext
 
@@ -74,7 +74,7 @@ def test_multi_rank_matches_and_shares_passes(spark):
         "quantile-multi",
     )
     n_single = jobs_for(
-        lambda: exact_quantile(df, "x", 0.5, direct_limit=100), "quantile-single"
+        lambda: exact_quantiles(df, "x", [0.5], direct_limit=100), "quantile-single"
     )
     assert multi_out == singles
     assert n_multi < 2 * n_single, (n_multi, n_single)
@@ -85,4 +85,4 @@ def test_matches_spark_sort_on_integers(spark):
     want = [r.x for r in df.orderBy("x").collect()]
     for q in (0.5, 0.95):
         k = max(int(np.ceil(q * len(want))) - 1, 0)
-        assert exact_quantile(df, "x", q, direct_limit=100) == want[k]
+        assert exact_quantiles(df, "x", [q], direct_limit=100)[q] == want[k]

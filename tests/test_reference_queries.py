@@ -6,7 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from vbpl_web_crawl_spark.operators.upsert import latest_wins, merge_upsert, soft_delete
+from vbpl_web_crawl_spark.operators.upsert import latest_wins, merge_upsert
 from vbpl_web_crawl_spark.plans.reference_queries import REFERENCE_QUERIES
 from vbpl_web_crawl_spark.sources.relational_gen import (
     GENERATORS,
@@ -70,17 +70,6 @@ def test_merge_upsert_idempotent(spark):
     once = merge_upsert(target, updates, ["id"], "updated_at")
     twice = merge_upsert(once, updates, ["id"], "updated_at")
     assert sorted(map(str, once.collect())) == sorted(map(str, twice.collect()))
-
-
-def test_soft_delete_then_query_excludes(spark):
-    target = spark.createDataFrame(
-        [(1, "a", None), (2, "b", None)], "id long, val string, deleted_at timestamp"
-    )
-    keys = spark.createDataFrame([(2,)], "id long")
-    out = soft_delete(target, keys, ["id"], "2024-01-01")
-    live = out.filter(F.col("deleted_at").isNull()).collect()
-    assert [r.id for r in live] == [1]
-    assert out.count() == 2  # row retained, only marked
 
 
 def test_latest_wins_deterministic_tiebreak(spark):

@@ -1,15 +1,10 @@
-"""Sectionizer W1-W5 against hand-written fixtures mirroring the
-reference parser semantics (/root/reference/app/service/vbpl.py:254-437,
-app/service/anle.py:231-257)."""
+"""Sectionizer (W1, W2, W4) against hand-written fixtures mirroring the
+reference parser semantics (app/service/vbpl.py:254-378)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from vbpl_web_crawl_spark.operators.sectionizer import (
-    extract_labeled_blocks,
-    extract_sub_parts,
-    sectionize,
-)
+from vbpl_web_crawl_spark.operators.sectionizer import sectionize
 
 DOC1 = [
     "NGHỊ ĐỊNH",
@@ -74,14 +69,6 @@ def test_content_stops_at_rule_and_appendix(lines_df):
     assert out[3].section_content == "Có hiệu lực từ ngày ký."
 
 
-def test_sub_parts_with_lookahead(lines_df):
-    parts = {r.sub_section_part_number: r for r in extract_sub_parts(lines_df).collect()}
-    assert set(parts) == {"I", "II"}
-    assert parts["I"].sub_section_part_title == "Mẫu tờ khai"
-    # title on next line when the marker line has none (vbpl.py:401-413)
-    assert parts["II"].sub_section_part_title == "Mẫu báo cáo"
-
-
 def test_reference_marker_variants(spark):
     """The reference's exact alternate marker forms (vbpl.py:36-43):
     'Phần hai' (no 'thứ'), 'Điều thứ N', and the OCR 'Mu.c' part
@@ -117,29 +104,6 @@ def test_name_overflow_rule(spark):
     assert out.section_name is None  # >=400 chars -> not a name (F17)
     assert long_name in out.section_content
     assert "Thân điều." in out.section_content
-
-
-def test_labeled_blocks_state_machine(spark):
-    rows = [
-        ("a1", 0, "QUYẾT ĐỊNH"),
-        ("a1", 1, "Tình huống án lệ:"),
-        ("a1", 2, "Nguyên đơn khởi kiện."),
-        ("a1", 3, "Bị đơn phản tố."),
-        ("a1", 4, "Giải pháp pháp lý:"),
-        ("a1", 5, "Tòa chấp nhận yêu cầu."),
-        ("a1", 6, "Ghi chú khác:"),
-        ("a1", 7, "Không thuộc nhãn nào."),
-    ]
-    df = spark.createDataFrame(rows, "doc_id string, line_no int, line string")
-    blocks = {
-        r.label: r.content
-        for r in extract_labeled_blocks(
-            df, ["Tình huống án lệ", "Giải pháp pháp lý"]
-        ).collect()
-    }
-    assert blocks["Tình huống án lệ"] == "Nguyên đơn khởi kiện.\nBị đơn phản tố."
-    assert blocks["Giải pháp pháp lý"] == "Tòa chấp nhận yêu cầu."
-    assert len(blocks) == 2  # the unlabeled header's lines are dropped
 
 
 def test_multiple_docs_partitioned(spark):

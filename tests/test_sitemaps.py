@@ -1,6 +1,6 @@
 """Sitemap protocol (crawl/sitemaps.py): entity escaping round-trip,
-spec chunking, sitemapindex, robots Sitemap: directives, loud failure
-on misaligned url entries, and the frontier-seed gate vs DuckDB."""
+spec chunking, loud failure on misaligned url entries, a sitemap-seeded
+crawl against the oracle, and the frontier-seed gate vs DuckDB."""
 
 from __future__ import annotations
 
@@ -9,13 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
-from vbpl_web_crawl_spark.crawl.sitemaps import (
-    parse_sitemap_directives,
-    parse_sitemap_index,
-    parse_sitemaps,
-    render_sitemap_index,
-    render_sitemaps,
-)
+from vbpl_web_crawl_spark.crawl.sitemaps import parse_sitemaps, render_sitemaps
 from vbpl_web_crawl_spark.plans.pipeline_queries10 import (
     _SITEMAP_SQL,
     q_sitemap_frontier_seed,
@@ -75,16 +69,6 @@ def test_literal_entity_text_not_double_decoded(spark):
     assert back[0]["url"] == "https://h/doc?q=&amp;x&lt;y"
 
 
-def test_sitemap_index_roundtrip(spark):
-    sm = render_sitemaps(_urls_df(spark), chunk_size=5)
-    idx = parse_sitemap_index(render_sitemap_index(sm)).collect()
-    want = {
-        (r["host"], f"https://{r['host']}/sitemap-{r['chunk']}.xml")
-        for r in sm.collect()
-    }
-    assert {(r["host"], r["sitemap_url"]) for r in idx} == want
-
-
 def test_misaligned_entries_fail_loudly(spark):
     xml = (
         '<?xml version="1.0"?><urlset>'
@@ -96,19 +80,6 @@ def test_misaligned_entries_fail_loudly(spark):
     df = spark.createDataFrame([("a", xml)], "host string, sitemap_xml string")
     with pytest.raises(Exception, match="missing lastmod/priority"):
         parse_sitemaps(df).collect()
-
-
-def test_robots_sitemap_directives():
-    txt = (
-        "User-agent: *\nDisallow: /private\nCrawl-delay: 2\n"
-        "Sitemap: https://vbpl.vn/sitemap-index.xml  # portal-wide\n"
-        "sitemap: https://m1.vbpl.vn/sm.xml\n"
-        "SiteMapX: https://not-a-directive\nSitemap:\n"
-    )
-    assert parse_sitemap_directives(txt) == (
-        "https://vbpl.vn/sitemap-index.xml",
-        "https://m1.vbpl.vn/sm.xml",
-    )
 
 
 def test_namespaced_real_world_sitemap_parses(spark):
@@ -124,38 +95,6 @@ def test_namespaced_real_world_sitemap_parses(spark):
     assert rows[0]["priority"] == pytest.approx(0.9)
 
 
-def test_full_discovery_chain(spark):
-    """robots.txt Sitemap: directive -> sitemapindex -> chunk sitemaps
-    -> frontier seed rows, each hop through the real parser of the
-    previous hop's rendered artifact."""
-    urls = _urls_df(spark, n=23)
-    sm = render_sitemaps(urls, chunk_size=4)
-    # hop 1: robots advertises each host's index URL
-    robots_txt = "User-agent: *\nDisallow: /private\n" + "".join(
-        f"Sitemap: https://{h}/sitemap-index.xml\n"
-        for h in ("h0.vbpl.vn", "h1.vbpl.vn", "h2.vbpl.vn")
-    )
-    advertised = parse_sitemap_directives(robots_txt)
-    assert len(advertised) == 3
-    # hop 2: each advertised index enumerates that host's chunk files
-    idx = parse_sitemap_index(render_sitemap_index(sm))
-    chunks_by_host = {}
-    for r in idx.collect():
-        chunks_by_host.setdefault(r["host"], set()).add(r["sitemap_url"])
-    assert set(chunks_by_host) == {f"h{i}.vbpl.vn" for i in range(3)}
-    assert sum(len(v) for v in chunks_by_host.values()) == sm.count()
-    # hop 3: parsing every chunk recovers the full URL universe
-    from vbpl_web_crawl_spark.crawl.sitemaps import seed_list_from_sitemaps
-
-    seeds = seed_list_from_sitemaps(parse_sitemaps(sm), doc_type="detail")
-    assert len(seeds) == 23
-    assert {u for u, _ in seeds} == {r["url"] for r in urls.collect()}
-    # priority-desc order holds
-    prios = {r["url"]: r["priority"] for r in urls.collect()}
-    got_p = [prios[u] for u, _ in seeds]
-    assert got_p == sorted(got_p, reverse=True)
-
-
 def test_sitemap_seeded_crawl_matches_oracle(spark, tmp_path):
     """End-to-end integration: listing URLs round-tripped through real
     sitemap XML seed the crawl ENGINE, and the same seed list drives
@@ -164,7 +103,6 @@ def test_sitemap_seeded_crawl_matches_oracle(spark, tmp_path):
     this exercises a crawl the default full-seed tests never run."""
     from vbpl_web_crawl_spark.crawl.engine import CrawlConfig, CrawlEngine
     from vbpl_web_crawl_spark.crawl.oracle import run_oracle
-    from vbpl_web_crawl_spark.crawl.sitemaps import seed_list_from_sitemaps
     from vbpl_web_crawl_spark.sources import synth_site as SITE
 
     site = SITE.SiteConfig(n_pages=2, docs_per_page=6, related_per_doc=2)
@@ -177,7 +115,12 @@ def test_sitemap_seeded_crawl_matches_oracle(spark, tmp_path):
         [("vbpl.vn", u, "2026-01-01", (i % 10) / 10.0) for i, (u, _) in enumerate(listing)],
         "host string, url string, lastmod string, priority double",
     )
-    seeds = seed_list_from_sitemaps(parse_sitemaps(render_sitemaps(urls)))
+    # the sitemap's priority decides seed order, and so discovery_seq
+    parsed = parse_sitemaps(render_sitemaps(urls))
+    seeds = [
+        (r.url, "listing")
+        for r in parsed.orderBy(F.col("priority").desc(), F.col("url")).collect()
+    ]
     assert {u for u, _ in seeds} == {u for u, _ in listing}
 
     cfg = CrawlConfig(

@@ -112,31 +112,6 @@ def test_spark_roundtrip_cdx(spark):
             pos += r["record_len"]
 
 
-def test_archive_files_and_cdx_point_read(spark, tmp_path):
-    from vbpl_web_crawl_spark.sources.warc import read_record_at, write_archive
-
-    docs = _docs_df(spark, parts=3)
-    segs = encode_segments(docs, 4)
-    out = str(tmp_path / "archive")
-    files = write_archive(segs, out)
-    assert files == [f"segment-{i:05d}.warc" for i in range(4)]
-    cdx = {r["doc_id"]: r for r in decode_segments(segs).collect()}
-    originals = {r["doc_id"]: bytes(r["payload"]) for r in docs.collect()}
-    for doc_id in (0, 7, 25, 52):  # spread across segments
-        r = cdx[doc_id]
-        rec = read_record_at(
-            f"{out}/segment-{r['segment']:05d}.warc", r["offset"], r["record_len"]
-        )
-        assert rec["doc_id"] == doc_id
-        assert rec["payload"] == originals[doc_id]
-    # a deliberately short range fails the parse, never returns junk
-    r = cdx[0]
-    with pytest.raises(ValueError):
-        read_record_at(
-            f"{out}/segment-{r['segment']:05d}.warc", r["offset"], r["record_len"] - 3
-        )
-
-
 def test_cdx_gate_matches_duckdb_oracle(spark):
     got = q_warc_cdx_index(spark, SF_DIR).toPandas()
     got = got.sort_values("doc_id").reset_index(drop=True)

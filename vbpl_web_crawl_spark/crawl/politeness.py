@@ -42,7 +42,9 @@ def parse_robots_txt(text: str, agent: str = "*") -> dict:
     ({"crawl_delay": float, "disallow": (prefixes,)}). Honors the
     longest-matching User-agent group (exact agent wins over '*'),
     Disallow path prefixes, and Crawl-delay; empty Disallow lines (allow
-    all) and comments are handled per the de-facto standard."""
+    all) and comments are handled per the de-facto standard. A
+    Crawl-delay that is not a finite non-negative number is ignored like
+    an unparsable one, so the default delay applies."""
     groups: dict[str, dict] = {}
     current: list[str] = []
     for raw in text.splitlines():
@@ -70,9 +72,11 @@ def parse_robots_txt(text: str, agent: str = "*") -> dict:
                         groups[ua]["disallow"].append(val)
                 else:
                     try:
-                        groups[ua]["crawl_delay"] = float(val)
+                        delay = float(val)
                     except ValueError:
-                        pass
+                        continue
+                    if _valid_delay(delay):
+                        groups[ua]["crawl_delay"] = delay
     chosen = groups.get(agent.lower()) or groups.get("*") or {
         "crawl_delay": None,
         "disallow": [],
@@ -85,7 +89,13 @@ def parse_robots_txt(text: str, agent: str = "*") -> dict:
     }
 
 
+def _valid_delay(crawl_delay: float) -> bool:
+    return math.isfinite(crawl_delay) and crawl_delay >= 0
+
+
 def host_budget(crawl_delay: float, round_window_s: float) -> int:
+    if not _valid_delay(crawl_delay):
+        raise ValueError(f"crawl delay must be finite and >= 0, got {crawl_delay!r}")
     # floor of the rounded quotient W / d, as Spark's floor(W / d) has
     # it (60 // 0.1 is 599, 60 / 0.1 rounds to 600.0), capped to the int
     # budget column, which Crawl-delay 0 would overflow

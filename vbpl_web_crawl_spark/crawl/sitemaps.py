@@ -1,7 +1,6 @@
 """Sitemap protocol (sitemaps.org) support: render per-host sitemap
-XML, parse sitemaps back into frontier seed rows, and extract the
-robots.txt ``Sitemap:`` directives that advertise them — the standard
-way a crawler discovers a site's URL universe without walking listing
+XML and parse sitemaps back into frontier seed rows — the standard way
+a crawler discovers a site's URL universe without walking listing
 pages.
 
 The reference crawler only walks paginated listing pages
@@ -22,12 +21,12 @@ REAL namespaced sitemaps (the generated XML carries the spec's
 XPath 1.0's namespace rules).
 
 Scale notes (100 TB): the spec caps a sitemap file at 50k URLs, so a
-host's URL set renders as consecutive chunks plus one sitemapindex —
-chunking is a pure function of the input (never of partitioning), the
-groupBy key is (host, chunk) so no single reducer sees more than one
-chunk, and parse is embarrassingly parallel over sitemap blobs.
-Malformed field cardinality (a <url> entry missing <lastmod>) fails
-loudly via assert_true instead of silently zipping misaligned arrays.
+host's URL set renders as consecutive chunks — chunking is a pure
+function of the input (never of partitioning), the groupBy key is
+(host, chunk) so no single reducer sees more than one chunk, and parse
+is embarrassingly parallel over sitemap blobs. Malformed field
+cardinality (a <url> entry missing <lastmod>) fails loudly via
+assert_true instead of silently zipping misaligned arrays.
 """
 
 from __future__ import annotations
@@ -44,19 +43,6 @@ def xml_escape(col: Column) -> Column:
     for raw, esc in (("<", "&lt;"), (">", "&gt;"), ('"', "&quot;"), ("'", "&apos;")):
         out = F.replace(out, F.lit(raw), F.lit(esc))
     return out
-
-
-def parse_sitemap_directives(text: str) -> tuple[str, ...]:
-    """``Sitemap:`` URLs from a robots.txt body. Per the protocol these
-    are global directives (not scoped to a User-agent group), so this
-    is a flat line scan; politeness.parse_robots_txt stays unchanged."""
-    out: list[str] = []
-    for raw in text.splitlines():
-        line = raw.split("#", 1)[0].strip()
-        key, sep, val = line.partition(":")
-        if sep and key.strip().lower() == "sitemap" and val.strip():
-            out.append(val.strip())
-    return tuple(out)
 
 
 def render_sitemaps(urls: DataFrame, chunk_size: int = 50_000) -> DataFrame:
@@ -104,31 +90,6 @@ def render_sitemaps(urls: DataFrame, chunk_size: int = 50_000) -> DataFrame:
     )
 
 
-def render_sitemap_index(sitemaps: DataFrame) -> DataFrame:
-    """(host, index_xml) — the per-host sitemapindex advertising every
-    chunk file, the URL robots.txt's ``Sitemap:`` line points at."""
-    loc = F.concat(
-        F.lit("<sitemap><loc>https://"),
-        F.col("host"),
-        F.lit("/sitemap-"),
-        F.col("chunk").cast("string"),
-        F.lit(".xml</loc></sitemap>"),
-    )
-    body = F.array_join(
-        F.transform(F.sort_array(F.collect_list(F.struct("chunk", loc.alias("l")))),
-                    lambda s: s["l"]),
-        "",
-    )
-    return sitemaps.groupBy("host").agg(
-        F.concat(
-            F.lit('<?xml version="1.0" encoding="UTF-8"?>'),
-            F.lit(f'<sitemapindex xmlns="{XMLNS}">'),
-            body,
-            F.lit("</sitemapindex>"),
-        ).alias("index_xml")
-    )
-
-
 def _xp(field: str) -> str:
     return (
         "/*[local-name()='urlset']/*[local-name()='url']"
@@ -169,37 +130,4 @@ def parse_sitemaps(sitemaps: DataFrame, xml_col: str = "sitemap_xml") -> DataFra
         F.col("r.loc").alias("url"),
         F.col("r.lastmod").alias("lastmod"),
         F.col("r.priority").cast("double").alias("priority"),
-    )
-
-
-def seed_list_from_sitemaps(
-    parsed: DataFrame, doc_type: str = "listing"
-) -> list[tuple[str, str]]:
-    """Collect parsed sitemap rows into the (url, doc_type) seed list
-    the crawl engine and its oracle both accept (CrawlConfig.seed_list
-    / run_oracle(seed_list=...)). Ordered by (priority desc, url) —
-    the sitemap's own importance signal decides seed order, which in
-    turn defines discovery_seq, so the same list drives both engine
-    and oracle to an identical crawl. Driver-side collect is fine:
-    seed lists are listing-page universes (thousands), not frontiers.
-    """
-    from pyspark.sql import functions as F
-
-    rows = (
-        parsed.select("url", "priority")
-        .orderBy(F.col("priority").desc(), F.col("url"))
-        .collect()
-    )
-    return [(r["url"], doc_type) for r in rows]
-
-
-def parse_sitemap_index(index: DataFrame, xml_col: str = "index_xml") -> DataFrame:
-    """(host, sitemap_url) rows out of sitemapindex XML."""
-    xp = (
-        "/*[local-name()='sitemapindex']/*[local-name()='sitemap']"
-        "/*[local-name()='loc']/text()"
-    )
-    return index.select(
-        "host",
-        F.explode(F.expr(f'xpath({xml_col}, "{xp}")')).alias("sitemap_url"),
     )

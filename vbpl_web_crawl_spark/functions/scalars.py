@@ -11,86 +11,6 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# --- F1: extract doc ID from an href (app/service/vbpl.py:29,140,679) ---
-
-
-def extract_item_id(href: Column) -> Column:
-    """``(?<=ItemID=)\\d+`` -> long; NULL when absent."""
-    return F.nullif(F.regexp_extract(href, r"ItemID=(\d+)", 1), F.lit("")).cast("long")
-
-
-# --- F4: file-id from URL (app/service/get_pdf.py:82-94) ---
-
-
-def extract_file_id(url: Column) -> Column:
-    attachments = F.regexp_extract(url, r"/Attachments/(\d+)/", 1)
-    ucm = F.regexp_extract(url, r"/UCMServer/(\w+)", 1)
-    return F.nullif(F.coalesce(F.nullif(attachments, F.lit("")), F.nullif(ucm, F.lit(""))), F.lit(""))
-
-
-# --- F5: filename from a Content-Disposition header (app/service/get_pdf.py:14-21) ---
-
-
-def extract_content_disposition_filename(header: Column) -> Column:
-    quoted = F.regexp_extract(header, r'filename="([^"]+)"', 1)
-    bare = F.regexp_extract(header, r"filename=([^;\s]+)", 1)
-    return F.nullif(F.coalesce(F.nullif(quoted, F.lit("")), F.nullif(bare, F.lit(""))), F.lit(""))
-
-
-# --- F12: snake <-> camel/Pascal key conversion (app/helper/utility.py:5-61) ---
-
-
-def snake_to_pascal(name: Column) -> Column:
-    """snake_case -> PascalCase (query-param construction in the ref)."""
-    parts = F.split(name, "_")
-    return F.array_join(F.transform(parts, lambda p: F.initcap(p)), "")
-
-
-def pascal_to_snake(name: Column) -> Column:
-    """PascalCase/camelCase -> snake_case."""
-    return F.lower(
-        F.regexp_replace(F.regexp_replace(name, r"(.)([A-Z][a-z]+)", "$1_$2"), r"([a-z0-9])([A-Z])", "$1_$2")
-    )
-
-
-# --- F14: URL percent-encoding (quote() at app/service/vbpl.py:848,1035) ---
-
-
-def url_encode(text: Column) -> Column:
-    return F.url_encode(text)
-
-
-# --- F6: double-extension cleanup (app/service/get_pdf.py:97-102) ---
-
-
-def clean_double_extension(name: Column) -> Column:
-    return F.regexp_replace(name, r"\.\.(docx|doc|pdf)$", ".$1")
-
-
-# --- F7: javascript:downloadfile('...') href -> URL (app/service/vbpl.py:1033-1035) ---
-
-
-def extract_download_href(href: Column) -> Column:
-    return F.nullif(F.regexp_extract(href, r"downloadfile\('[^']*'\s*,\s*'([^']+)'\)", 1), F.lit(""))
-
-
-# --- F8: dd/MM/yyyy parse, failure -> NULL (app/service/vbpl.py:553-558) ---
-
-
-def parse_vn_date(text: Column) -> Column:
-    return F.try_to_timestamp(F.trim(text), F.lit("dd/MM/yyyy"))
-
-
-# --- F10: d/M/yyyy (non-padded) -> date (app/helper/utility.py:86-98) ---
-
-
-def parse_vn_date_loose(text: Column) -> Column:
-    return F.coalesce(
-        F.try_to_timestamp(F.trim(text), F.lit("d/M/yyyy")),
-        F.try_to_timestamp(F.trim(text), F.lit("dd/MM/yyyy")),
-    )
-
-
 # --- F9: date -> zero-padded yyyy-MM-dd string (app/helper/utility.py:70-79) ---
 
 
@@ -121,10 +41,6 @@ def levenshtein_ratio(a: Column, b: Column) -> Column:
     """1 - lev(a,b)/max(len(a),len(b)); 1.0 for two empty strings."""
     denom = F.greatest(F.length(a), F.length(b), F.lit(1))
     return F.lit(1.0) - F.levenshtein(a, b).cast("double") / denom.cast("double")
-
-
-def fuzzy_match(a: Column, b: Column, threshold: float = 0.8) -> Column:
-    return levenshtein_ratio(a, b) >= F.lit(threshold)
 
 
 # --- F16: literal (non-regex) replace — watermark strip and the

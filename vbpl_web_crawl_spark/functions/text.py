@@ -13,23 +13,14 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Whitespace tokenization; the BPE-ish variant also splits punctuation
-# clusters so "don't," counts as 3 tokens — a cheap stand-in for a real
-# tokenizer's fertility that stays a pure regexp.
+# Whitespace tokenization.
 _WS = r"\s+"
-_BPE_ISH = r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"
 
 
 def token_count_ws(text: Column) -> Column:
     """Whitespace token count; 0 for empty/blank."""
     t = F.trim(text)
     return F.when(t == "", F.lit(0)).otherwise(F.size(F.split(t, _WS))).cast("int")
-
-
-def token_count_bpe_ish(text: Column) -> Column:
-    """Count of alnum runs + individual punctuation marks (regexp-based
-    BPE-ish proxy)."""
-    return F.size(F.regexp_extract_all(text, F.lit(f"({_BPE_ISH})"), 1)).cast("int")
 
 
 def punct_ratio(text: Column) -> Column:
@@ -93,21 +84,3 @@ def lang_id(text: Column, default: str = "en") -> Column:
     for lang in sorted(scores, reverse=True):
         result = F.when((scores[lang] == best) & (best > 0), F.lit(lang)).otherwise(result)
     return result
-
-
-def fingerprint64(text: Column) -> Column:
-    """Document fingerprint: xxhash64 of whitespace-normalized, lowercased
-    text — the exact-dedup key (rolling-hash stand-in that stays JVM-side)."""
-    return F.xxhash64(F.regexp_replace(F.lower(F.trim(text)), _WS, " "))
-
-
-def word_shingles(text: Column, k: int = 3) -> Column:
-    """k-word shingles as an array<string> (for MinHash / Jaccard dedup).
-
-    Built from split + transform + slice: stays JVM-side. Documents with
-    fewer than k words yield a single shingle of the whole text.
-    """
-    words = F.split(F.regexp_replace(F.lower(F.trim(text)), _WS, " "), " ")
-    n = F.size(words)
-    idx = F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1)))
-    return F.transform(idx, lambda i: F.array_join(F.slice(words, i, k), " "))

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _dot(x, y):
+def dot(x, y):
     # NOTE (r06): unrolling this fold into a 64-term Add chain was
     # measured 5-20x WORSE than the lambda (the mega-expression falls
     # out of whole-stage codegen); the HOF form is the fastest pure-
@@ -37,7 +37,7 @@ def _dot(x, y):
 
 
 def _cosine(x, y):
-    return _dot(x, y) / (F.sqrt(_dot(x, x)) * F.sqrt(_dot(y, y)))
+    return dot(x, y) / (F.sqrt(dot(x, x)) * F.sqrt(dot(y, y)))
 
 
 def assign_to_centroids(emb: DataFrame, centroids: DataFrame) -> DataFrame:

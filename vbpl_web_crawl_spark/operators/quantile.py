@@ -62,14 +62,6 @@ def exact_quantiles(
     return {q: got[_rank_of(q, n)] for q in qs}
 
 
-def exact_quantile(
-    df: DataFrame, col: str, q: float, direct_limit: int = _DIRECT_LIMIT
-) -> float:
-    """Exact discrete q-quantile of a numeric column (single-q wrapper
-    over :func:`exact_quantiles`)."""
-    return exact_quantiles(df, col, [q], direct_limit)[q]
-
-
 def _kth_smallest_multi(
     vals: DataFrame, n: int, ks: list[int], depth: int, direct_limit: int
 ) -> dict[int, float]:

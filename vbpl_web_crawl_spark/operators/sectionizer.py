@@ -1,5 +1,5 @@
 """Document sectionizer: the reference's stateful full-text parsers
-(W1-W5, SURVEY.md §2.5) re-expressed as pure window functions — no
+(W1, W2, W4; SURVEY.md §2.5) re-expressed as pure window functions — no
 per-row Python, no carried mutable state.
 
 Reference semantics reproduced (cites into /root/reference/):
@@ -12,8 +12,6 @@ Reference semantics reproduced (cites into /root/reference/):
   number+name parsed from the marker line (app/service/vbpl.py:293-378)
 - >=400-char name overflow: a "name" at the column limit is actually
   body text (app/service/vbpl.py:334-336)
-- appendix sub-parts from PHỤ LỤC onward: `Phụ lục <roman|digit>` parts,
-  title possibly on the next line — lookahead (app/service/vbpl.py:380-437)
 - name-on-next-line for chapters/parts (find_next_sibling('p'),
   app/service/vbpl.py:262-288) -> lead() over the same window
 
@@ -38,7 +36,6 @@ from pyspark.sql import functions as F
 #   _find_part_regex(_2)  '^Mục [IVX]+' / '^Mu.c [IVX]+' (OCR variant)
 #   _find_mini_part_regex '^Tiểu mục [IVX]+'
 #   _find_start_sub_part  '^PHỤ LỤC$'
-#   _find_sub_part_regex  '^Phụ(\s)*(\n)*lục [IVX]+'
 _ORDINALS = "nhất|hai|ba|bốn|năm|sáu|bảy|tám|chín|mười"
 RE_BIG_PART = rf"^Phần(?: thứ)? ({_ORDINALS})$"
 RE_CHAPTER = r"^Chương ([IVX]+)"
@@ -46,7 +43,6 @@ RE_PART = r"^(?:Mục|Mu.c) ([IVX]+)"
 RE_MINI_PART = r"^Tiểu mục ([IVX]+)"
 RE_SECTION = r"^Điều(?: thứ)? (\d+)\s*[.:]?\s*(.*)$"
 RE_APPENDIX = r"^PHỤ LỤC$"
-RE_SUB_PART = r"^Phụ\s*lục ([IVX]+)\s*[.:]?\s*(.*)$"
 RE_RULE = r"^_{3,}\s*$"
 
 NAME_OVERFLOW = 400  # app/service/vbpl.py:334-336
@@ -227,77 +223,3 @@ def sectionize(lines: DataFrame) -> DataFrame:
         "mini_part_name",
     )
     return out
-
-
-def extract_sub_parts(lines: DataFrame) -> DataFrame:
-    """W3: appendix sub-part parser (vbpl.py:380-437) -> vbpl_sub_part
-    rows (doc_id, sub_section_title, sub_section_part_number,
-    sub_section_part_title). Title falls back to the next line when the
-    marker line carries none (lookahead, vbpl.py:401-413)."""
-    w = _w()
-    df = lines.withColumn("line", F.trim(F.col("line")))
-    df = df.withColumn(
-        "appx_ln",
-        F.max(F.when(F.col("line").rlike(RE_APPENDIX), F.col("line_no"))).over(
-            w.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    ).withColumn("next_line", F.lead("line", 1).over(w))
-    in_appendix = F.col("appx_ln").isNotNull() & (F.col("line_no") >= F.col("appx_ln"))
-    title = _carry(
-        w,
-        F.col("line").rlike(RE_APPENDIX),
-        F.trim(F.regexp_replace("line", RE_APPENDIX, "")),
-    )
-    df = df.withColumn("appx_title", title)
-    parts = df.filter(in_appendix & F.col("line").rlike(RE_SUB_PART)).select(
-        "doc_id",
-        F.coalesce(F.nullif(F.col("appx_title"), F.lit("")), F.lit("PHỤ LỤC")).alias(
-            "sub_section_title"
-        ),
-        F.regexp_extract("line", RE_SUB_PART, 1).alias("sub_section_part_number"),
-        F.coalesce(
-            F.nullif(F.trim(F.regexp_extract("line", RE_SUB_PART, 2)), F.lit("")),
-            F.col("next_line"),
-        ).alias("sub_section_part_title"),
-    )
-    return parts
-
-
-def extract_labeled_blocks(lines: DataFrame, labels: list[str]) -> DataFrame:
-    """W5: PDF section state machine (anle.py:231-257) — text between a
-    `<label>:`-style header and the next `:`-terminated header becomes
-    that label's block. Output: (doc_id, label, content)."""
-    w = _w()
-    df = lines.withColumn("line", F.trim(F.col("line")))
-    label_expr = F.lit(None).cast("string")
-    for lab in labels:
-        label_expr = F.when(F.col("line").startswith(lab), F.lit(lab)).otherwise(label_expr)
-    is_header = F.col("line").rlike(r".+:\s*$")
-    df = (
-        df.withColumn("hdr_label", label_expr)
-        .withColumn("is_hdr", is_header | label_expr.isNotNull())
-        .withColumn(
-            "cur_label",
-            F.last(
-                F.when(
-                    F.col("is_hdr"),
-                    F.coalesce(F.col("hdr_label"), F.lit("__other__")),
-                ),
-                ignorenulls=True,
-            ).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-    )
-    body = df.filter(
-        F.col("cur_label").isNotNull()
-        & (F.col("cur_label") != "__other__")
-        & ~F.col("is_hdr")
-    )
-    return body.groupBy("doc_id", F.col("cur_label").alias("label")).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct(F.col("line_no"), F.col("line")))),
-                lambda s: s.getField("line"),
-            ),
-            "\n",
-        ).alias("content")
-    )

@@ -48,13 +48,3 @@ def merge_upsert(
         updates = updates.dropDuplicates(keys)
     kept = target.join(updates.select(*keys), keys, "left_anti")
     return kept.unionByName(updates.select(*target.columns))
-
-
-def soft_delete(target: DataFrame, keys_df: DataFrame, keys: list[str], deleted_at) -> DataFrame:
-    """Reference soft-delete: set deleted_at instead of removing
-    (app/model/base.py:41-44; filtered at query time base.py:76)."""
-    marked = target.join(keys_df.select(*keys).distinct(), keys, "left_semi").withColumn(
-        "deleted_at", F.lit(deleted_at).cast("timestamp")
-    )
-    untouched = target.join(keys_df.select(*keys).distinct(), keys, "left_anti")
-    return untouched.unionByName(marked)

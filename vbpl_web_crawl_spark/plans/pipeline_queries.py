@@ -24,8 +24,10 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from vbpl_web_crawl_spark.functions import text as TX
+from vbpl_web_crawl_spark.functions.text import _tokens
+from vbpl_web_crawl_spark.operators.ann import dot
 from vbpl_web_crawl_spark.plans.queries import _register
-from vbpl_web_crawl_spark.sources.tables import load_table
+from vbpl_web_crawl_spark.sources.tables import load_table, spread
 
 # Shared normalization (must match the SQL fragments below exactly).
 _NORM_SQL = "regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')"
@@ -34,10 +36,6 @@ _TOKENS_SQL = f"string_split({_NORM_SQL}, ' ')"
 
 def _norm(text):
     return F.regexp_replace(F.lower(F.trim(text)), r"\s+", " ")
-
-
-def _tokens(text):
-    return F.split(_norm(text), " ")
 
 
 # ---------------------------------------------------------------------------
@@ -67,8 +65,6 @@ FROM t GROUP BY lang
 """,
 )
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vbpl_web_crawl_spark.sources.tables import spread
-
     docs = spread(
         load_table(spark, sf_dir, "documents").select("lang", "text")
     )
@@ -151,8 +147,6 @@ GROUP BY norm_text
 """,
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vbpl_web_crawl_spark.sources.tables import spread
-
     docs = spread(
         load_table(spark, sf_dir, "documents").select("doc_id", "n_chars", "text")
     )
@@ -215,8 +209,6 @@ def capped_shingles(docs: DataFrame, k: int = 3, df_cap: int = NGRAM_DF_CAP) -> 
     fewer than k tokens contribute NO shingles (identically in the
     SQL oracle) — they are covered by the exact-dedup path."""
     from pyspark.sql import Window
-
-    from vbpl_web_crawl_spark.sources.tables import spread
 
     # Spread the COMPACT rows before tokenize+explode (guide §2.3/§8):
     # the corpus arrives as one row group per file at bench SFs, so
@@ -624,8 +616,6 @@ def q_quality_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     constant is what survives the 100x)."""
     from pyspark.sql import Window
 
-    from vbpl_web_crawl_spark.sources.tables import spread
-
     docs = spread(
         load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text"),
         "doc_id",
@@ -729,8 +719,6 @@ FROM bits
 """,
 )
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vbpl_web_crawl_spark.sources.tables import spread
-
     docs = spread(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
@@ -764,10 +752,10 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # The block count is SIZED FROM CORPUS n (simhash_band_plan), not fixed:
 # the effective key is bits*(b-r)/b wide, so b is the smallest block
 # count >= r+1 whose key width covers log2(n / target_bucket) — buckets
-# stay near a constant target as n grows (same spirit as lsh_params
-# below) and the per-bucket self-join never degenerates quadratic. At
-# n = 10^9, r = 3: b = 5, C(5,3) = 10 tables, 24-bit keys. 60 bits (15
-# hex chars of md5) keeps the hash BIGINT-safe in both engines.
+# stay near a constant target as n grows and the per-bucket self-join
+# never degenerates quadratic. At n = 10^9, r = 3: b = 5, C(5,3) = 10
+# tables, 24-bit keys. 60 bits (15 hex chars of md5) keeps the hash
+# BIGINT-safe in both engines.
 # ---------------------------------------------------------------------------
 
 _SIMHASH_BITS_ND = 60
@@ -927,20 +915,11 @@ LIMIT 10
 """,
 )
 def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vbpl_web_crawl_spark.sources.tables import spread
-
     emb = load_table(spark, sf_dir, "embeddings")
     qv = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qv"))
     # spread: one row group -> one scan task would serialize the HOF
     # dot products (guide §2.4); TakeOrderedAndProject stays per-task
     e = spread(emb.filter(F.col("vec_id") != 0))
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a.cast("double") * b.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
 
     joined = e.crossJoin(F.broadcast(qv))
     cos = dot(F.col("embedding"), F.col("qv")) / (
@@ -977,71 +956,14 @@ def _plane(h: int) -> list[int]:
     return [1 if (int(splitmix64(h * 1024 + d)) >> 13) & 1 else -1 for d in range(_DIM)]
 
 
-# --- n -> (planes, tables) rule for sign-LSH blocking -----------------
-#
-# A FIXED plane count degenerates at scale: with p planes the expected
-# bucket holds n / 2^p vectors and the bucket self-join is quadratic in
-# that. Keep the bucket near a constant target instead:
-#
-#     planes(n)  = ceil(log2(n / target_bucket))         (>= 1)
-#
-# More planes cut recall for a single table — P(pair with cosine tau
-# shares a bucket) = (1 - acos(tau)/pi)^planes — so recall is restored
-# with T independent tables (band-OR, multi-probe's batch form):
-#
-#     tables(n)  = ceil( ln(1 - recall) / ln(1 - p_same^planes) )
-#
-# Candidate cost is then O(n * tables * target_bucket) — linear in n —
-# while recall stays >= the floor by construction. Property-tested in
-# tests/test_properties.py::test_embedding_lsh_recall_floor.
-
-
-def lsh_params(
-    n_vectors: int,
-    target_bucket: int = 256,
-    tau: float = 0.8,
-    recall: float = 0.9,
-) -> tuple[int, int]:
-    """(planes, tables) for sign-LSH near-dup blocking at corpus size n."""
-    import math
-
-    planes = max(1, math.ceil(math.log2(max(n_vectors, 2) / target_bucket)))
-    p_same = 1.0 - math.acos(tau) / math.pi
-    p_bucket = p_same**planes
-    tables = max(1, math.ceil(math.log(1.0 - recall) / math.log(1.0 - p_bucket)))
-    return planes, tables
-
-
-def embedding_lsh_candidate_pairs(emb: DataFrame, planes: int, tables: int) -> DataFrame:
-    """Candidate (vec_a, vec_b) pairs sharing a sign-LSH bucket in ANY of
-    ``tables`` independent plane sets (band-OR). Each table's bucket join
-    is bounded by bucket size; the union is deduplicated on the pair."""
-
-    def dot_plane(col, h: int):
-        plane = F.array(*[F.lit(float(v)) for v in _plane(h)])
-        return F.aggregate(
-            F.zip_with(col, plane, lambda a, b: a.cast("double") * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    out = None
-    for t in range(tables):
-        bucket = None
-        for j in range(planes):
-            h = t * planes + j  # independent hyperplanes per table
-            term = F.when(dot_plane(F.col("embedding"), h) > 0, F.lit(1 << j)).otherwise(
-                F.lit(0)
-            )
-            bucket = term if bucket is None else bucket + term
-        b = emb.select("vec_id", bucket.alias("bucket"))
-        x = b.select(F.col("vec_id").alias("vec_a"), "bucket")
-        y = b.select(F.col("vec_id").alias("vec_b"), "bucket")
-        pairs = x.join(y, ["bucket"]).filter(F.col("vec_a") < F.col("vec_b")).select(
-            "vec_a", "vec_b"
-        )
-        out = pairs if out is None else out.unionByName(pairs)
-    return out.distinct()
+def _dot_plane(col, h: int):
+    """Dot product of an embedding column with hyperplane ``h``."""
+    plane = F.array(*[F.lit(float(v)) for v in _plane(h)])
+    return F.aggregate(
+        F.zip_with(col, plane, lambda a, b: a.cast("double") * b),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
 
 
 _PLANES_SQL = ", ".join(
@@ -1086,24 +1008,9 @@ WHERE list_cosine_similarity(x.v, y.v) >= {_NEARDUP_TAU}
 def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
 
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a.cast("double") * b.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
-    def dot_plane(col, h: int):
-        plane = F.array(*[F.lit(float(v)) for v in _plane(h)])
-        return F.aggregate(
-            F.zip_with(col, plane, lambda a, b: a.cast("double") * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     bucket = None
     for h in range(_NEARDUP_PLANES):
-        term = F.when(dot_plane(F.col("embedding"), h) > 0, F.lit(1 << h)).otherwise(F.lit(0))
+        term = F.when(_dot_plane(F.col("embedding"), h) > 0, F.lit(1 << h)).otherwise(F.lit(0))
         bucket = term if bucket is None else bucket + term
     b = emb.select("vec_id", "embedding", bucket.alias("bucket"))
     x = b.select(
@@ -1163,13 +1070,6 @@ def q_ann_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a.cast("double") * b.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
 
     scored = (
         emb.crossJoin(F.broadcast(queries))
@@ -1325,21 +1225,11 @@ FROM dots GROUP BY 1
 """,
 )
 def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vbpl_web_crawl_spark.sources.tables import spread
-
     emb = spread(load_table(spark, sf_dir, "embeddings").select("embedding"))
-
-    def dot_plane(h: int):
-        plane = F.array(*[F.lit(float(v)) for v in _plane(h)])
-        return F.aggregate(
-            F.zip_with(F.col("embedding"), plane, lambda a, b: a.cast("double") * b),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
 
     bucket = None
     for h in range(_N_PLANES):
-        term = F.when(dot_plane(h) > 0, F.lit(1 << h)).otherwise(F.lit(0))
+        term = F.when(_dot_plane(F.col("embedding"), h) > 0, F.lit(1 << h)).otherwise(F.lit(0))
         bucket = term if bucket is None else bucket + term
     return emb.groupBy(bucket.cast("long").alias("bucket")).agg(
         F.count(F.lit(1)).alias("n_vectors")
@@ -1433,9 +1323,7 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     # parquet file -> one task); spread them so the gram pass runs
     # parallel. At corpus scale the scan already yields >= parallelism
     # splits (maxPartitionBytes) and no shuffle is added here.
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
+    src = spread(src)
 
     def fp_batches(it):
         from numpy.lib.stride_tricks import sliding_window_view
@@ -1995,8 +1883,6 @@ def q_dup_span_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_table(spark, sf_dir, "documents")
     k = DUP_SPAN_K
-    from vbpl_web_crawl_spark.sources.tables import spread
-
     # spread compact rows before tokenize+explode (single-row-group
     # scan, guide §2.3/§8); hash(doc_id) feeds the lead() window and
     # the (doc_id, lang, h) aggregation with no further exchange
@@ -2592,8 +2478,6 @@ FROM red GROUP BY lang
 """,
 )
 def q_pii_redaction_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vbpl_web_crawl_spark.sources.tables import spread
-
     docs = spread(
         load_table(spark, sf_dir, "documents").select("doc_id", "lang", "text")
     )
@@ -2667,8 +2551,6 @@ SELECT * FROM (
 """,
 )
 def q_quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from vbpl_web_crawl_spark.sources.tables import spread
-
     docs = spread(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )

@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from vbpl_web_crawl_spark.plans.queries import _register
-from vbpl_web_crawl_spark.sources.tables import load_table
+from vbpl_web_crawl_spark.sources.tables import load_table, spread
 
 # ---------------------------------------------------------------------------
 # Exact-substring duplicate span removal (Lee et al. 2022 §4: delete
@@ -254,9 +254,7 @@ def strided_gram_fps(docs: DataFrame) -> DataFrame:
             yield pd.DataFrame({"source": srcs, "fp": fps})
 
     src = docs.select("source", "text")
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if src.rdd.getNumPartitions() < par:
-        src = src.repartition(par)
+    src = spread(src)
     return src.mapInPandas(fp_batches, "source string, fp string").distinct()
 
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from vbpl_web_crawl_spark.operators.ann import dot
 from vbpl_web_crawl_spark.plans import pipeline_queries as PQ
 from vbpl_web_crawl_spark.plans.queries import ORACLES, QUERIES, _register
 from vbpl_web_crawl_spark.sources.tables import load_table
@@ -167,13 +168,6 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         [(c, [float(v) for v in PQ._ivf_centroid(c)]) for c in range(PQ._IVF_K)],
         "cid int, centroid array<double>",
     )
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a.cast("double") * b.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-
     # materialize the assignment ONCE (it feeds both pair sides and the
     # final rollup — without this the 16-row-broadcast argmin pass runs
     # 3x), and carry each vector's norm out of the pair loop: the pair

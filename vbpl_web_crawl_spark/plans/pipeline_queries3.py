@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vbpl_web_crawl_spark.operators.ann import dot
 from vbpl_web_crawl_spark.operators.sequence import grouped_cumsum
 from vbpl_web_crawl_spark.plans import pipeline_queries as PQ
 from vbpl_web_crawl_spark.plans.queries import _register
@@ -501,13 +502,6 @@ def q_alignment_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding vs its label anchor (min vec_id), kept-pair counts at
     thresholds 0.0 / 0.2 / 0.4 and the drift-free mean score."""
     emb = load_table(spark, sf_dir, "embeddings")
-
-    def dot(x, y):
-        return F.aggregate(
-            F.zip_with(x, y, lambda a, b: a.cast("double") * b.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
 
     anchors = emb.groupBy("label").agg(
         F.min_by("embedding", "vec_id").alias("av")

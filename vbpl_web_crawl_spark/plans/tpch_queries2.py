@@ -59,11 +59,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from vbpl_web_crawl_spark.plans.queries import _register
+from vbpl_web_crawl_spark.plans.tpch_queries import _ts
 from vbpl_web_crawl_spark.sources.tables import load_table
-
-
-def _ts(s: str):
-    return F.lit(s).cast("timestamp")
 
 
 def _cents(col) -> F.Column:

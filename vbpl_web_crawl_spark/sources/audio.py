@@ -5,7 +5,7 @@ extraction.
 
 Role (task brief "multimodal columns"): audio travels as an opaque
 ``binary`` column with typed metadata (sample_rate, n_samples,
-n_channels, fmt); decode / feature-extract / resample run as pandas
+n_channels, fmt); decode and feature extraction run as pandas
 UDFs over ``mapInPandas`` — per-file loops live inside Arrow batches,
 the same pattern as the image corpus (sources/images.py). WAV is a real
 interchange format, so unlike the image side there is no stand-in here:
@@ -354,12 +354,3 @@ def audio_features(samples: np.ndarray) -> dict:
         "peak": int(np.max(np.abs(x))),
         "dominant_freq_hz": dom_bin * SAMPLE_RATE / n,
     }
-
-
-def resample_2x_down(samples: np.ndarray) -> np.ndarray:
-    """Cheap deterministic 2x downsample (mean of sample pairs) — the
-    audio analog of the image thumbnail stage."""
-    x = samples if samples.ndim == 2 else samples[:, None]
-    n = (x.shape[0] // 2) * 2
-    pairs = x[:n].astype(np.int32).reshape(-1, 2, x.shape[1])
-    return (pairs.mean(axis=1)).astype(np.int16)

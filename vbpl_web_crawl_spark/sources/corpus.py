@@ -280,36 +280,3 @@ def sample_frames(videos: DataFrame, stride: int = 4) -> DataFrame:
             yield pd.DataFrame(rows, columns=[f.name for f in FRAME_SCHEMA.fields])
 
     return videos.mapInPandas(run, FRAME_SCHEMA)
-
-
-def resize_to_thumbnail(corpus: DataFrame, size: int = 32) -> DataFrame:
-    """Resize stage (block-mean downsample; PIL-free) -> thumbnail
-    binary column. Shows the transform-and-reencode batch shape."""
-    out_schema = T.StructType(
-        [
-            T.StructField("image_id", T.StringType(), False),
-            T.StructField("thumb_png", T.BinaryType(), False),
-        ]
-    )
-
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from vbpl_web_crawl_spark.sources import images as IMG
-
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples(index=False):
-                px = IMG.decode_image(bytes(r.bytes), r.fmt)
-                h, w, _ = px.shape
-                bh, bw = max(h // size, 1), max(w // size, 1)
-                small = (
-                    px[: bh * size, : bw * size]
-                    .reshape(size, bh, size, bw, 3)
-                    .mean(axis=(1, 3))
-                    .astype(np.uint8)
-                )
-                rows.append({"image_id": r.image_id, "thumb_png": IMG.png_encode(small)})
-            yield pd.DataFrame(rows, columns=["image_id", "thumb_png"])
-
-    return corpus.mapInPandas(run, out_schema)

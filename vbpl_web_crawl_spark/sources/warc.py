@@ -224,56 +224,6 @@ def encode_segments(docs: DataFrame, n_segments: int = 16) -> DataFrame:
     return keyed.groupBy("segment").applyInPandas(_build, _SEGMENT_SCHEMA)
 
 
-def write_archive(segments: DataFrame, out_dir: str) -> list[str]:
-    """Write each segment blob as a real ``segment-<n>.warc`` file,
-    executor-side (one file per segment row, written by the task that
-    holds the blob — the driver never sees archive bytes). Returns the
-    written file names.
-
-    Local-filesystem writes here (this sandbox); on a cluster the same
-    per-partition loop targets shared storage — segment files are
-    append-once immutable, so object stores are fine. The point of the
-    layout: a CDX row (segment, offset, record_len) turns any record
-    lookup into ONE ranged read of one file (:func:`read_record_at`),
-    never a container scan.
-    """
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-
-    def _write(pdf_it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        names = []
-        for pdf in pdf_it:
-            for seg, blob in zip(pdf["segment"], pdf["warc"]):
-                name = f"segment-{int(seg):05d}.warc"
-                tmp = os.path.join(out_dir, f".{name}.tmp")
-                with open(tmp, "wb") as fh:
-                    fh.write(bytes(blob))
-                os.replace(tmp, os.path.join(out_dir, name))  # atomic publish
-                names.append(name)
-        yield pd.DataFrame({"file": names})
-
-    out = segments.select("segment", "warc").mapInPandas(
-        _write, "file string"
-    )
-    return sorted(r["file"] for r in out.collect())
-
-
-def read_record_at(path: str, offset: int, record_len: int) -> dict:
-    """Point-read ONE record out of a segment file via its CDX entry —
-    a single ranged read (seek + read record_len), then the same
-    digest-verifying parse. This is the 100 TB lookup path: CDX
-    equi-join narrows to (file, offset, length), storage serves the
-    byte range, nothing else is touched."""
-    with open(path, "rb") as fh:
-        fh.seek(offset)
-        blob = fh.read(record_len)
-    recs = parse_segment(blob)
-    if len(recs) != 1:
-        raise ValueError(f"expected one record at {path}:{offset}, got {len(recs)}")
-    return recs[0]
-
-
 def decode_segments(segments: DataFrame) -> DataFrame:
     """CDX rows parsed (and digest-verified) back out of segment blobs."""
 

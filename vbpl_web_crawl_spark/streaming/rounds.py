@@ -1,12 +1,6 @@
 """Structured Streaming equivalents of the reference's iterative
 semantics (SURVEY.md §2.9).
 
-The reference's `while True` re-crawl loop (main.py:13-20) maps to
-incremental batch rounds with Trigger.AvailableNow: each invocation
-drains whatever new input exists and stops — T1 semantics without a
-long-lived process. Late/duplicate data is handled by the upsert layer
-(T6: operators/upsert.merge_upsert = Iceberg MERGE).
-
 `windowed_event_agg` is the streaming aggregation shape (watermark +
 tumbling window). With AvailableNow over a static source it produces
 exactly the batch answer — which is what makes it oracle-checkable —
@@ -71,27 +65,3 @@ def windowed_event_agg(
     )
     q.awaitTermination()
     return spark.table(name)
-
-
-def incremental_round_stream(
-    spark: SparkSession, frontier_dir: str, out_dir: str, ckpt_dir: str
-) -> None:
-    """Streaming frontier drain (the crawl's T1 loop as a stream): new
-    frontier files appear -> fetch stage consumes them incrementally.
-    foreachBatch keeps the batch-engine code (anti-join, politeness)
-    unchanged per micro-batch — the recommended pattern for stateful
-    pipelines that need full DataFrame semantics per round."""
-    from vbpl_web_crawl_spark.crawl.engine import FRONTIER_SCHEMA
-
-    stream = spark.readStream.schema(FRONTIER_SCHEMA).parquet(frontier_dir)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(os.path.join(out_dir, f"batch={batch_id}"))
-
-    q = (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", ckpt_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
