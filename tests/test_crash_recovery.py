@@ -32,9 +32,9 @@ class _CrashingEngine(CrawlEngine):
         super().__init__(spark, cfg, ckpt)
         self.crash_round = crash_round
 
-    def _write_state(self, rnd, live, deltas, counters):
+    def _write_state(self, rnd, *args):
         if rnd != self.crash_round:
-            return super()._write_state(rnd, live, deltas, counters)
+            return super()._write_state(rnd, *args)
         real_commit = fsio.commit_manifest
         try:
             # let every data write happen, swallow only the commit
@@ -42,7 +42,7 @@ class _CrashingEngine(CrawlEngine):
                 _CrashAfterWrites()
             )
             with pytest.raises(_CrashAfterWrites):
-                super()._write_state(rnd, live, deltas, counters)
+                super()._write_state(rnd, *args)
         finally:
             fsio.commit_manifest = real_commit
         raise _CrashAfterWrites()

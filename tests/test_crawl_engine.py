@@ -6,8 +6,9 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from vbpl_web_crawl_spark.crawl.engine import CrawlConfig, CrawlEngine
+from vbpl_web_crawl_spark.crawl.engine import MAX_RETRIES, CrawlConfig, CrawlEngine
 from vbpl_web_crawl_spark.crawl.oracle import run_oracle
+from vbpl_web_crawl_spark.operators import seen as SEEN
 from vbpl_web_crawl_spark.sources import images as IMG
 from vbpl_web_crawl_spark.sources import synth_site as SITE
 
@@ -21,19 +22,44 @@ CFG = CrawlConfig(
         private_every=5,
     ),
     round_window_s=30.0,
-    max_retries=3,
     n_seen_partitions=4,
     bloom_bits=1 << 16,
 )
 
 
 @pytest.fixture(scope="module")
-def crawl(spark, tmp_path_factory):
+def gated_crawl(spark, tmp_path_factory):
+    """The crawl, with a spy on the unseen gate: per call, the retry
+    count of the candidates it gets, the seen hashes it gets, and the
+    seen set committed before the round."""
     ckpt = str(tmp_path_factory.mktemp("ckpt"))
     eng = CrawlEngine(spark, CFG, ckpt)
-    manifest = eng.run()
-    oracle = run_oracle(CFG.site, CFG.robots, CFG.round_window_s, CFG.max_retries)
-    return eng, manifest, oracle
+    calls = []
+    real = SEEN.filter_unseen
+
+    def spy(candidates, seen_urls, *args, **kwargs):
+        committed = eng.read_manifest()
+        expected = eng.read_seen(committed["round"], committed["seen_base_round"])
+        calls.append(
+            {
+                "round": committed["round"] + 1,
+                "retries": candidates.filter(F.col("retry_count") > 0).count(),
+                "seen": {r.url_hash for r in seen_urls.select("url_hash").collect()},
+                "expected": {r.url_hash for r in expected.collect()},
+            }
+        )
+        return real(candidates, seen_urls, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(SEEN, "filter_unseen", spy)
+        manifest = eng.run()
+    oracle = run_oracle(CFG.site, CFG.robots, CFG.round_window_s, MAX_RETRIES)
+    return eng, manifest, oracle, calls
+
+
+@pytest.fixture(scope="module")
+def crawl(gated_crawl):
+    return gated_crawl[:3]
 
 
 def test_visit_order_matches_oracle(crawl):
@@ -83,6 +109,18 @@ def test_retries_requeued_and_succeed(crawl):
     again = vl.join(f, (vl.url == f.u) & (vl.retry_count == f.rc + 1), "inner")
     assert again.count() == failed.count()
     assert again.filter(F.col("status") == 200).count() == failed.count()
+
+
+def test_retries_skip_the_seen_gate(gated_crawl):
+    """Retries go straight into the next frontier, and the unseen gate
+    checks the new links against the seen set as committed: no hash is
+    taken out of it for the round."""
+    eng, manifest, _, calls = gated_crawl
+    assert [c["round"] for c in calls] == list(range(1, manifest["round"] + 1))
+    assert eng.final_state()["visit_log"].filter(F.col("retry_count") > 0).count() > 0
+    for c in calls:
+        assert c["retries"] == 0, c["round"]
+        assert c["seen"] == c["expected"], c["round"]
 
 
 def test_documents_corpus_invariants(crawl):
@@ -210,7 +248,7 @@ def test_docmap_title_search_fallback(spark, tmp_path_factory):
     ckpt = str(tmp_path_factory.mktemp("ckpt_docmap"))
     eng = CrawlEngine(spark, cfg, ckpt)
     eng.run(resume=False)
-    oracle = run_oracle(cfg.site, cfg.robots, cfg.round_window_s, cfg.max_retries)
+    oracle = run_oracle(cfg.site, cfg.robots, cfg.round_window_s, MAX_RETRIES)
     state = eng.final_state()
     order = [r.url for r in state["visit_log"].orderBy("visit_seq").select("url").collect()]
     assert order == oracle.visit_order
@@ -240,7 +278,7 @@ def test_compaction_and_gc_preserve_state(spark, tmp_path_factory):
     ckpt = str(tmp_path_factory.mktemp("ckpt_compact"))
     eng = CrawlEngine(spark, cfg, ckpt)
     manifest = eng.run()
-    oracle = run_oracle(cfg.site, cfg.robots, cfg.round_window_s, cfg.max_retries)
+    oracle = run_oracle(cfg.site, cfg.robots, cfg.round_window_s, MAX_RETRIES)
     state = eng.final_state()
     assert {r.url for r in state["enqueue_log"].select("url").collect()} == oracle.seen
     assert state["seen_urls"].count() == len(oracle.seen)
@@ -392,7 +430,7 @@ def test_fresh_run_over_stale_checkpoint_wipes_old_state(spark, tmp_path_factory
     fresh = CrawlEngine(spark, small_cfg, ckpt)
     m_fresh = fresh.run(resume=False)
     oracle = run_oracle(
-        small_cfg.site, small_cfg.robots, small_cfg.round_window_s, small_cfg.max_retries
+        small_cfg.site, small_cfg.robots, small_cfg.round_window_s, MAX_RETRIES
     )
     # the manifest read back is the fresh run's, not the old crawl's
     assert fresh.read_manifest()["round"] == m_fresh["round"]
@@ -416,7 +454,7 @@ def test_gc_tolerates_orphan_tmp_dirs(spark, tmp_path_factory):
     os.makedirs(os.path.join(ckpt, "state", "round=7.tmp"), exist_ok=True)
     resumed = CrawlEngine(spark, cfg, ckpt)
     m = resumed.run(resume=True)  # GC runs every commit; must not raise
-    oracle = run_oracle(cfg.site, cfg.robots, cfg.round_window_s, cfg.max_retries)
+    oracle = run_oracle(cfg.site, cfg.robots, cfg.round_window_s, MAX_RETRIES)
     state = resumed.final_state()
     assert m["round"] >= 2
     assert {r.url for r in state["enqueue_log"].select("url").collect()} == oracle.seen
@@ -466,7 +504,6 @@ def test_intra_round_pacing_meters_crawl_delay(spark, tmp_path_factory):
         site=site,
         robots=robots,
         round_window_s=30.0,
-        max_retries=3,
         n_seen_partitions=4,
         bloom_bits=1 << 16,
         pace_fetches=True,
@@ -474,7 +511,7 @@ def test_intra_round_pacing_meters_crawl_delay(spark, tmp_path_factory):
     ckpt = str(tmp_path_factory.mktemp("ckpt_paced"))
     eng = CrawlEngine(spark, cfg, ckpt)
     eng.run()
-    oracle = run_oracle(cfg.site, cfg.robots, cfg.round_window_s, cfg.max_retries)
+    oracle = run_oracle(cfg.site, cfg.robots, cfg.round_window_s, MAX_RETRIES)
     state = eng.final_state()
     order = [r.url for r in state["visit_log"].orderBy("visit_seq").select("url").collect()]
     assert order == oracle.visit_order

@@ -7,7 +7,7 @@ fetch_partitions override in effect (more tasks than per_host_slots)."""
 import pytest
 from pyspark.sql import functions as F
 
-from vbpl_web_crawl_spark.crawl.engine import CrawlConfig, CrawlEngine
+from vbpl_web_crawl_spark.crawl.engine import MAX_RETRIES, CrawlConfig, CrawlEngine
 from vbpl_web_crawl_spark.crawl.oracle import run_oracle
 from vbpl_web_crawl_spark.sources import synth_site as SITE
 
@@ -25,7 +25,6 @@ CFG = CrawlConfig(
     ),
     robots=SITE.mirrored_robots(SITE.ROBOTS, N_MIRRORS),
     round_window_s=30.0,
-    max_retries=3,
     n_seen_partitions=4,
     per_host_slots=4,
     fetch_partitions=16,  # > slots: salt still bounds per-host tasks
@@ -38,7 +37,7 @@ def crawl(spark, tmp_path_factory):
     ckpt = str(tmp_path_factory.mktemp("ckpt_m"))
     eng = CrawlEngine(spark, CFG, ckpt)
     manifest = eng.run()
-    oracle = run_oracle(CFG.site, CFG.robots, CFG.round_window_s, CFG.max_retries)
+    oracle = run_oracle(CFG.site, CFG.robots, CFG.round_window_s, MAX_RETRIES)
     return eng, manifest, oracle
 
 

@@ -7,12 +7,14 @@ flight leaves no writer behind and resumes to the oracle's crawl."""
 
 import os
 import threading
+import time
 
 import pytest
 
 from vbpl_web_crawl_spark.crawl.engine import (
     FRONTIER_SCHEMA,
     LOG_SCHEMAS,
+    MAX_RETRIES,
     CrawlConfig,
     CrawlEngine,
 )
@@ -119,29 +121,48 @@ def test_declared_schemas_match_the_files(spark, grouped_crawl):
 
 
 def test_failed_round_drains_early_writes_then_resumes(spark, tmp_path, monkeypatch):
+    """Round 1 raises in its expand phase with its three fetch-log
+    writes in flight: run() returns only after they finish, with no
+    write thread left, and the crawl resumes from round 0."""
     ckpt = str(tmp_path / "ckpt")
     eng = CrawlEngine(spark, CFG, ckpt)
-    in_flight = []
+    real_write = CrawlEngine._write
+    release = threading.Event()
+    started, done, in_flight = [], [], []
+
+    def write(self, df, path):
+        if path.endswith(f"{os.sep}r=1"):  # round 1's log writes wait
+            started.append(path)
+            release.wait(60)
+        real_write(self, df, path)
+        done.append(path)
 
     class _ExpandFailed(Exception):
         pass
 
     def fail(*args, **kwargs):
-        in_flight.append(len(eng._early_writes))
+        deadline = time.monotonic() + 60
+        while len(started) < 3 and time.monotonic() < deadline:
+            time.sleep(0.05)
+        in_flight.append(len(started))
+        # let the writes go on only once the round is unwinding
+        threading.Timer(0.5, release.set).start()
         raise _ExpandFailed()
 
+    monkeypatch.setattr(CrawlEngine, "_write", write)
     monkeypatch.setattr(SEEN, "filter_unseen", fail)
     with pytest.raises(_ExpandFailed):
         eng.run(resume=False)
     assert in_flight == [3], "round 1 must fail with its three fetch-log writes submitted"
-    alive = [t.name for t in threading.enumerate() if t.name.startswith("crawl-early-write")]
+    assert set(started) <= set(done), "run() returned with writes still in flight"
+    alive = [t.name for t in threading.enumerate() if t.name.startswith("crawl-write")]
     assert not alive
     assert eng.read_manifest()["round"] == 0
     monkeypatch.undo()
 
     resumed = CrawlEngine(spark, CFG, ckpt)
     assert resumed.run(resume=True)["pending"] == 0
-    oracle = run_oracle(CFG.site, CFG.robots, CFG.round_window_s, CFG.max_retries)
+    oracle = run_oracle(CFG.site, CFG.robots, CFG.round_window_s, MAX_RETRIES)
     st = resumed.final_state()
     order = [r.url for r in st["visit_log"].orderBy("visit_seq").select("url").collect()]
     assert order == oracle.visit_order

@@ -4,11 +4,7 @@ whole point of the operator at 100 TB."""
 
 import pyspark.sql.functions as F
 
-from vbpl_web_crawl_spark.operators.layout import (
-    zorder_key,
-    zorder_repartition,
-    zorder_sql,
-)
+from vbpl_web_crawl_spark.operators.layout import zorder_key, zorder_sql
 
 
 def _morton_ref(a: int, b: int) -> int:
@@ -58,7 +54,9 @@ def test_zorder_layout_prunes_on_either_dimension(spark):
         )
         return boxes.filter((F.col("mx") >= lo) & (F.col("mn") < hi)).count()
 
-    z16 = zorder_repartition(grid, "a", "b", 16)
+    # the clustering write: range-partition on the key, sort within
+    z = zorder_key(F.col("a"), F.col("b"))
+    z16 = grid.repartitionByRange(16, z).sortWithinPartitions(z)
     a16 = grid.repartitionByRange(16, F.col("a")).sortWithinPartitions("a")
 
     # predicate on b: the 1-D a-layout cannot prune at all
@@ -69,12 +67,3 @@ def test_zorder_layout_prunes_on_either_dimension(spark):
     assert touched(z16, "b", 0, 16) <= 6
     # and the a dimension still prunes too (not a b-only sort)
     assert touched(z16, "a", 0, 16) <= 6
-
-
-def test_zorder_repartition_preserves_rows(spark):
-    grid = spark.range(10_000).select(
-        (F.col("id") % 100).alias("a"), (F.col("id") / 100).cast("long").alias("b")
-    )
-    out = zorder_repartition(grid, "a", "b", 8)
-    assert out.count() == 10_000
-    assert out.columns == ["a", "b"]  # helper column dropped

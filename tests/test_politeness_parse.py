@@ -3,7 +3,7 @@ and the one politeness-budget formula every budget reader shares."""
 
 import pytest
 
-from vbpl_web_crawl_spark.crawl.engine import CrawlConfig, CrawlEngine
+from vbpl_web_crawl_spark.crawl.engine import MAX_RETRIES, CrawlConfig, CrawlEngine
 from vbpl_web_crawl_spark.crawl.oracle import run_oracle
 from vbpl_web_crawl_spark.crawl.politeness import (
     DEFAULT_CRAWL_DELAY,
@@ -99,7 +99,7 @@ def test_zero_crawl_delay_builds_the_engine_and_crawls_like_the_oracle(spark, tm
     budgets = {r.host: r.budget for r in eng.budgets.collect()}
     assert budgets[SITE.HOST_MAIN] == host_budget(delay, 60.0) == 2**31 - 1
     eng.run(resume=False)
-    oracle = run_oracle(cfg.site, cfg.robots, cfg.round_window_s, cfg.max_retries)
+    oracle = run_oracle(cfg.site, cfg.robots, cfg.round_window_s, MAX_RETRIES)
     st = eng.final_state()
     order = [r.url for r in st["visit_log"].orderBy("visit_seq").select("url").collect()]
     assert order == oracle.visit_order

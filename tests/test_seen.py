@@ -88,8 +88,8 @@ def test_filter_unseen_probes_base_plus_pending(spark):
 
 
 def test_delete_then_filter_readmits(spark):
-    """The engine's retry requeue: an exact anti-join delete re-admits
-    the key; the Bloom filter still says maybe-seen, and the exact table
+    """A key the Bloom filter holds but the exact table does not is
+    admitted: the filter still says maybe-seen, and the exact table
     overrides it."""
     seen = _hashes(spark, [10, 11])
     sketches = SEEN.add_to_seen(seen, SEEN.empty_sketches(spark, N_PARTS, 1 << 12), N_PARTS)

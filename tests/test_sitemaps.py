@@ -101,7 +101,7 @@ def test_sitemap_seeded_crawl_matches_oracle(spark, tmp_path):
     the single-threaded oracle — visit order and seen set must be
     identical. Seeds are a PARTIAL universe (one doc class only), so
     this exercises a crawl the default full-seed tests never run."""
-    from vbpl_web_crawl_spark.crawl.engine import CrawlConfig, CrawlEngine
+    from vbpl_web_crawl_spark.crawl.engine import MAX_RETRIES, CrawlConfig, CrawlEngine
     from vbpl_web_crawl_spark.crawl.oracle import run_oracle
     from vbpl_web_crawl_spark.sources import synth_site as SITE
 
@@ -134,7 +134,7 @@ def test_sitemap_seeded_crawl_matches_oracle(spark, tmp_path):
     eng.run(resume=False)
     state = eng.final_state()
     oracle = run_oracle(
-        site, cfg.robots, cfg.round_window_s, cfg.max_retries, seed_list=seeds
+        site, cfg.robots, cfg.round_window_s, MAX_RETRIES, seed_list=seeds
     )
     engine_order = [
         r.url for r in state["visit_log"].orderBy("visit_seq").select("url").collect()

@@ -93,24 +93,6 @@ def test_state_bytes_bounded_by_new_urls_not_duplicate_volume():
     assert len(st.get[0]) == size_after_fresh + 8
 
 
-def test_dedup_bucket_sizing_rule():
-    """dedup_buckets_for keeps per-blob entries near the target as the
-    corpus grows: blobs stay ~constant, bucket count carries the scale."""
-    from vbpl_web_crawl_spark.streaming.stateful import (
-        TARGET_BLOB_ENTRIES,
-        dedup_buckets_for,
-    )
-
-    prev = 0
-    for n in (10**4, 10**6, 10**8, 10**10):
-        b = dedup_buckets_for(n)
-        assert b >= prev
-        prev = b
-        assert n / b <= TARGET_BLOB_ENTRIES  # per-blob bound holds
-        assert b & (b - 1) == 0  # power of two
-    assert dedup_buckets_for(10**10) == 1 << 20
-
-
 def test_first_seen_matches_batch_distinct(spark, tmp_path):
     src = str(tmp_path / "src2")
     os.makedirs(src, exist_ok=True)

@@ -13,20 +13,21 @@ Each round = one deterministic BSP superstep:
   3. FETCH     — mapInPandas over host-salted partitions; the synthetic
                  site function replaces the network (tests/FIXTURES §2);
                  attachments materialize image+caption rows.
-  4. RETRY     — failed rows: exact DELETE of their hash (their Bloom
-                 bits stay set and send them to the exact check), then
-                 re-admission through the normal unseen gate with their
-                 original discovery_seq (reference backoff semantics,
-                 /root/reference/app/service/anle.py:37-57).
-  5. EXPAND    — extracted links: canonicalize -> in-round dedup (first
-                 discovery wins) -> robots filter -> Bloom-prefiltered
-                 anti-join vs seen -> assign discovery_seq in canonical
-                 order -> union into next round's frontier.
+  4. RETRY     — failed rows below MAX_RETRIES go straight into the
+                 next frontier with their original discovery_seq and
+                 retry_count + 1 (reference backoff semantics,
+                 app/service/anle.py:37-57). Their hashes stay in the
+                 seen set: it only grows.
+  5. EXPAND    — extracted links: canonicalize -> robots filter ->
+                 in-round dedup (first discovery wins) -> Bloom-
+                 prefiltered anti-join vs seen -> assign discovery_seq
+                 in canonical order -> union into next round's frontier.
   6. CHECKPOINT— write all state tables under round=K dir, then flip the
                  manifest pointer (atomic resume point). The logs derived
                  from the fetch alone (visit_log, documents, doc_lines)
                  are submitted right after step 3 and written while
-                 steps 4-5 run; the commit waits for them.
+                 steps 4-5 run; the commit waits for them. All of a
+                 round's writes share the one pool run() owns.
 
 Determinism: no wall clock anywhere in the dataflow (metrics record
 real elapsed time but never feed back into scheduling), so a killed and
@@ -50,6 +51,7 @@ import time
 from collections.abc import Iterator
 from concurrent.futures import Future, ThreadPoolExecutor
 from dataclasses import dataclass, field
+from typing import ClassVar
 
 import pandas as pd
 from pyspark import inheritable_thread_target
@@ -128,6 +130,10 @@ LOG_SCHEMAS = {
 }
 
 DOC_TYPE_RANK = SITE.DOC_TYPE_RANK
+MAX_RETRIES = 3  # app/service/anle.py:37
+# a round's writes: 3 fetch logs + up to 3 live tables + 2 deltas, so
+# none of them waits for a thread
+WRITE_THREADS = 8
 
 
 @dataclass
@@ -135,7 +141,8 @@ class CrawlConfig:
     site: SITE.SiteConfig = field(default_factory=SITE.SiteConfig)
     robots: dict = field(default_factory=lambda: dict(SITE.ROBOTS))
     round_window_s: float = 60.0
-    max_retries: int = 3  # app/service/anle.py:37
+    # not an option: perfbench/crawl.py reads cfg.max_retries for its oracle
+    max_retries: ClassVar[int] = MAX_RETRIES
     max_rounds: int = 1000
     n_seen_partitions: int = 8
     per_host_slots: int = 8  # hot-host salt fan-out (reference: 8 threads)
@@ -196,10 +203,6 @@ class CrawlEngine:
         # (politeness cost) vs engine work — artifact-vs-artifact bench
         # comparisons stop being confounded by the pacing config/window
         self._sleep_acc = spark.sparkContext.accumulator(0.0)
-        # the round's fetch-log writes, submitted before the expand phase
-        # and drained before the manifest commit (_drain_early_writes)
-        self._early_pool: ThreadPoolExecutor | None = None
-        self._early_writes: list[Future] = []
 
     # ---------------- state I/O ----------------
     #
@@ -248,23 +251,11 @@ class CrawlEngine:
         # execution id never leaks into another
         return pool.submit(inheritable_thread_target(self.spark)(fn), *args)
 
-    def _submit_early_writes(self, rnd: int, deltas: dict[str, DataFrame]) -> None:
-        self._early_pool = ThreadPoolExecutor(
-            max_workers=len(deltas), thread_name_prefix="crawl-early-write"
-        )
-        self._early_writes = [
-            self._submit(self._early_pool, self._write, df, self._log_dir(name, rnd))
+    def _write_logs(self, pool: ThreadPoolExecutor, rnd: int, deltas: dict) -> list[Future]:
+        return [
+            self._submit(pool, self._write, df, self._log_dir(name, rnd))
             for name, df in deltas.items()
         ]
-
-    def _drain_early_writes(self) -> list[Future]:
-        """Wait for the early writes and join their threads; returns the
-        futures so the caller can re-raise a failed write."""
-        if self._early_pool is not None:
-            self._early_pool.shutdown(wait=True)
-        self._early_pool = None
-        futs, self._early_writes = self._early_writes, []
-        return futs
 
     def _write_state(
         self,
@@ -272,7 +263,11 @@ class CrawlEngine:
         live: dict[str, DataFrame],
         deltas: dict[str, DataFrame],
         counters: dict,
+        pool: ThreadPoolExecutor,
+        writes: list[Future],
     ) -> None:
+        """Write the round's tables and commit it. ``writes`` holds the
+        round's writes already in flight on ``pool``."""
         rdir = self._live_dir(rnd)
         tmp = rdir + ".tmp"
         fsio.delete(self.spark, tmp)
@@ -280,29 +275,24 @@ class CrawlEngine:
         # concurrently (Spark schedules jobs from multiple threads); the
         # wall cost per round is max(write) instead of sum(write)
         t_ckpt = time.time()
-        # ONE pool, one barrier: delta writes overlap the live writes
-        # (they land in independent per-round dirs; the manifest commit
-        # below is the only visibility point, so a crash mid-write still
-        # leaves readers on the previous round either way). The live
-        # rename waits only on the live futures; the commit also waits on
-        # the fetch-log writes _run_round submitted before its expand
-        # phase. Every write job keeps the caller's job group (_submit).
-        n_jobs = len(live) + len(deltas)
-        with ThreadPoolExecutor(max_workers=max(n_jobs, 1)) as pool:
-            live_futs = [
-                self._submit(pool, self._write, df, os.path.join(tmp, name))
-                for name, df in live.items()
-            ]
-            delta_futs = [
-                self._submit(pool, self._write, df, self._log_dir(name, rnd))
-                for name, df in deltas.items()
-            ]
-            for fut in live_futs:
-                fut.result()
-            fsio.delete(self.spark, rdir)  # stale dir from a crashed attempt
-            fsio.rename(self.spark, tmp, rdir)
-            for fut in delta_futs + self._drain_early_writes():
-                fut.result()
+        # one barrier: delta writes overlap the live writes (they land in
+        # independent per-round dirs; the manifest commit below is the
+        # only visibility point, so a crash mid-write still leaves
+        # readers on the previous round either way). The live rename
+        # waits only on the live futures; the commit waits on all of the
+        # round's writes. Every write job keeps the caller's job group
+        # (_submit).
+        live_futs = [
+            self._submit(pool, self._write, df, os.path.join(tmp, name))
+            for name, df in live.items()
+        ]
+        writes = writes + self._write_logs(pool, rnd, deltas)
+        for fut in live_futs:
+            fut.result()
+        fsio.delete(self.spark, rdir)  # stale dir from a crashed attempt
+        fsio.rename(self.spark, tmp, rdir)
+        for fut in writes:
+            fut.result()
         decomp = counters.get("decomp")
         if decomp is not None:
             # close out the round's wall decomposition before the commit
@@ -374,18 +364,25 @@ class CrawlEngine:
         deduplicated; callers needing unique rows dropDuplicates.
 
         Why the enqueue_log alone is the seen set at every commit:
-        - A round's enqueue_log delta is ``admitted_final`` with
-          ``retry_count == 0``, i.e. exactly its new admits (round 0: the
-          seeds). The other admitted rows are retries.
+        - A round's enqueue_log delta is exactly its new admits (round 0:
+          the seeds). Retries skip the unseen gate and are not logged.
         - A retry is a row fetched this round, so its hash was admitted,
-          and logged, in an earlier round.
-        - The in-round delete of a failed hash only touches the in-memory
-          seen set handed to ``filter_unseen``. Every failed row below the
-          retry cap is re-admitted in the same round: retries win the
-          in-round dedup and pass the exact gate, since their hash was
-          just deleted. So no hash leaves the seen set across a commit.
+          and logged, in an earlier round: it is in the seen set, which
+          only grows.
         Hence persisted seen = ∪ enqueue_log hashes up to the commit,
         and compaction folds this same union into seen_base.
+
+        Why retries need no gate, though crawl/oracle.py (like the
+        reference) deletes a failed URL from the seen set and re-admits
+        it through the unseen check:
+        - There every retry passes the check, since its hash was just
+          deleted; here every retry is admitted without it.
+        - There a link to a retry's URL loses the in-round dedup to the
+          retry; here its hash, in the seen set, fails the gate.
+        - For any other hash h, h ∈ seen − failed ⇔ h ∈ seen, so every
+          other link gets the same answer.
+        - (seen − failed) ∪ admitted, the seen set after such a round, is
+          seen ∪ new admits, which compaction folds.
 
         The sketches (read_sketches) are stored the same way: written at
         compaction, the deltas since folded in by each probe. Bloom OR
@@ -577,42 +574,46 @@ class CrawlEngine:
             # first commit, so wiping is safe there too.
             if fsio.exists(self.spark, self.ckpt_dir):
                 fsio.delete(self.spark, self.ckpt_dir)
-            # persisted: the seed frontier has three consumers below (the
-            # live write, the delta write, the count) and its lineage
-            # re-derives the synthetic seed list each time — measured 26s
-            # -> ~12s on the bench-shape replay's pre-round wall. No sketch
-            # work: the seeds are enqueue_log r=0, like any other admit.
-            frontier = self.seed_frontier().persist()
-            live = {"frontier": frontier}
-            deltas = {
-                "enqueue_log": frontier.select("url", "url_hash", F.lit(0).alias("round")),
-            }
-            n_seeds = frontier.count()
-            counters = {
-                "next_seq": n_seeds,
-                "total_visits": 0,
-                "pending": n_seeds,
-                "seen_base_round": -1,
-                "n_seen_partitions": self.cfg.n_seen_partitions,
-            }
-            self._write_state(0, live, deltas, counters)
-            frontier.unpersist()
-            manifest = {"round": 0, **counters}
-
-        rnd = manifest["round"]
-        try:
+        # every round's writes run here; a round that raises may still
+        # have writes in flight, and leaving the block joins them, so no
+        # writer outlives run() and races a resumed run writing the same
+        # r=K dirs (their errors yield to the raise)
+        with ThreadPoolExecutor(WRITE_THREADS, thread_name_prefix="crawl-write") as pool:
+            if manifest is None:
+                manifest = self._seed_round(pool)
+            rnd = manifest["round"]
             while rnd < self.cfg.max_rounds and manifest.get("pending", 1) > 0:
                 frontier = self._read_frontier(rnd)
                 rnd += 1
-                manifest = self._run_round(rnd, frontier, manifest)
-        finally:
-            # a round that raised may still have fetch-log writes in
-            # flight; no writer may outlive run() and race a resumed run
-            # writing the same r=K dirs (their errors yield to the raise)
-            self._drain_early_writes()
+                manifest = self._run_round(pool, rnd, frontier, manifest)
         return manifest
 
-    def _run_round(self, rnd: int, frontier: DataFrame, manifest: dict) -> dict:
+    def _seed_round(self, pool: ThreadPoolExecutor) -> dict:
+        # persisted: the seed frontier has three consumers below (the
+        # live write, the delta write, the count) and its lineage
+        # re-derives the synthetic seed list each time — measured 26s
+        # -> ~12s on the bench-shape replay's pre-round wall. No sketch
+        # work: the seeds are enqueue_log r=0, like any other admit.
+        frontier = self.seed_frontier().persist()
+        live = {"frontier": frontier}
+        deltas = {
+            "enqueue_log": frontier.select("url", "url_hash", F.lit(0).alias("round")),
+        }
+        n_seeds = frontier.count()
+        counters = {
+            "next_seq": n_seeds,
+            "total_visits": 0,
+            "pending": n_seeds,
+            "seen_base_round": -1,
+            "n_seen_partitions": self.cfg.n_seen_partitions,
+        }
+        self._write_state(0, live, deltas, counters, pool, [])
+        frontier.unpersist()
+        return {"round": 0, **counters}
+
+    def _run_round(
+        self, pool: ThreadPoolExecutor, rnd: int, frontier: DataFrame, manifest: dict
+    ) -> dict:
         t0 = time.time()
         sleep0 = self._sleep_acc.value
         decomp: dict = {"_t0": t0}
@@ -667,13 +668,9 @@ class CrawlEngine:
         # 3. FETCH
         t_fetch = time.time()
         fetched = self._fetch(scheduled).persist()
+        is_retry = (F.col("status") >= 500) & (F.col("retry_count") < MAX_RETRIES)
         stats = fetched.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(
-                (
-                    (F.col("status") >= 500) & (F.col("retry_count") < cfg.max_retries)
-                ).cast("long")
-            ).alias("n_failed"),
+            F.count(F.lit(1)).alias("n"), F.sum(is_retry.cast("long")).alias("n_failed")
         ).collect()[0]
         n_scheduled, n_failed = stats["n"], stats["n_failed"] or 0
         # schedule + sequence + fetch all materialize in this first
@@ -713,37 +710,21 @@ class CrawlEngine:
             )
         )
         # these three logs depend on the fetch alone: write them while the
-        # latency-bound expand phase runs (the commit drains them)
-        self._submit_early_writes(
-            rnd, {"visit_log": visit_rows, "documents": new_docs, "doc_lines": doc_lines}
+        # latency-bound expand phase runs (the commit waits for them)
+        writes = self._write_logs(
+            pool, rnd, {"visit_log": visit_rows, "documents": new_docs, "doc_lines": doc_lines}
         )
 
-        # 4. RETRY — delete failed hashes from the exact table so the
-        # re-admission gate passes (their Bloom bits stay set, so the
-        # probe sends them to the exact check, which now admits them)
-        failed = fetched.filter(
-            (F.col("status") >= 500) & (F.col("retry_count") < cfg.max_retries)
+        # 4. RETRY — failed rows go straight into the next frontier; their
+        # hashes stay in the seen set (read_seen says why that is exact)
+        retries = (
+            fetched.filter(is_retry)
+            .withColumn("retry_count", F.col("retry_count") + 1)
+            .select(FRONTIER_SCHEMA.names)
         )
         base_round = manifest.get("seen_base_round", -1)
         seen_urls = self.read_seen(rnd - 1, base_round)
         sketches, pending = self.read_sketches(rnd - 1, base_round)
-        if n_failed > 0:
-            seen_urls = seen_urls.join(
-                failed.select("url_hash"), "url_hash", "left_anti"
-            )
-        retry_candidates = failed.select(
-            "url",
-            "url_hash",
-            "host",
-            "depth",
-            "doc_type",
-            "doc_type_rank",
-            F.col("discovery_seq"),
-            (F.col("retry_count") + 1).alias("retry_count"),
-            F.lit(0).alias("is_new"),
-            F.lit(None).cast("long").alias("parent_visit_seq"),
-            F.lit(None).cast("int").alias("in_page_pos"),
-        )
 
         # 5. EXPAND — links in canonical discovery order. Doc-map hrefs
         # resolve inline (J7): ItemID -> direct doc URL, title-only ->
@@ -772,26 +753,23 @@ class CrawlEngine:
             .filter(~F.coalesce(P.is_disallowed(F.col("url"), F.col("disallow")), F.lit(False)))
             .withColumn("doc_type_rank", self._rank_col(F.col("doc_type")))
             .withColumn("retry_count", F.lit(0))
-            .withColumn("is_new", F.lit(1))
-            .withColumn("discovery_seq", F.lit(None).cast("long"))
-            .select([c for c in retry_candidates.columns])
+            .select(
+                "url", "url_hash", "host", "depth", "doc_type", "doc_type_rank",
+                "retry_count", "parent_visit_seq", "in_page_pos",
+            )
         )
-
-        candidates = retry_candidates.unionByName(links)
-        # in-round dedup: retries first, then earliest discovery wins
-        dedup_w = Window.partitionBy("url_hash").orderBy(
-            "is_new", F.coalesce(F.col("parent_visit_seq"), F.lit(-1)),
-            F.coalesce(F.col("in_page_pos"), F.lit(-1)),
-        )
-        candidates = (
-            candidates.withColumn("dup_rank", F.row_number().over(dedup_w))
+        # in-round dedup: the earliest discovery wins. A link to a retry's
+        # URL needs no step of its own: the retry's hash is in the seen set
+        dedup_w = Window.partitionBy("url_hash").orderBy("parent_visit_seq", "in_page_pos")
+        links = (
+            links.withColumn("dup_rank", F.row_number().over(dedup_w))
             .filter(F.col("dup_rank") == 1)
             .drop("dup_rank")
         )
 
-        # Bloom-prefiltered anti-join vs seen (retries pass: just deleted)
+        # Bloom-prefiltered anti-join vs seen
         admitted = SEEN.filter_unseen(
-            candidates, seen_urls, sketches, cfg.n_seen_partitions, pending=pending, caches=caches
+            links, seen_urls, sketches, cfg.n_seen_partitions, pending=pending, caches=caches
         ).persist()
         caches.append(admitted)
 
@@ -801,11 +779,7 @@ class CrawlEngine:
         # instead of paying a range shuffle + a second count job (the
         # large parallel path kicks in unchanged past the threshold)
         t_expand = time.time()
-        astats = admitted.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum((F.col("is_new") == 1).cast("long")).alias("n_new"),
-        ).collect()[0]
-        n_admitted, n_new = astats["n"], astats["n_new"] or 0
+        n_new = admitted.count()
         decomp["expand_wall_ms"] = int((time.time() - t_expand) * 1000)
 
         # assign discovery_seq to new links in canonical order — this is
@@ -813,24 +787,19 @@ class CrawlEngine:
         # the parallel sequencer (never a global window) once n_new
         # exceeds the sequencer's small-input threshold
         new_admits = SEQ.global_sequence(
-            admitted.filter(F.col("is_new") == 1).drop("discovery_seq"),
+            admitted,
             ["parent_visit_seq", "in_page_pos", "url"],
             seq_col="discovery_seq",
             start=next_seq,
             approx_rows=n_new,
             caches=caches,
         )
-        retry_admits = admitted.filter(F.col("is_new") == 0)
-        admitted_final = new_admits.unionByName(retry_admits).select(
-            [f.name for f in FRONTIER_SCHEMA.fields]
-        ).persist()
+        admitted_final = new_admits.select(FRONTIER_SCHEMA.names).unionByName(retries).persist()
 
         # the round's seen delta is its new admits (read_seen says why)
         enqueued = admitted_final.filter(F.col("retry_count") == 0)
 
-        new_frontier = deferred.select([f.name for f in FRONTIER_SCHEMA.fields]).unionByName(
-            admitted_final
-        )
+        new_frontier = deferred.select(FRONTIER_SCHEMA.names).unionByName(admitted_final)
 
         # per-partition lineage + fetch metrics (north_rule): which task
         # fetched what, per host, per round
@@ -865,7 +834,7 @@ class CrawlEngine:
         counters = {
             "next_seq": next_seq + n_new,
             "total_visits": total_visits + n_scheduled,
-            "pending": manifest.get("pending", n_scheduled) - n_scheduled + n_admitted,
+            "pending": manifest.get("pending", n_scheduled) - n_scheduled + n_new + n_failed,
             "seen_base_round": rnd if compact else base_round,
             "n_seen_partitions": cfg.n_seen_partitions,
             "decomp": decomp,
@@ -879,12 +848,12 @@ class CrawlEngine:
             # fold base ∪ deltas ∪ this round's admits into a fresh base:
             # the only O(total seen) write, amortized over K rounds
             live["seen_base"] = seen_urls.unionByName(
-                admitted_final.select("url_hash")
+                enqueued.select("url_hash")
             ).dropDuplicates(["url_hash"])
             # and its sketches: the old base's + every hash logged since
             delta = pending.unionByName(enqueued.select("url_hash"))
             live["sketches"] = SEEN.add_to_seen(delta, sketches, cfg.n_seen_partitions)
-        self._write_state(rnd, live, deltas, counters)
+        self._write_state(rnd, live, deltas, counters, pool, writes)
         fetched.unpersist()
         admitted_final.unpersist()
         # drop this round's intermediate caches (filter_unseen's flagged

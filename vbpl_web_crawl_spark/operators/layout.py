@@ -1,16 +1,15 @@
-"""Data-layout operators for scan pruning at scale: Z-order (Morton)
-clustering.
+"""Data-layout operator for scan pruning at scale: the Z-order (Morton)
+clustering key.
 
 At 100 TB the dominant cost is the scan; min/max-based skipping
 (parquet row groups, Iceberg file stats) only prunes on the column the
 data is SORTED by. Z-ordering interleaves the bits of several columns
 so a range predicate on ANY of them maps to a bounded set of z-ranges
 — the layout trick Delta/Iceberg OPTIMIZE ZORDER applies. Here it is a
-pure Catalyst expression (`zorder_key`) plus `zorder_repartition`
-(range-partition + intra-partition sort by the z-key, i.e. exactly
-what a clustering write does), so the optimizer sees ordinary longs
-and the writer produces files whose per-file (a, b) bounding boxes are
-compact squares instead of full-width stripes.
+pure Catalyst expression (`zorder_key`), so the optimizer sees ordinary
+longs; a clustering write range-partitions and sorts by it, and its
+files' per-file (a, b) bounding boxes are compact squares instead of
+full-width stripes.
 
 The bit-spreading uses the classic magic-mask doubling network —
 shift/or/and only, so the SAME arithmetic runs in DuckDB for the
@@ -19,7 +18,7 @@ oracle (`zorder_sql`).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # (shift, mask) doubling network spreading 16 bits to even positions
@@ -56,19 +55,3 @@ def zorder_sql(a: str, b: str) -> str:
 
     return f"({spread(a)} | ({spread(b)} << 1))"
 
-
-def zorder_repartition(
-    df: DataFrame, a: str, b: str, num_partitions: int
-) -> DataFrame:
-    """Cluster rows by z-key: range-partition on the key (equal-ish
-    z-ranges per output file) and sort within partitions — the write
-    layout OPTIMIZE ZORDER produces. Each output partition covers a
-    compact square-ish region of (a, b) space, so min/max file stats
-    prune on either column."""
-    z = zorder_key(F.col(a).cast("long"), F.col(b).cast("long")).alias("__z")
-    return (
-        df.select("*", z)
-        .repartitionByRange(num_partitions, F.col("__z"))
-        .sortWithinPartitions("__z")
-        .drop("__z")
-    )

@@ -48,9 +48,8 @@ RE_RULE = r"^_{3,}\s*$"
 NAME_OVERFLOW = 400  # app/service/vbpl.py:334-336
 
 
-def _w(order_desc: bool = False):
-    w = Window.partitionBy("doc_id")
-    return w.orderBy(F.desc("line_no") if order_desc else F.asc("line_no"))
+def _w():
+    return Window.partitionBy("doc_id").orderBy(F.asc("line_no"))
 
 
 def _carry(w, marker_flag, value_col):

@@ -19,12 +19,12 @@ The reference probes MySQL per row before every insert
    final seen set stays exactly equal to the reference's.
 2. ``add_to_seen`` (alias ``apply_sketch_delta``): a groupBy over the
    same sketch side that reserializes the folded bytes. Nothing is ever
-   removed from a sketch: a retry is re-admitted by deleting its hash
-   from the exact table, and its Bloom positive then passes the exact
-   check. The sketch side, ``(partition_id, bloom_bytes, url_hash)``, is
-   each partition's Bloom row plus one row per pending hash (null
-   ``bloom_bytes``): sketches written only now and then are probed as
-   base + pending, folded by ``_load``.
+   removed from a sketch or from the exact table: the seen set only
+   grows, and the crawl engine requeues retries without passing them
+   through ``filter_unseen``. The sketch side, ``(partition_id,
+   bloom_bytes, url_hash)``, is each partition's Bloom row plus one row
+   per pending hash (null ``bloom_bytes``): sketches written only now and
+   then are probed as base + pending, folded by ``_load``.
 
 Partitioning: partition_id = pmod(url_hash, n_partitions). Only this
 module derives it; callers pass ``url_hash`` and the partition count.

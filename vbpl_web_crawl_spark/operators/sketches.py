@@ -11,12 +11,10 @@ False positives are harmless for correctness (exact join confirms);
 false negatives cannot happen in a Bloom filter, so the final seen set
 is exactly equal to the reference's (SURVEY.md §7 step 4).
 
-Retry re-admission is the exact seen-table delete, so no deletable
-sketch is needed: a failed URL's hash is removed from the exact seen
-table, and since every Bloom positive is verified by that table's
-anti-join, the key's stale Bloom bits only route it to the exact check,
-which admits it (the reference's retry semantics,
-app/service/anle.py:37-57).
+No deletable sketch is needed: the seen set only grows. A failed URL
+goes back into the frontier without passing the unseen gate (the
+reference's retry semantics, app/service/anle.py:37-57), so its hash
+stays in both the filter and the exact table.
 
 All membership/insert paths take numpy int64 arrays — one call per
 Arrow batch, no per-row Python.

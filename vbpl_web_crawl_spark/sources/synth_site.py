@@ -8,7 +8,7 @@ Shape mirrors /root/reference/:
 - per-doc detail with related-doc edges   (app/service/vbpl.py:654-704)
 - image attachments (the scan binaries)   (app/service/get_pdf.py:24-74)
 - deterministic fault injection: a subset of doc URLs times out on the
-  first attempt to exercise retry + seen-delete requeue
+  first attempt to exercise the retry requeue
   (app/service/anle.py:37-57)
 - robots.txt per host with crawl-delay and disallow prefixes (absent in
   reference; required by north_rule)

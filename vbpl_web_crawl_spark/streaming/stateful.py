@@ -14,9 +14,9 @@ State format: one binary blob per bucket = sorted int64 hashes
 linear in DISTINCT hashes — no sketch can cut that without wrongly
 dropping fresh URLs — so the operator bounds what it can:
 
-* per-key blob size: key the state by ``dedup_buckets_for(n)`` buckets
-  so each blob stays near TARGET_BLOB_ENTRIES hashes (~128 KiB) at the
-  expected corpus size — per-trigger (de)serialization cost is constant
+* per-key blob size: the state is keyed by ``n_buckets`` hash buckets,
+  so a blob holds about 1/n_buckets of the distinct hashes; with
+  n_buckets sized to the corpus, per-trigger (de)serialization cost is
   per key, never corpus-sized;
 * rewrite volume: ``state.update`` is called ONLY when a batch admits
   new hashes — duplicate-heavy triggers (the common steady state of a
@@ -24,7 +24,7 @@ dropping fresh URLs — so the operator bounds what it can:
   duplicate volume (asserted in tests/test_streaming_stateful.py).
 
 With Spark's RocksDB state store the per-key blobs become point lookups
-and the same sizing rule keys its SST layout.
+and the same bucket keying sets its SST layout.
 """
 
 from __future__ import annotations
@@ -48,18 +48,6 @@ OUT_SCHEMA = T.StructType(
 )
 
 STATE_SCHEMA = T.StructType([T.StructField("seen_blob", T.BinaryType(), True)])
-
-TARGET_BLOB_ENTRIES = 1 << 14  # ~16k hashes = 128 KiB per state blob
-
-
-def dedup_buckets_for(n_urls_expected: int, target_entries: int = TARGET_BLOB_ENTRIES) -> int:
-    """Bucket count keeping each per-key state blob near ``target_entries``
-    hashes at the expected corpus size (power of two for cheap pmod
-    distribution): 10^10 URLs -> 2^20 buckets of ~10k hashes each."""
-    import math
-
-    need = max(n_urls_expected, 1) / max(target_entries, 1)
-    return max(8, 1 << math.ceil(math.log2(max(need, 1.0))))
 
 
 def _dedup_fn(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
