@@ -11,13 +11,15 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 def test_dropdup_swallows_planted_duplicates(spark):
+    from vbpl_web_crawl_spark.streaming import drain
     from vbpl_web_crawl_spark.streaming.dropdup import (
+        dropdup_stream,
         stage_events_with_planted_dups,
-        streaming_dropdup,
     )
+    from vbpl_web_crawl_spark.streaming.joins import read_events
 
     src = stage_events_with_planted_dups(spark, SF_DIR)
-    out = streaming_dropdup(spark, src, f"dropdup_t_{os.getpid()}")
+    out = drain(dropdup_stream(read_events(spark, src)), f"dropdup_t_{os.getpid()}")
     orig = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
     assert out.count() == orig.count()
     # row-for-row equality (duplicates are byte-identical, so whichever
@@ -34,9 +36,10 @@ def test_dropdup_plan_is_stateful_within_watermark(spark):
         dropdup_stream,
         stage_events_with_planted_dups,
     )
+    from vbpl_web_crawl_spark.streaming.joins import read_events
 
     src = stage_events_with_planted_dups(spark, SF_DIR)
-    stream = dropdup_stream(spark, src)
+    stream = dropdup_stream(read_events(spark, src))
     assert stream.isStreaming
     plan = stream._jdf.queryExecution().analyzed().toString()
     assert "DeduplicateWithinWatermark" in plan

@@ -1,16 +1,37 @@
 """Stream-stream watermarked interval join (streaming/joins.py): the
 AvailableNow replay must equal the batch inner join, the physical plan
 must be StreamingSymmetricHashJoin (stateful, watermark-pruned — not a
-stateless or broadcast fallback), and the time bound must actually
-constrain matches."""
+stateless or broadcast fallback) for both join types, and the time
+bound must actually constrain matches."""
 
 import pyspark.sql.functions as F
+import pytest
 
+from vbpl_web_crawl_spark.streaming import drain
 from vbpl_web_crawl_spark.streaming.joins import (
-    purchase_view_join_stream,
+    purchase_view_join,
+    read_events,
     stage_events_dir,
-    streaming_purchase_view_pairs,
 )
+
+
+def _state_operators(stream, name):
+    """Run ``stream`` to completion and return the state operators its
+    last micro-batch reported."""
+    q = (
+        stream.writeStream.format("memory")
+        .queryName(name)
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return [
+        op
+        for prog in [q.lastProgress]
+        if prog
+        for op in prog.get("stateOperators", [])
+    ]
 
 
 def _batch_pairs(spark, sf_dir):
@@ -35,37 +56,23 @@ def _batch_pairs(spark, sf_dir):
 
 def test_stream_join_equals_batch(spark):
     sf_dir = "/root/testdata/sf0.001"
-    src = stage_events_dir(sf_dir)
-    got = streaming_purchase_view_pairs(spark, src, "sj_eq_test")
+    events = read_events(spark, stage_events_dir(sf_dir))
+    got = drain(purchase_view_join(events, "inner"), "sj_eq_test")
     want = _batch_pairs(spark, sf_dir)
     g = sorted((r.purchase_id, r.view_id) for r in got.collect())
     w = sorted((r.purchase_id, r.view_id) for r in want.collect())
     assert g == w and len(g) > 0
 
 
-def test_stream_join_plan_is_symmetric_hash(spark):
+@pytest.mark.parametrize("how", ["inner", "leftOuter"])
+def test_stream_join_plan_is_symmetric_hash(spark, how):
     """The streaming plan must keep per-side keyed state — a silent
     fallback to a stateless join would pass replay equality but break
     on an unbounded feed."""
-    src = stage_events_dir("/root/testdata/sf0.001")
-    stream = purchase_view_join_stream(spark, src)
-    # streaming frames can't explain() pre-start; check the analyzed
-    # plan carries the join + watermarks, then the started query's
-    # lastProgress for the state store operator
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("sj_plan_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    ops = [
-        op
-        for prog in [q.lastProgress]
-        if prog
-        for op in prog.get("stateOperators", [])
-    ]
+    events = read_events(spark, stage_events_dir("/root/testdata/sf0.001"))
+    # streaming frames can't explain() pre-start; check the started
+    # query's lastProgress for the state store operator
+    ops = _state_operators(purchase_view_join(events, how), f"sj_plan_{how}_test")
     assert any(
         op.get("operatorName") == "symmetricHashJoin" for op in ops
     ), f"expected symmetricHashJoin state operator, got {ops}"
@@ -88,7 +95,7 @@ def test_interval_bound_constrains_matches(spark, tmp_path):
     ).withColumn("ts", F.col("ts").cast("timestamp"))
     src = str(tmp_path / "evsrc")
     df.coalesce(1).write.parquet(src)
-    got = streaming_purchase_view_pairs(spark, src, "sj_bound_test")
+    got = drain(purchase_view_join(read_events(spark, src), "inner"), "sj_bound_test")
     assert sorted(r.view_id for r in got.collect()) == [2, 3]
 
 
@@ -97,14 +104,16 @@ def test_left_outer_join_emits_unmatched_via_eviction(spark):
     null-padded purchases with no in-window view, which only emit when
     the sentinel-advanced watermark evicts their state."""
     from vbpl_web_crawl_spark.streaming.joins import (
+        SENTINEL_USER,
         stage_events_with_sentinels,
-        streaming_purchase_view_left_pairs,
     )
 
     sf_dir = "/root/testdata/sf0.001"
-    src = stage_events_with_sentinels(sf_dir)
-    got = streaming_purchase_view_left_pairs(spark, src, "sj_left_test")
-    g = got.toPandas()
+    events = read_events(
+        spark, stage_events_with_sentinels(sf_dir), maxFilesPerTrigger=1
+    )
+    got = drain(purchase_view_join(events, "leftOuter"), "sj_left_test")
+    g = got.filter(F.col("user_id") != SENTINEL_USER).toPandas()
     assert (g["user_id"] >= 0).all()  # sentinels filtered
     n_null = int(g["view_id"].isna().sum())
     assert n_null > 0, "no unmatched purchase emitted -> eviction never ran"
@@ -135,15 +144,12 @@ def test_stream_static_enrich_equals_batch_and_is_stateless(spark):
     """Stream-static enrichment must equal the batch join exactly and
     must run with NO stateful operator (no state store involved)."""
     from vbpl_web_crawl_spark.sources.tables import load_table
-    from vbpl_web_crawl_spark.streaming.joins import (
-        stage_events_dir,
-        streaming_enriched_events,
-    )
+    from vbpl_web_crawl_spark.streaming.joins import enriched_events
 
     sf_dir = "/root/testdata/sf0.001"
-    src = stage_events_dir(sf_dir)
+    events = read_events(spark, stage_events_dir(sf_dir))
     customer = load_table(spark, sf_dir, "customer")
-    got = streaming_enriched_events(spark, src, customer, "sj_enrich_test")
+    got = drain(enriched_events(events, customer), "sj_enrich_test")
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     dim = customer.select(
         F.col("c_custkey").alias("user_id"),
@@ -161,21 +167,9 @@ def test_stream_static_enrich_no_state_operator(spark):
     """The finished query's progress must report zero state operators —
     a stateful plan here would mean the dim join grew a state store."""
     from vbpl_web_crawl_spark.sources.tables import load_table
-    from vbpl_web_crawl_spark.streaming.joins import (
-        enriched_event_stream,
-        stage_events_dir,
-    )
+    from vbpl_web_crawl_spark.streaming.joins import enriched_events
 
-    src = stage_events_dir("/root/testdata/sf0.001")
+    events = read_events(spark, stage_events_dir("/root/testdata/sf0.001"))
     customer = load_table(spark, "/root/testdata/sf0.001", "customer")
-    stream = enriched_event_stream(spark, src, customer)
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("sj_enrich_state_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    ops = (q.lastProgress or {}).get("stateOperators", [])
+    ops = _state_operators(enriched_events(events, customer), "sj_enrich_state_test")
     assert ops == [] or all(not op for op in ops), f"unexpected state: {ops}"

@@ -58,13 +58,15 @@ def test_dropdup_identical_under_rocksdb(spark, rocksdb_state):
     """dropDuplicatesWithinWatermark under RocksDB == the original
     snapshot row-for-row (same contract the default-provider test
     pins)."""
+    from vbpl_web_crawl_spark.streaming import drain
     from vbpl_web_crawl_spark.streaming.dropdup import (
+        dropdup_stream,
         stage_events_with_planted_dups,
-        streaming_dropdup,
     )
+    from vbpl_web_crawl_spark.streaming.joins import read_events
 
     src = stage_events_with_planted_dups(spark, SF_DIR)
-    out = streaming_dropdup(spark, src, f"dropdup_rocks_{os.getpid()}")
+    out = drain(dropdup_stream(read_events(spark, src)), f"dropdup_rocks_{os.getpid()}")
     orig = spark.read.parquet(os.path.join(SF_DIR, "events.parquet"))
     assert out.count() == orig.count()
     cols = ["event_id", "user_id", "event_type", "value"]

@@ -153,7 +153,8 @@ def pagerank(
     and only the O(nodes) rank table reshuffles; in-mass aggregation
     is a map-side-combining groupBy on dst; ranks are
     localCheckpoint'ed per iteration so the plan stays flat (same
-    pattern as connected_components above). Overflow headroom:
+    pattern as connected_components above; ``_out_edges`` and
+    ``_walk``, shared with ``personalized_pagerank``). Overflow headroom:
     damp_pct * total_mass must fit int64 — 10^10 nodes at mass 10^6
     is 8.5e17 < 2^63.
 
@@ -161,8 +162,20 @@ def pagerank(
     prioritization (/root/reference/app/service/vbpl.py crawl loop);
     link-authority ranking is the standard frontier-prioritization
     upgrade at web scale."""
-    spark = edges.sparkSession
-    par = spark.sparkContext.defaultParallelism
+    ej, nodes = _out_edges(edges, src, dst)
+    tele = nodes.select("node", F.lit((100 - damp_pct) * mass // 100).alias("t"))
+    start = nodes.select("node", F.lit(mass).cast("long").alias("rank"))
+    ranks = _walk(ej, tele, start, n_iter, damp_pct)
+    ej.unpersist()
+    nodes.unpersist()
+    return ranks
+
+
+def _out_edges(edges: DataFrame, src: str, dst: str) -> tuple[DataFrame, DataFrame]:
+    """The (src, dst, outdeg) edge table, hash-partitioned and sorted by
+    src, and its (node) set of sources; both persisted for the caller
+    to release."""
+    par = edges.sparkSession.sparkContext.defaultParallelism
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
     ej = (
@@ -174,26 +187,31 @@ def pagerank(
         .persist()
     )
     nodes = ej.select(F.col("src").alias("node")).distinct().persist()
-    base = (100 - damp_pct) * mass // 100
-    ranks = nodes.select("node", F.lit(mass).cast("long").alias("rank"))
-    prev = None
+    return ej, nodes
+
+
+def _walk(
+    ej: DataFrame, tele: DataFrame, ranks: DataFrame, n_iter: int, damp_pct: int
+) -> DataFrame:
+    """``n_iter`` integer power iterations from ``ranks`` (node, rank):
+    rank'(v) = t(v) + d% * Σ_{u->v} rank(u) DIV outdeg(u), with the
+    teleport term t from ``tele`` (node, t). Each round's ranks are
+    localCheckpoint'ed, so the plan stays flat."""
     for _ in range(n_iter):
         contrib = ej.join(ranks, ej.src == ranks.node).select(
             F.col("dst").alias("node"), F.expr("rank DIV outdeg").alias("c")
         )
         in_mass = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = nodes.join(in_mass, "node", "left").select(
-            "node",
-            (
-                F.lit(base)
-                + F.expr(f"({damp_pct} * coalesce(s, 0)) DIV 100")
-            ).alias("rank"),
-        ).localCheckpoint(eager=True)
-        if prev is not None:
-            prev.unpersist()
-        prev = ranks
-    ej.unpersist()
-    nodes.unpersist()
+        ranks = (
+            tele.join(in_mass, "node", "left")
+            .select(
+                "node",
+                (
+                    F.col("t") + F.expr(f"({damp_pct} * coalesce(s, 0)) DIV 100")
+                ).alias("rank"),
+            )
+            .localCheckpoint(eager=True)
+        )
     return ranks
 
 
@@ -382,57 +400,25 @@ def personalized_pagerank(
     pagerank's per-node 1e6) because all mass starts on few seeds and
     thins geometrically with walk depth. Seeds must be graph nodes.
 
-    Scale design: identical to ``pagerank`` — edge+outdeg table
-    partitioned by src once and persisted, O(nodes) rank table per
-    round, localCheckpoint keeps the plan flat. n_seeds is the one
+    Scale design: ``pagerank``'s edge table and iteration loop
+    (``_out_edges``, ``_walk``) with the per-node teleport term; only
+    the start ranks and the teleport differ. n_seeds is the one
     driver scalar (seed sets are small by definition). Overflow:
     contributions are bounded by total, so damp_pct * total < 2^63
     holds trivially.
     """
-    spark = edges.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    ej = (
-        e.join(outdeg, "src")
-        .repartition(par, "src")
-        # sorted persist: per-iteration contribution join re-sorts only
-        # the rank table (see sssp below)
-        .sortWithinPartitions("src")
-        .persist()
-    )
-    nodes = ej.select(F.col("src").alias("node")).distinct().persist()
-    n_seeds = seeds.select(F.col(seeds.columns[0]).alias("node")).distinct().count()
+    seed_nodes = seeds.select(F.col(seeds.columns[0]).alias("node"))
+    n_seeds = seed_nodes.distinct().count()
     if n_seeds == 0:
         raise ValueError("personalized_pagerank needs a non-empty seed set")
+    ej, nodes = _out_edges(edges, src, dst)
     tele = (100 - damp_pct) * total // (100 * n_seeds)
     base = (
-        nodes.join(
-            seeds.select(F.col(seeds.columns[0]).alias("node")).withColumn(
-                "t", F.lit(tele).cast("long")
-            ),
-            "node",
-            "left",
-        )
+        nodes.join(seed_nodes.withColumn("t", F.lit(tele).cast("long")), "node", "left")
         .select("node", F.coalesce("t", F.lit(0)).cast("long").alias("t"))
         .persist()
     )
-    ranks = base.select("node", F.col("t").alias("rank"))
-    for _ in range(n_iter):
-        contrib = ej.join(ranks, ej.src == ranks.node).select(
-            F.col("dst").alias("node"), F.expr("rank DIV outdeg").alias("c")
-        )
-        in_mass = contrib.groupBy("node").agg(F.sum("c").alias("s"))
-        ranks = (
-            base.join(in_mass, "node", "left")
-            .select(
-                "node",
-                (
-                    F.col("t") + F.expr(f"({damp_pct} * coalesce(s, 0)) DIV 100")
-                ).alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
+    ranks = _walk(ej, base, base.select("node", F.col("t").alias("rank")), n_iter, damp_pct)
     ej.unpersist()
     nodes.unpersist()
     base.unpersist()

@@ -171,6 +171,7 @@ def crawl_visit_oracle() -> str:
     in the distributed engine breaks row equality here."""
     if "crawl" in _CACHE:
         return _CACHE["crawl"]
+    from vbpl_web_crawl_spark.crawl.engine import MAX_RETRIES
     from vbpl_web_crawl_spark.crawl.oracle import run_oracle
     from vbpl_web_crawl_spark.sources import synth_site as SITE
 
@@ -178,7 +179,9 @@ def crawl_visit_oracle() -> str:
     site = SITE.SiteConfig(
         n_pages=1, docs_per_page=8, related_per_doc=1, max_attachments=1, fault_every=5
     )
-    res = run_oracle(site, dict(SITE.ROBOTS), round_window_s=120.0, max_retries=3)
+    res = run_oracle(
+        site, dict(SITE.ROBOTS), round_window_s=120.0, max_retries=MAX_RETRIES
+    )
     rows = [
         (
             v["visit_seq"],
@@ -319,13 +322,16 @@ def toan_van_oracle() -> str:
     single-threaded reference end to end."""
     if "toanvan" in _CACHE:
         return _CACHE["toanvan"]
+    from vbpl_web_crawl_spark.crawl.engine import MAX_RETRIES
     from vbpl_web_crawl_spark.crawl.oracle import run_oracle
     from vbpl_web_crawl_spark.sources import synth_site as SITE
 
     site = SITE.SiteConfig(
         n_pages=1, docs_per_page=8, related_per_doc=1, max_attachments=1, fault_every=5
     )
-    res = run_oracle(site, dict(SITE.ROBOTS), round_window_s=120.0, max_retries=3)
+    res = run_oracle(
+        site, dict(SITE.ROBOTS), round_window_s=120.0, max_retries=MAX_RETRIES
+    )
     doc_lines: dict[str, list[str]] = {}
     for v in res.visits:
         if v["status"] != 200:

@@ -870,19 +870,29 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot emits exactly the batch inner join, so a DuckDB self-join
     gates the streaming engine; the per-purchase rollup runs batch-side
     over the drained sink (bounded: one row per matched purchase)."""
+    from vbpl_web_crawl_spark.streaming.joins import read_events, stage_events_dir
+
+    events = read_events(spark, stage_events_dir(sf_dir))
+    pairs = _drained_join(events, "inner", "stream_join_gate")
+    return _views_per_purchase(pairs, F.count(F.lit(1)))
+
+
+def _drained_join(events: DataFrame, how: str, name: str) -> DataFrame:
+    """The purchase x view join of ``events`` (``how``: inner or
+    leftOuter) drained into a per-process memory sink."""
     import os
 
-    from vbpl_web_crawl_spark.streaming.joins import (
-        stage_events_dir,
-        streaming_purchase_view_pairs,
-    )
+    from vbpl_web_crawl_spark.streaming import drain
+    from vbpl_web_crawl_spark.streaming.joins import purchase_view_join
 
-    src = stage_events_dir(sf_dir)
-    pairs = streaming_purchase_view_pairs(
-        spark, src, f"stream_join_gate_{os.getpid()}"
-    )
+    return drain(purchase_view_join(events, how), f"{name}_{os.getpid()}")
+
+
+def _views_per_purchase(pairs: DataFrame, n_views) -> DataFrame:
+    """(purchase_id, n_views, first_view_id, last_view_id) over drained
+    (purchase_id, view_id) join rows; ``n_views`` is the count Column."""
     return pairs.groupBy("purchase_id").agg(
-        F.count(F.lit(1)).alias("n_views"),
+        n_views.alias("n_views"),
         F.min("view_id").alias("first_view_id"),
         F.max("view_id").alias("last_view_id"),
     )
@@ -914,15 +924,17 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from vbpl_web_crawl_spark.sources.tables import load_table
+    from vbpl_web_crawl_spark.streaming import drain
     from vbpl_web_crawl_spark.streaming.joins import (
+        enriched_events,
+        read_events,
         stage_events_dir,
-        streaming_enriched_events,
     )
 
-    src = stage_events_dir(sf_dir)
+    events = read_events(spark, stage_events_dir(sf_dir))
     customer = load_table(spark, sf_dir, "customer")
-    enriched = streaming_enriched_events(
-        spark, src, customer, f"stream_enrich_gate_{os.getpid()}"
+    enriched = drain(
+        enriched_events(events, customer), f"stream_enrich_gate_{os.getpid()}"
     )
     return enriched.groupBy("segment", "event_type").agg(
         F.count(F.lit(1)).alias("n_events"),
@@ -960,22 +972,21 @@ def q_streaming_outer_interval_join(spark: SparkSession, sf_dir: str) -> DataFra
     covered because all real rows land in batch 1). EVERY purchase
     appears in the rollup: n_views = 0 rows are the eviction-emitted
     ones."""
-    import os
-
     from vbpl_web_crawl_spark.streaming.joins import (
+        SENTINEL_USER,
+        read_events,
         stage_events_with_sentinels,
-        streaming_purchase_view_left_pairs,
     )
 
-    src = stage_events_with_sentinels(sf_dir)
-    pairs = streaming_purchase_view_left_pairs(
-        spark, src, f"stream_ljoin_gate_{os.getpid()}"
+    # one file per micro-batch: the sentinel files run after the data
+    events = read_events(
+        spark, stage_events_with_sentinels(sf_dir), maxFilesPerTrigger=1
     )
-    return pairs.groupBy("purchase_id").agg(
-        F.count("view_id").alias("n_views"),
-        F.min("view_id").alias("first_view_id"),
-        F.max("view_id").alias("last_view_id"),
+    pairs = _drained_join(events, "leftOuter", "stream_ljoin_gate").filter(
+        F.col("user_id") != SENTINEL_USER
     )
+    # count(view_id): a null-padded purchase counts 0 views
+    return _views_per_purchase(pairs, F.count("view_id"))
 
 
 @_register(

@@ -243,6 +243,134 @@ def capped_shingles(docs: DataFrame, k: int = 3, df_cap: int = NGRAM_DF_CAP) -> 
     return sh.join(ok, "shingle").select("doc_id", "shingle")
 
 
+# ---------------------------------------------------------------------------
+# Shingle-set similarity, shared by every (doc_id, shingle) pair leaf:
+# overlap counts -> set sizes -> score. ``a``/``b`` name the two doc-id
+# columns of a pair; sizes come as (doc_id, n_sh).
+# ---------------------------------------------------------------------------
+
+
+def _sides(sh: DataFrame, a: str, b: str):
+    return (sh.select(F.col("doc_id").alias(c), "shingle") for c in (a, b))
+
+
+def self_overlap(sh: DataFrame, keep) -> DataFrame:
+    """(doc_a, doc_b, n_common) over the full shingle self-join, for the
+    pairs the Column ``keep`` (on doc_a, doc_b) admits."""
+    sa, sb = _sides(sh, "doc_a", "doc_b")
+    return (
+        sa.join(sb, (sa.shingle == sb.shingle) & keep)
+        .groupBy("doc_a", "doc_b")
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+
+
+def pair_overlap(
+    sh: DataFrame, cand: DataFrame, a: str = "doc_a", b: str = "doc_b"
+) -> DataFrame:
+    """(a, b, n_common) for the candidate pairs ``cand`` (a, b) only: the
+    candidate-bounded verify join."""
+    sa, sb = _sides(sh, a, b)
+    return (
+        cand.join(sa, a)
+        .join(sb, [b, "shingle"])
+        .groupBy(a, b)
+        .agg(F.count(F.lit(1)).alias("n_common"))
+    )
+
+
+def with_sizes(
+    common: DataFrame, sizes: DataFrame, a: str = "doc_a", b: str = "doc_b"
+) -> DataFrame:
+    """``common`` with each side's set size as n_sh_a and n_sh_b."""
+    sa = sizes.select(F.col("doc_id").alias(a), F.col("n_sh").alias("n_sh_a"))
+    sb = sizes.select(F.col("doc_id").alias(b), F.col("n_sh").alias("n_sh_b"))
+    return common.join(sa, a).join(sb, b)
+
+
+def jaccard():
+    """|A ∩ B| / |A ∪ B| over the n_common, n_sh_a and n_sh_b columns."""
+    return F.col("n_common").cast("double") / (
+        F.col("n_sh_a") + F.col("n_sh_b") - F.col("n_common")
+    )
+
+
+def jaccard_pairs(
+    common: DataFrame, sizes: DataFrame, tau: float, a: str = "doc_a", b: str = "doc_b"
+) -> DataFrame:
+    """(a, b, jaccard) for the pairs of ``common`` with Jaccard >= tau,
+    rounded to 4 places."""
+    return (
+        with_sizes(common, sizes, a, b)
+        .filter(jaccard() >= tau)
+        .select(a, b, F.round(jaccard(), 4).alias("jaccard"))
+    )
+
+
+def minhash_signature(sh: DataFrame, component, k: int) -> DataFrame:
+    """(doc_id, n_sh, h0 .. h{k-1}): each doc's shingle-set size and, per
+    i, the min over its shingles of the Column ``component(i)``."""
+    return sh.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_sh"),
+        *[F.min(component(i)).alias(f"h{i}") for i in range(k)],
+    )
+
+
+def md5_component(i: int):
+    """Signature component i: md5(shingle || '|i') as hex, the same
+    string in DuckDB."""
+    return F.md5(F.concat(F.col("shingle"), F.lit(f"|{i}")))
+
+
+def xxhash_component(i: int):
+    """Signature component i: xxhash64(shingle, seed i), 8 bytes."""
+    return F.xxhash64(F.col("shingle"), F.lit(i))
+
+
+def md5_band(b: int):
+    """(band_id, band_key) of band b over two md5 components: 'band<b>'
+    and the two hex strings joined by '#', as the oracle unpivots them."""
+    return F.lit(f"band{b}"), F.concat(
+        F.col(f"h{2 * b}"), F.lit("#"), F.col(f"h{2 * b + 1}")
+    )
+
+
+def xxhash_band(b: int):
+    """(band_id, band_key) of band b over two integer components: the
+    band's two longs hashed back to one, so the band join shuffles
+    (int, long) keys only."""
+    return F.lit(b), F.xxhash64(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}"))
+
+
+def minhash_bands(sig: DataFrame, band, n_bands: int) -> DataFrame:
+    """(doc_id, band_id, band_key) per doc and band; ``band(b)`` gives
+    the band's (id, key) Columns over the signature's h columns."""
+    return sig.select(
+        "doc_id",
+        F.explode(
+            F.array(
+                *[
+                    F.struct(bid.alias("band_id"), key.alias("band_key"))
+                    for bid, key in map(band, range(n_bands))
+                ]
+            )
+        ).alias("band"),
+    ).select("doc_id", "band.band_id", "band.band_key")
+
+
+def band_candidates(bands: DataFrame) -> DataFrame:
+    """Distinct (doc_a, doc_b) with doc_a < doc_b that share a band
+    bucket: the LSH candidate self-join."""
+    a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
+    b = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
+    return (
+        a.join(b, ["band_id", "band_key"])
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .select("doc_a", "doc_b")
+        .distinct()
+    )
+
+
 @_register(
     "dedup_ngram_jaccard_pairs",
     f"""
@@ -263,27 +391,10 @@ WHERE CAST(c.n_common AS DOUBLE) / (sa.n_sh + sb.n_sh - c.n_common) >= 0.05
 """,
 )
 def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    sh = capped_shingles(docs)
+    sh = capped_shingles(load_table(spark, sf_dir, "documents"))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        a.join(b, (a.shingle == b.shingle) & (F.col("doc_a") < F.col("doc_b")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_sh_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_sh_b"))
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_sh_a") + F.col("n_sh_b") - F.col("n_common")
-    )
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= 0.05)
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-    )
+    common = self_overlap(sh, F.col("doc_a") < F.col("doc_b"))
+    return jaccard_pairs(common, sizes, 0.05)
 
 
 # ---------------------------------------------------------------------------
@@ -332,40 +443,27 @@ FROM bands a JOIN bands b
 """,
 )
 def q_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    sh = capped_shingles(docs)
+    sh = capped_shingles(load_table(spark, sf_dir, "documents"))
     # localCheckpoint: the signature table is consumed by BOTH sides of
     # the band self-join; materializing the tiny (doc_id, 8 hashes)
     # frame guarantees the shingle+md5 subtree runs once instead of
-    # relying on exchange reuse across the self-join branches
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"|{i}")))).alias(f"h{i}")
-            for i in range(_MINHASH_K)
-        ]
-    ).localCheckpoint(eager=False)
+    # relying on exchange reuse across the self-join branches (n_sh is
+    # not needed here, and the optimizer prunes its count)
+    sig = (
+        minhash_signature(sh, md5_component, _MINHASH_K)
+        .drop("n_sh")
+        .localCheckpoint(eager=False)
+    )
+    # a map explode, not minhash_bands' array of structs: the leaf's
+    # plan keeps its Generate over map_from_arrays
+    ids, keys = zip(*map(md5_band, range(_MINHASH_BANDS)))
     bands = sig.select(
         "doc_id",
-        F.explode(
-            F.map_from_arrays(
-                F.array(*[F.lit(f"band{b}") for b in range(_MINHASH_BANDS)]),
-                F.array(
-                    *[
-                        F.concat(F.col(f"h{2 * b}"), F.lit("#"), F.col(f"h{2 * b + 1}"))
-                        for b in range(_MINHASH_BANDS)
-                    ]
-                ),
-            )
-        ).alias("band_id", "band_key"),
+        F.explode(F.map_from_arrays(F.array(*ids), F.array(*keys))).alias(
+            "band_id", "band_key"
+        ),
     )
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
-    return (
-        a.join(b, ["band_id", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    return band_candidates(bands)
 
 
 # ---------------------------------------------------------------------------
@@ -418,62 +516,15 @@ def q_minhash_verified(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = capped_shingles(docs).localCheckpoint(eager=False)
     # integer signature: min over shingles of xxhash64(shingle, seed_i);
     # the shingle-set size rides along in the same aggregation so the
-    # verify step below needs no second shingle pass for sizes
-    sig = sh.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_sh"),
-        *[
-            F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}")
-            for i in range(_MINHASH_K_INT)
-        ],
-    ).localCheckpoint(eager=False)  # feeds bands AND sizes: one
-    # 16-hash signature pass instead of two
-    # band key: hash the band's two signature longs back to one long —
-    # the band join shuffles (long, long) keys only
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.xxhash64(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}")).alias(
-                            "band_key"
-                        ),
-                    )
-                    for b in range(_MINHASH_BANDS_INT)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
-    cand = (
-        a.join(b, ["band_id", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
+    # verify step below needs no second shingle pass for sizes. It
+    # feeds bands AND sizes: one 16-hash signature pass instead of two
+    sig = minhash_signature(sh, xxhash_component, _MINHASH_K_INT).localCheckpoint(
+        eager=False
     )
+    cand = band_candidates(minhash_bands(sig, xxhash_band, _MINHASH_BANDS_INT))
     # exact-Jaccard verify, restricted to candidates (bucket-bounded):
-    sizes = sig.select("doc_id", "n_sh")
-    sh_a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sh_b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_sh_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_sh_b"))
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_sh_a") + F.col("n_sh_b") - F.col("n_common")
-    )
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= _MINHASH_VERIFY_TAU)
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-    )
+    common = pair_overlap(sh, cand)
+    return jaccard_pairs(common, sig.select("doc_id", "n_sh"), _MINHASH_VERIFY_TAU)
 
 
 # ---------------------------------------------------------------------------
@@ -700,6 +751,22 @@ _SIMHASH_BITS = 16
 _TOK_INT_SQL = "CAST(('0x' || substr(md5(tok), 1, 8)) AS BIGINT)"
 
 
+def simhash_tallies(docs: DataFrame, hex_chars: int, bits: int) -> DataFrame:
+    """(doc_id, t0 .. t{bits-1}): per bit j, the doc's distinct word
+    tokens vote +1 where bit j of their md5 prefix (``hex_chars`` hex
+    digits as an integer) is set and -1 where it is not."""
+    toks = docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok")).distinct()
+    tok_int = F.conv(F.substring(F.md5(F.col("tok")), 1, hex_chars), 16, 10).cast("long")
+    return toks.groupBy("doc_id").agg(
+        *[
+            F.sum(
+                F.when(F.shiftright(tok_int, j).bitwiseAND(1) == 1, F.lit(1)).otherwise(F.lit(-1))
+            ).alias(f"t{j}")
+            for j in range(bits)
+        ]
+    )
+
+
 @_register(
     "fingerprint_simhash",
     f"""
@@ -722,16 +789,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = spread(
         load_table(spark, sf_dir, "documents").select("doc_id", "text"), "doc_id"
     )
-    toks = docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok")).distinct()
-    tok_int = F.conv(F.substring(F.md5(F.col("tok")), 1, 8), 16, 10).cast("long")
-    tallies = toks.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(tok_int, j).bitwiseAND(1) == 1, F.lit(1)).otherwise(F.lit(-1))
-            ).alias(f"t{j}")
-            for j in range(_SIMHASH_BITS)
-        ]
-    )
+    tallies = simhash_tallies(docs, 8, _SIMHASH_BITS)
     simhash = None
     for j in range(_SIMHASH_BITS):
         term = F.when(F.col(f"t{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
@@ -871,16 +929,9 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def simhash60(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash) with a 60-bit simhash over distinct word tokens
     (bit source: first 15 hex chars of md5(token), identical in DuckDB)."""
-    toks = docs.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok")).distinct()
-    tok_int = F.conv(F.substring(F.md5(F.col("tok")), 1, 15), 16, 10).cast("long")
-    tallies = toks.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright(tok_int, j).bitwiseAND(1) == 1, F.lit(1)).otherwise(F.lit(-1))
-            ).alias(f"t{j}")
-            for j in range(_SIMHASH_BITS_ND)
-        ]
-    )
+    tallies = simhash_tallies(docs, 15, _SIMHASH_BITS_ND)
+    # each term is cast to long before the sum (60 bits overflow an
+    # int); q_simhash's 16-bit sum is cast once at the end
     simhash = None
     for j in range(_SIMHASH_BITS_ND):
         term = F.when(F.col(f"t{j}") > 0, F.lit(1 << j).cast("long")).otherwise(
@@ -1664,10 +1715,17 @@ def q_dedup_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = QUERIES["dedup_connected_components"](spark, sf_dir).select(
         F.col("doc_id"), F.col("cluster_id")
     )
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    j = docs.join(cc, "doc_id", "left")
-    return j.groupBy("lang").agg(
-        F.count(F.lit(1)).alias("n_docs"),
+    return keep_one_tally(load_table(spark, sf_dir, "documents"), cc, "lang", "n_docs")
+
+
+def keep_one_tally(docs: DataFrame, cc: DataFrame, by: str, n_name: str) -> DataFrame:
+    """Per ``by`` value of ``docs``: the doc count (as ``n_name``), the
+    docs inside a cluster of ``cc`` (doc_id, cluster_id), and the ones a
+    keep-one pass drops (every member but the cluster_id
+    representative)."""
+    j = docs.select("doc_id", by).join(cc, "doc_id", "left")
+    return j.groupBy(by).agg(
+        F.count(F.lit(1)).alias(n_name),
         F.count("cluster_id").alias("n_in_clusters"),
         F.sum(
             F.when(
@@ -2127,21 +2185,25 @@ LIMIT 20
     )
 
 
-@_register("pagerank_supply_graph", _pagerank_oracle())
-def q_pagerank_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-20 nodes by integer-exact PageRank over the undirected
-    part<->supplier multigraph from lineitem (node id = 2*partkey for
-    parts, 2*suppkey+1 for suppliers; parallel edges contribute once
-    each, exactly as in the oracle's UNION ALL)."""
-    from vbpl_web_crawl_spark.operators.graph import pagerank
-
+def part_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst) of the undirected part<->supplier multigraph from
+    lineitem: node id 2*partkey for parts, 2*suppkey+1 for suppliers,
+    one edge per lineitem row in each direction (the ranking oracles'
+    UNION ALL; the BFS and label-propagation operators dedupe edges
+    themselves)."""
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     fwd = li.select(
         (2 * F.col("l_partkey")).alias("src"),
         (2 * F.col("l_suppkey") + 1).alias("dst"),
     )
-    edges = fwd.unionByName(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    ranks = pagerank(edges, n_iter=PAGERANK_ITERS, mass=PAGERANK_MASS)
+    return fwd.unionByName(
+        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+
+
+def top_ranked(ranks: DataFrame) -> DataFrame:
+    """The 20 (node_id, node_type, rank) rows of highest rank, ties to
+    the smaller node id, over part_supplier_edges' node ids."""
     return (
         ranks.select(
             F.col("node").alias("node_id"),
@@ -2151,6 +2213,17 @@ def q_pagerank_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.col("rank").desc(), F.col("node_id").asc())
         .limit(20)
     )
+
+
+@_register("pagerank_supply_graph", _pagerank_oracle())
+def q_pagerank_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 nodes by integer-exact PageRank over the undirected
+    part<->supplier multigraph from lineitem (parallel edges contribute
+    once each, exactly as in the oracle's UNION ALL)."""
+    from vbpl_web_crawl_spark.operators.graph import pagerank
+
+    edges = part_supplier_edges(spark, sf_dir)
+    return top_ranked(pagerank(edges, n_iter=PAGERANK_ITERS, mass=PAGERANK_MASS))
 
 
 # ---------------------------------------------------------------------------

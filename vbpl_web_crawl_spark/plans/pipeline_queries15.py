@@ -59,7 +59,16 @@ from vbpl_web_crawl_spark.plans.pipeline_queries import (
     _MINHASH_K,
     _MINHASH_SIG_SQL,
     _BAND_KEYS_SQL,
+    band_candidates,
     capped_shingles,
+    jaccard,
+    md5_band,
+    md5_component,
+    minhash_bands,
+    minhash_signature,
+    pair_overlap,
+    self_overlap,
+    with_sizes,
 )
 from vbpl_web_crawl_spark.plans.queries import _register
 from vbpl_web_crawl_spark.sources.tables import load_table
@@ -97,19 +106,10 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # three consumers (sizes + both join sides): materialize once
     sh = capped_shingles(docs).localCheckpoint(eager=True)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        a.join(b, (a.shingle == b.shingle) & (F.col("doc_a") != F.col("doc_b")))
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_sh_a"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_sh_b"))
+    common = self_overlap(sh, F.col("doc_a") != F.col("doc_b"))
     cont = F.col("n_common").cast("double") / F.col("n_sh_a")
     return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        with_sizes(common, sizes)
         .filter(cont >= _CONTAIN_TAU)
         .select(
             "doc_a",
@@ -192,46 +192,15 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     # composition's executed plan had 20 parquet scans), and blocks
     # release with the DataFrame (q_winnow_pairs' round-4 pattern)
     sh = capped_shingles(docs).localCheckpoint(eager=True)
-    sig = sh.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_sh"),
-        *[
-            F.min(F.md5(F.concat(F.col("shingle"), F.lit(f"|{i}")))).alias(f"h{i}")
-            for i in range(_MINHASH_K)
-        ],
-    ).localCheckpoint(eager=True)
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(f"band{b}").alias("band_id"),
-                        F.concat(
-                            F.col(f"h{2 * b}"), F.lit("#"), F.col(f"h{2 * b + 1}")
-                        ).alias("band_key"),
-                    )
-                    for b in range(_MINHASH_BANDS)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
-    a = bands.select(F.col("doc_id").alias("doc_a"), "band_id", "band_key")
-    b = bands.select(F.col("doc_id").alias("doc_b"), "band_id", "band_key")
-    cand = (
-        a.join(b, ["band_id", "band_key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
-    sig_a = sig.select(
-        F.col("doc_id").alias("doc_a"),
-        F.col("n_sh").alias("n_sh_a"),
-        *[F.col(f"h{i}").alias(f"ha{i}") for i in range(_MINHASH_K)],
-    )
-    sig_b = sig.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("n_sh").alias("n_sh_b"),
-        *[F.col(f"h{i}").alias(f"hb{i}") for i in range(_MINHASH_K)],
+    sig = minhash_signature(sh, md5_component, _MINHASH_K).localCheckpoint(eager=True)
+    cand = band_candidates(minhash_bands(sig, md5_band, _MINHASH_BANDS))
+    sig_a, sig_b = (
+        sig.select(
+            F.col("doc_id").alias(f"doc_{s}"),
+            F.col("n_sh").alias(f"n_sh_{s}"),
+            *[F.col(f"h{i}").alias(f"h{s}{i}") for i in range(_MINHASH_K)],
+        )
+        for s in "ab"
     )
     n_match = sum(
         F.when(F.col(f"ha{i}") == F.col(f"hb{i}"), 1).otherwise(0)
@@ -248,20 +217,8 @@ def q_minhash_estimate_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             (n_match / F.lit(float(_MINHASH_K))).alias("j_est"),
         )
     )
-    sh_a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
-    sh_b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
-    common = (
-        est.select("doc_a", "doc_b")
-        .join(sh_a, "doc_a")
-        .join(sh_b, ["doc_b", "shingle"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    j_exact = F.coalesce(
-        F.col("n_common").cast("double")
-        / (F.col("n_sh_a") + F.col("n_sh_b") - F.col("n_common")),
-        F.lit(0.0),
-    )
+    common = pair_overlap(sh, est.select("doc_a", "doc_b"))
+    j_exact = F.coalesce(jaccard(), F.lit(0.0))
     scored = est.join(common, ["doc_a", "doc_b"], "left").select(
         "j_est", j_exact.alias("j_exact")
     )

@@ -590,21 +590,8 @@ def q_phash_keep_one(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = connected_components(pairs, src="image_a", dst="image_b").select(
         F.col("node").alias("doc_id"), "cluster_id"
     )
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    j = docs.join(cc, "doc_id", "left")
-    return j.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_images"),
-        F.count("cluster_id").alias("n_in_clusters"),
-        F.sum(
-            F.when(
-                F.col("cluster_id").isNotNull()
-                & (F.col("doc_id") != F.col("cluster_id")),
-                1,
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("n_dropped"),
-    )
+    docs = load_table(spark, sf_dir, "documents")
+    return PQ.keep_one_tally(docs, cc, "source", "n_images")
 
 
 # ---------------------------------------------------------------------------

@@ -282,29 +282,10 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline from the raw scan (12 scans / 12 windows in the physical
     # plan). localCheckpoint once, same pattern as winnow_fingerprints.
     sh = PQ.capped_shingles(docs).localCheckpoint(eager=True)
-    sig = sh.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_sh"),
-        *[
-            F.min(F.xxhash64(F.col("shingle"), F.lit(i))).alias(f"h{i}")
-            for i in range(PQ._MINHASH_K_INT)
-        ],
+    sig = PQ.minhash_signature(
+        sh, PQ.xxhash_component, PQ._MINHASH_K_INT
     ).localCheckpoint(eager=True)  # reread by bands + both size sides
-    bands = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_id"),
-                        F.xxhash64(F.col(f"h{2 * b}"), F.col(f"h{2 * b + 1}")).alias(
-                            "band_key"
-                        ),
-                    )
-                    for b in range(PQ._MINHASH_BANDS_INT)
-                ]
-            )
-        ).alias("band"),
-    ).select("doc_id", "band.band_id", "band.band_key")
+    bands = PQ.minhash_bands(sig, PQ.xxhash_band, PQ._MINHASH_BANDS_INT)
     inc = bands.filter(F.col("doc_id") % 4 == 0).select(
         F.col("doc_id").alias("inc_id"), "band_id", "band_key"
     )
@@ -316,27 +297,10 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("inc_id", "corpus_id")
         .distinct()
     )
-    sh_a = sh.select(F.col("doc_id").alias("inc_id"), "shingle")
-    sh_b = sh.select(F.col("doc_id").alias("corpus_id"), "shingle")
-    common = (
-        cand.join(sh_a, "inc_id")
-        .join(sh_b, ["corpus_id", "shingle"])
-        .groupBy("inc_id", "corpus_id")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    sizes = sig.select("doc_id", "n_sh")
-    sa = sizes.select(F.col("doc_id").alias("inc_id"), F.col("n_sh").alias("n_sh_a"))
-    sb = sizes.select(
-        F.col("doc_id").alias("corpus_id"), F.col("n_sh").alias("n_sh_b")
-    )
-    jac = F.col("n_common").cast("double") / (
-        F.col("n_sh_a") + F.col("n_sh_b") - F.col("n_common")
-    )
-    return (
-        common.join(sa, "inc_id")
-        .join(sb, "corpus_id")
-        .filter(jac >= PQ._MINHASH_VERIFY_TAU)
-        .select("inc_id", "corpus_id", F.round(jac, 4).alias("jaccard"))
+    common = PQ.pair_overlap(sh, cand, "inc_id", "corpus_id")
+    return PQ.jaccard_pairs(
+        common, sig.select("doc_id", "n_sh"), PQ._MINHASH_VERIFY_TAU,
+        "inc_id", "corpus_id",
     )
 
 

@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from vbpl_web_crawl_spark.plans import pipeline_queries as PQ
 from vbpl_web_crawl_spark.plans.queries import _register
 from vbpl_web_crawl_spark.sources.tables import load_table
 
@@ -36,6 +37,11 @@ from vbpl_web_crawl_spark.sources.tables import load_table
 
 _BFS_SEEDS = (3, 5, 7)  # suppliers 1..3 under the 2*s+1 encoding
 _BFS_DEPTH = 3
+
+
+def _seeds(spark: SparkSession) -> DataFrame:
+    """The seed suppliers as a (node) frame."""
+    return spark.createDataFrame([(s,) for s in _BFS_SEEDS], "node long")
 
 
 def _bfs_oracle() -> str:
@@ -89,25 +95,25 @@ def q_crawl_depth_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     visited-set anti-join is the exact form of the Bloom seen-set."""
     from vbpl_web_crawl_spark.operators.graph import bfs_layers
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    fwd = li.select(
-        (2 * F.col("l_partkey")).alias("src"),
-        (2 * F.col("l_suppkey") + 1).alias("dst"),
+    layers = bfs_layers(
+        PQ.part_supplier_edges(spark, sf_dir), _seeds(spark), max_depth=_BFS_DEPTH
     )
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    seeds = spark.createDataFrame([(s,) for s in _BFS_SEEDS], "node long")
-    layers = bfs_layers(edges, seeds, max_depth=_BFS_DEPTH)
+    return _node_summary(layers, "depth", "depth", "n_nodes")
+
+
+def _node_summary(nodes: DataFrame, key, name: str, n_name: str) -> DataFrame:
+    """Per value of the grouping ``key`` (named ``name``) over (node, ...)
+    rows, ordered by it: the node count (as ``n_name``), node-id sum,
+    min and max — membership, not just sizes."""
     return (
-        layers.groupBy("depth")
+        nodes.groupBy(key)
         .agg(
-            F.count(F.lit(1)).alias("n_nodes"),
+            F.count(F.lit(1)).alias(n_name),
             F.sum("node").cast("long").alias("sum_node"),
             F.min("node").alias("min_node"),
             F.max("node").alias("max_node"),
         )
-        .orderBy("depth")
+        .orderBy(name)
     )
 
 
@@ -471,29 +477,14 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL)."""
     from vbpl_web_crawl_spark.operators.graph import personalized_pagerank
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    fwd = li.select(
-        (2 * F.col("l_partkey")).alias("src"),
-        (2 * F.col("l_suppkey") + 1).alias("dst"),
-    )
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    seeds = spark.createDataFrame([(s,) for s in _BFS_SEEDS], "node long")
     ranks = personalized_pagerank(
-        edges, seeds, n_iter=_PPR_ITER, total=_PPR_TOTAL, damp_pct=_PPR_DAMP
+        PQ.part_supplier_edges(spark, sf_dir),
+        _seeds(spark),
+        n_iter=_PPR_ITER,
+        total=_PPR_TOTAL,
+        damp_pct=_PPR_DAMP,
     )
-    return (
-        ranks.select(
-            F.col("node").alias("node_id"),
-            F.when(F.col("node") % 2 == 0, "part")
-            .otherwise("supplier")
-            .alias("node_type"),
-            "rank",
-        )
-        .orderBy(F.col("rank").desc(), F.col("node_id").asc())
-        .limit(20)
-    )
+    return PQ.top_ranked(ranks)
 
 
 # ---------------------------------------------------------------------------
@@ -564,25 +555,10 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.py:label_propagation)."""
     from vbpl_web_crawl_spark.operators.graph import label_propagation
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    fwd = li.select(
-        (2 * F.col("l_partkey")).alias("src"),
-        (2 * F.col("l_suppkey") + 1).alias("dst"),
-    )
-    edges = fwd.unionByName(
-        fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    edges = PQ.part_supplier_edges(spark, sf_dir)
     labels = label_propagation(edges, n_iter=_LPA_ITER)
-    return (
-        labels.groupBy(F.col("label").alias("community"))
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.sum("node").cast("long").alias("sum_node"),
-            F.min("node").alias("min_node"),
-            F.max("node").alias("max_node"),
-        )
-        .orderBy("community")
-    )
+    community = F.col("label").alias("community")
+    return _node_summary(labels, community, "community", "n_members")
 
 
 # ---------------------------------------------------------------------------
@@ -615,13 +591,15 @@ def q_streaming_dropdup(spark: SparkSession, sf_dir: str) -> DataFrame:
     suppressed and every original kept (streaming/dropdup.py)."""
     import os
 
+    from vbpl_web_crawl_spark.streaming import drain
     from vbpl_web_crawl_spark.streaming.dropdup import (
+        dropdup_stream,
         stage_events_with_planted_dups,
-        streaming_dropdup,
     )
+    from vbpl_web_crawl_spark.streaming.joins import read_events
 
-    src = stage_events_with_planted_dups(spark, sf_dir)
-    deduped = streaming_dropdup(spark, src, f"dropdup_gate_{os.getpid()}")
+    events = read_events(spark, stage_events_with_planted_dups(spark, sf_dir))
+    deduped = drain(dropdup_stream(events), f"dropdup_gate_{os.getpid()}")
     return (
         deduped.groupBy("event_type")
         .agg(

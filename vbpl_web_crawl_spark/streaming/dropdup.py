@@ -28,40 +28,16 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from vbpl_web_crawl_spark.streaming.joins import EVENTS_SCHEMA, stage_events_dir
+from vbpl_web_crawl_spark.streaming.joins import stage_events_dir
 
 
-def dropdup_stream(
-    spark: SparkSession, src_dir: str, watermark_delay: str = "35 days"
-) -> DataFrame:
-    """Unstarted streaming frame: one row per event_id within the
-    watermark horizon (append-only; rows emit at first sight)."""
-    events = spark.readStream.schema(EVENTS_SCHEMA).parquet(src_dir)
+def dropdup_stream(events: DataFrame, watermark_delay: str = "35 days") -> DataFrame:
+    """Unstarted streaming frame: one row per event_id of ``events``
+    within the watermark horizon (append-only; rows emit at first
+    sight)."""
     return events.withWatermark("ts", watermark_delay).dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-
-
-def streaming_dropdup(
-    spark: SparkSession,
-    src_dir: str,
-    name: str,
-    watermark_delay: str = "35 days",
-) -> DataFrame:
-    """Drain the dedup stream with Trigger.AvailableNow into a memory
-    sink and return the deduplicated rows as a batch DataFrame."""
-    ckpt = tempfile.mkdtemp(prefix="dropdup_ckpt_")
-    q = (
-        dropdup_stream(spark, src_dir, watermark_delay)
-        .writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(ckpt, "wm"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
 
 
 def stage_events_with_planted_dups(

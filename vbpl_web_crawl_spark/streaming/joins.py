@@ -14,6 +14,11 @@ correlates newly fetched detail pages with the listing rows that
 discovered them (/root/reference/app/service/vbpl.py crawl loop);
 this operator is that correlation as a first-class streaming join.
 
+One builder, :func:`purchase_view_join`, makes both the inner and the
+left-outer join; the caller picks the join type and the events stream
+(the outer replay reads one file per micro-batch) and drains it with
+``streaming.drain``.
+
 Physical plan: StreamingSymmetricHashJoin — both sides shuffle on the
 equi-key (user_id) and each side's state is pruned by the watermark +
 interval bound; the plan-shape pytest asserts the node is present so a
@@ -62,15 +67,21 @@ def stage_events_dir(sf_dir: str) -> str:
     return d
 
 
-def purchase_view_join_stream(
-    spark: SparkSession,
-    src_dir: str,
-    watermark_delay: str = "35 days",
+def read_events(spark: SparkSession, src_dir: str, **options) -> DataFrame:
+    """The unstarted events stream over a staged source dir; ``options``
+    are file-source options (e.g. ``maxFilesPerTrigger``)."""
+    return spark.readStream.schema(EVENTS_SCHEMA).options(**options).parquet(src_dir)
+
+
+def purchase_view_join(
+    events: DataFrame, how: str, watermark_delay: str = "35 days"
 ) -> DataFrame:
-    """Build the unstarted streaming join (purchase x view per user
-    within WINDOW_HOURS). Returned frame is a streaming DataFrame of
-    (purchase_id, view_id, user_id) match rows, append-only."""
-    events = spark.readStream.schema(EVENTS_SCHEMA).parquet(src_dir)
+    """The unstarted stream-stream join of ``events``' purchases and
+    views per user within WINDOW_HOURS, as (purchase_id, view_id,
+    user_id) rows, append-only. ``how`` is ``"inner"`` (rows emit as
+    both sides meet) or ``"leftOuter"`` (every purchase emits; the
+    unmatched ones null-padded once the watermark passes ``p_ts +
+    window + delay``)."""
     purchases = (
         events.filter(F.col("event_type") == "purchase")
         .select(
@@ -94,26 +105,9 @@ def purchase_view_join_stream(
         & (F.col("v_ts") >= F.col("p_ts"))
         & (F.col("v_ts") <= F.col("p_ts") + F.expr(f"INTERVAL {WINDOW_HOURS} HOURS"))
     )
-    return purchases.join(views, cond, "inner").select(
+    return purchases.join(views, cond, how).select(
         "purchase_id", "view_id", F.col("p_user").alias("user_id")
     )
-
-
-def streaming_purchase_view_pairs(
-    spark: SparkSession, src_dir: str, query_name: str
-) -> DataFrame:
-    """Drain the stream-stream join to completion (AvailableNow) into a
-    memory sink and return the collected match table."""
-    out = purchase_view_join_stream(spark, src_dir)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
 
 
 # ---------------------------------------------------------------------------
@@ -125,15 +119,17 @@ def streaming_purchase_view_pairs(
 # so the replay must advance the watermark past the data: the staging
 # helper appends two far-future sentinel files (a dummy-user purchase
 # AND view — the global watermark is the MIN across both sides) and
-# the drain processes ONE FILE PER MICRO-BATCH so the sentinel batches
-# run after the data batch. Two sentinel batches because eviction uses
-# the watermark computed at the END of the previous batch — the first
-# sentinel advances it, the second gives the evictor a batch to run in.
-# All real rows land in batch 1, so no real row is ever late and the
-# oracle is the plain batch LEFT JOIN.
+# the replay reads ONE FILE PER MICRO-BATCH (the source option
+# maxFilesPerTrigger=1) so the sentinel batches run after the data
+# batch. Two sentinel batches because eviction uses the watermark
+# computed at the END of the previous batch — the first sentinel
+# advances it, the second gives the evictor a batch to run in. All
+# real rows land in batch 1, so no real row is ever late and the
+# oracle is the plain batch LEFT JOIN once the SENTINEL_USER rows are
+# filtered out of the drained sink.
 # ---------------------------------------------------------------------------
 
-_SENTINEL_USER = -1
+SENTINEL_USER = -1
 
 
 def stage_events_with_sentinels(sf_dir: str) -> str:
@@ -170,7 +166,7 @@ def stage_events_with_sentinels(sf_dir: str) -> str:
             COPY (
               SELECT CAST(-{j} AS BIGINT) AS event_id,
                      CAST('{far}' AS TIMESTAMP) + INTERVAL {j} HOUR AS ts,
-                     CAST({_SENTINEL_USER} AS BIGINT) AS user_id,
+                     CAST({SENTINEL_USER} AS BIGINT) AS user_id,
                      t.event_type,
                      CAST(0.0 AS DOUBLE) AS value,
                      CAST('' AS VARCHAR) AS props
@@ -182,67 +178,6 @@ def stage_events_with_sentinels(sf_dir: str) -> str:
             os.path.join(d, f"z-sentinel-{j}.parquet"), (now - 10 + j, now - 10 + j)
         )
     return d
-
-
-def purchase_view_left_join_stream(
-    spark: SparkSession,
-    src_dir: str,
-    watermark_delay: str = "35 days",
-) -> DataFrame:
-    """The left-outer twin of :func:`purchase_view_join_stream`:
-    every purchase emits — matched rows as they meet, unmatched ones
-    null-padded once the watermark passes ``p_ts + window + delay``.
-
-    ``maxFilesPerTrigger=1`` (a SOURCE option) is what sequences the
-    sentinel files into their own micro-batches under AvailableNow."""
-    events = (
-        spark.readStream.schema(EVENTS_SCHEMA)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    purchases = (
-        events.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("p_user"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", watermark_delay)
-    )
-    views = (
-        events.filter(F.col("event_type") == "view")
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("event_id").alias("view_id"),
-            F.col("ts").alias("v_ts"),
-        )
-        .withWatermark("v_ts", watermark_delay)
-    )
-    cond = (
-        (F.col("p_user") == F.col("v_user"))
-        & (F.col("v_ts") >= F.col("p_ts"))
-        & (F.col("v_ts") <= F.col("p_ts") + F.expr(f"INTERVAL {WINDOW_HOURS} HOURS"))
-    )
-    return purchases.join(views, cond, "leftOuter").select(
-        "purchase_id", "view_id", F.col("p_user").alias("user_id")
-    )
-
-
-def streaming_purchase_view_left_pairs(
-    spark: SparkSession, src_dir: str, query_name: str
-) -> DataFrame:
-    """Drain the left-outer join (one file per micro-batch, AvailableNow)
-    and return the match table with the sentinel rows filtered out."""
-    out = purchase_view_left_join_stream(spark, src_dir)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name).filter(F.col("user_id") != _SENTINEL_USER)
 
 
 # ---------------------------------------------------------------------------
@@ -260,12 +195,9 @@ def streaming_purchase_view_left_pairs(
 # ---------------------------------------------------------------------------
 
 
-def enriched_event_stream(
-    spark: SparkSession, src_dir: str, customer: DataFrame
-) -> DataFrame:
-    """Stream events joined to the static customer dim on
+def enriched_events(events: DataFrame, customer: DataFrame) -> DataFrame:
+    """Stream ``events`` joined to the static customer dim on
     user_id == c_custkey (broadcast — the stream side never shuffles)."""
-    events = spark.readStream.schema(EVENTS_SCHEMA).parquet(src_dir)
     dim = F.broadcast(
         customer.select(
             F.col("c_custkey").alias("user_id"),
@@ -275,20 +207,3 @@ def enriched_event_stream(
     return events.join(dim, "user_id", "inner").select(
         "event_id", "user_id", "event_type", "value", "segment"
     )
-
-
-def streaming_enriched_events(
-    spark: SparkSession, src_dir: str, customer: DataFrame, query_name: str
-) -> DataFrame:
-    """Drain the stream-static enrichment to completion (AvailableNow)
-    and return the enriched event table."""
-    out = enriched_event_stream(spark, src_dir, customer)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)

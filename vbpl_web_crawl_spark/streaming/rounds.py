@@ -16,6 +16,8 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from vbpl_web_crawl_spark.streaming import drain
+
 
 def windowed_event_agg(
     spark: SparkSession,
@@ -53,15 +55,4 @@ def windowed_event_agg(
             "total_value",
         )
     )
-    name = "streaming_windowed_agg"
-    ckpt = tempfile.mkdtemp(prefix="stream_ckpt_")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", os.path.join(ckpt, "wm"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(name)
+    return drain(agg, "streaming_windowed_agg", "complete")

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupStateTimeout
 
+from vbpl_web_crawl_spark.streaming import drain
+
 SRC_SCHEMA = (
     "user_id long, ts timestamp_ntz, event_id long, flush boolean"
 )
@@ -149,15 +151,7 @@ def streaming_sessionize(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return drain(out, query_name)
 
 
 def write_replay_with_sentinels(events: DataFrame, src_dir: str) -> None:

@@ -29,8 +29,6 @@ and the same bucket keying sets its SST layout.
 
 from __future__ import annotations
 
-import os
-import tempfile
 from collections.abc import Iterator
 
 import numpy as np
@@ -38,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from vbpl_web_crawl_spark.streaming import drain
 
 OUT_SCHEMA = T.StructType(
     [
@@ -103,14 +103,4 @@ def streaming_first_seen(
         "append",
         GroupStateTimeout.NoTimeout,
     )
-    ckpt = tempfile.mkdtemp(prefix="stateful_ckpt_")
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("append")
-        .option("checkpointLocation", os.path.join(ckpt, "s"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.table(query_name)
+    return drain(deduped, query_name)
